@@ -1,13 +1,14 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Benchmark harness and the one per-query timing path of the repo.
 
-Prints ONE JSON line:
+``python bench.py`` times the headline queries at $SPARK_GRAFT_SF_DIR
+(default DEFAULT_SF_DIR, the sf0.1 fixture, relaid out by tools/relayout.py) on
+local[$SPARK_GRAFT_CPUS] (default 32) and prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Each query is timed end-to-end (plan + execute) with a `noop`-style
-action (count of a cached-nothing plan would skip projection work, so
-we drain via write to the in-memory noop sink when available, else
-collect-limit on top of a full materialization barrier).
+The tools (qtime, abtime, coverage_timings, capture_plans, plan_audit,
+the relayout CLI) import the same path: ``fixture_dir`` and
+``open_session`` set up, ``time_query`` runs one untimed warm pass and
+then the timed noop-sink drains, ``summarize`` reduces the samples.
 """
 
 from __future__ import annotations
@@ -22,6 +23,8 @@ from pathlib import Path
 _REPO = str(Path(__file__).resolve().parent)
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
+
+DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 
 # FIXED COMPARISON CORE (r11, per the r10 verdict's ask #7): ~20
 # queries — the TPC-H block plus one per operator family — that appear
@@ -60,45 +63,18 @@ FIXED_CORE = [
     "curation_pipeline",  # composed multi-operator pipeline
 ]
 
-# headline set: FIXED_CORE first (never rotated), then one per
-# remaining operator family — the scale-path variants a user would
-# actually run at 100 TB (e.g. MinHash-LSH and SimHash for dedup; the
-# exact all-pairs n-gram Jaccard stays in the conformance suite as the
-# correctness baseline but is not a headline operator, precisely
-# because exact all-pairs is the thing LSH exists to avoid).
-# r10 trim: sixteen sub-second low-signal shapes left the set to make
-# room for the fourteen r10 operators while keeping the compact stdout
-# line under the driver's 2000-char tail capture; all dropped entries
-# remain oracle-verified in the conformance registry. r11: the tail
-# gains the PQ ADC search and the animated-GIF frame sampler.
+# HEADLINE: FIXED_CORE first (never rotated), then one scale-path entry
+# per remaining operator family — the variant a user would run at 100 TB
+# (MinHash-LSH, not the exact all-pairs n-gram Jaccard that stays in the
+# conformance suite as its correctness baseline). Entries with side
+# effects stay out (pq_store_lifecycle writes warehouse tables, which
+# the repeated runs should not time). Line-budget rule: the stdout line
+# must fit BENCHLINE_BUDGET, so sub-second tail entries rotate out when
+# new entries join; every rotated-out entry stays oracle-verified in the
+# conformance registry and gets a BENCHCOVERAGE.md row
+# (tools/coverage_timings.py ROTATED_OUT). The per-round rotation
+# history is in CHANGES.md.
 HEADLINE = FIXED_CORE + [
-    # r12 trim: agg_count_distinct left the rotating tail (sub-second
-    # Expand-rewrite shape, stays oracle-verified in the conformance
-    # registry) to keep the compact stdout line under the driver's
-    # 2000-char tail capture when sim_ivfpq_recall joined.
-    # r13 trim, same reason when the three r13 operators joined:
-    # text_stratified_sample (0.09 s hash-split shape),
-    # curate_source_cap (0.15 s per-key rank cap — curation_pipeline
-    # composes it in the fixed core), and dedup_incremental (0.24 s —
-    # dedup_incremental_fuzzy keeps the incremental-index family's
-    # slot); all three stay oracle-verified in the conformance
-    # registry. A late-r13 second trim for the same budget:
-    # ts_tumbling (0.16 s — the windowing family keeps
-    # ts_session_window / ts_range_join / ts_resample_interp /
-    # ts_twap slots), text_repetition (0.3 s — text_gopher_repetition
-    # carries the repetition family), and dedup_source_overlap
-    # (0.32 s — the dedup family keeps five other slots).
-    # r14 tail ROTATION (the r13 verdict's ask #8): instead of
-    # permanently dropping sub-second entries for the line budget,
-    # the sub-second tail now rotates per round (like the conformance
-    # window) so every entry gets periodic driver-side timing
-    # evidence. Out this round (all sub-second, each family keeps
-    # other slots, all stay oracle-verified): dedup_simhash,
-    # text_html_extract, text_url_filter, chunk_dedup, text_bm25,
-    # text_c4_rules, ts_range_join, text_sentence_span_dedup (c4_pipeline
-    # composes the sentence-span stage), text_ccnet_buckets (the
-    # bigram-LM family keeps text_bigram_logprob). Back in from the r12/r13 trims:
-    # text_stratified_sample, curate_source_cap, ts_tumbling.
     "ts_resample_interp",
     "text_paragraph_dedup",
     "dedup_incremental_fuzzy",
@@ -108,136 +84,53 @@ HEADLINE = FIXED_CORE + [
     "text_contamination_spans",
     "text_bpe_merges",
     "crawl_pipeline",
-    # r8 additions: DSIR importance resampling, span clipping
     "curate_dsir",
     "text_gopher_repetition",
     "text_ngram_novelty",
     "sim_incremental_neardup",
     "multimodal_features",
-    # r10 additions: audio bit-depth/remix path, the table-blocklist
-    # URL gate, the C4 rule set + composed pipeline, NB quality
-    # scoring, Aho-Corasick matching, sentence-span dedup, and the
-    # distributed embedding-covariance reduction
     "multimodal_audio_depths",
     "text_url_blocklist",
     "text_nb_quality",
     "text_match_any",
     "c4_pipeline",
     "emb_covariance",
-    # r10 late additions: the unigram tokenizer, G.711 companding,
-    # exact signal analysis
     "text_unigram_tokenize",
     "multimodal_audio_g711",
     "multimodal_audio_analysis",
     "dedup_bloom_admits",
-    # r11 additions: PQ asymmetric-distance search, the IVFADC
-    # composition (coarse cells + residual PQ), and the animated-GIF
-    # multi-frame sampler
     "pq_adc_topk",
     "ivfpq_adc_topk",
     "multimodal_gif_frames",
-    # r12 addition: IVFADC recall vs exact search (the two-layer ANN
-    # quality measurement; pq_store_lifecycle stays conformance-only —
-    # it writes warehouse tables, a side effect the bench loop's 5
-    # warm repeats should not be timing)
     "sim_ivfpq_recall",
-    # r13 additions: exact-INT64 Lloyd k-means (clustering family),
-    # the forward-direction as-of join
     "emb_kmeans_assign",
-    # r13 addition: exact re-rank over the IVFADC candidate slice
     "ivfpq_rerank",
-    # r14 additions: perceptual-hash image dedup — signatures through
-    # the real GIF codec, then banded Hamming LSH + connected
-    # components to keepers
     "dedup_image_phash",
     "dedup_image_neardup",
-    # r14 addition: shot-boundary detection (per-frame dHash + one
-    # keyed lag window over the animated-GIF codec path)
     "video_scene_cuts",
-    # r14 addition: gain-invariant spectral-peak audio dedup
-    # r14 addition: fused zero-shuffle keyframe extraction
     "video_keyframes",
-    # r15 tail rotation (line-budget swap; every rotated-out entry
-    # stays oracle-verified in the conformance registry). Out this
-    # round — all sub-0.5 s with fresh r13/r14 timing evidence:
-    # text_stratified_sample, curate_source_cap, ts_tumbling (the r14
-    # returners), ts_ohlc, dedup_url_canonical, ts_twap,
-    # ts_interval_merge, ts_scd2_history, profile_documents (the last
-    # for the probe_sec budget). Back in from the r14-out
-    # set: dedup_simhash, text_url_filter, chunk_dedup, text_bm25,
-    # ts_range_join, text_ccnet_buckets (text_html_extract,
-    # text_c4_rules, text_sentence_span_dedup wait one more round —
-    # crawl_pipeline / c4_pipeline time their stages every round).
-    # r16 tail rotation (line-budget swap for the three r16 entries
-    # plus the probe2_sec key; every rotated-out entry stays
-    # oracle-verified in the conformance registry). Out this round —
-    # all sub-0.6 s with fresh r15 timing evidence: text_url_filter,
-    # chunk_dedup, text_bm25, ts_range_join, text_ccnet_buckets.
-    # dedup_simhash keeps its slot (the SimHash family's only
-    # headline representation).
     "dedup_simhash",
-    # r15 additions: clip-level video near-dup dedup (scene-sequence
-    # digest + chunked tolerance), shift-robust audio landmark
-    # matching (Wang-2003 constellation pairs, stop-landmark cap),
-    # and landmark retrieval by offset voting in BOTH modalities (the
-    # Shazam matcher over timed audio landmarks / scene-hash
-    # landmarks; text_quality_prune and ts_session_window yield their
-    # tail slots for the line budget — both sub-0.6 s with r13-r15
-    # timing evidence, both stay oracle-verified)
     "dedup_video_neardup",
     "dedup_audio_landmark",
     "audio_landmark_search",
     "video_landmark_search",
-    # r15 addition: image retrieval by banded perceptual hash
-    # (sim_hybrid_rrf yields its tail slot for the line budget —
-    # 0.49 s with r13-r15 timing evidence, stays oracle-verified)
-    # r16 additions: top-k-within-radius image retrieval, the
-    # multimodal curation pipeline (decode -> video+audio dedup graph
-    # -> quality gates -> keepers), and top-k landmark retrieval
     "image_phash_topk",
     "curation_pipeline_mm",
     "audio_landmark_topk",
-    # r16 addition: incremental landmark-index admit (probe + batch
-    # self-match; emb_label_outliers yields its tail slot for the
-    # line budget — 0.46 s with r15 evidence, stays oracle-verified,
-    # the embedding family keeps emb_covariance/emb_quantize/kmeans)
     "audio_landmark_incremental",
-    # r17 tail rotation (line-budget swap for the three scale-tier
-    # entries below; every rotated-out entry stays oracle-verified in
-    # the conformance registry and gets a BENCHCOVERAGE.md qtime row
-    # when it leaves). Out this round — all sub-0.7 s with fresh
-    # r15+r16 driver timing evidence, each family keeps other slots:
-    # ts_asof_forward (ts_asof_join is fixed-core, ts_resample_interp
-    # stays), dedup_audio_fingerprint (the audio family keeps
-    # dedup_audio_landmark + three landmark retrieval slots),
-    # image_phash_search (image_phash_topk supersedes it — identical
-    # probe plan plus the rank window — and dedup_image_phash /
-    # dedup_image_neardup stay).
-    # r17 additions (r16 verdict ask #6 — give the 8-vs-32-core
-    # scaling block signal): three entries over inputs replicated
-    # in-plan to a size where parallelism is measurable at sf0.1 —
-    # scan/codegen-bound, shuffle-bound, and in-row-hash-bound.
-    # Everything computes from the parquet inputs on every run
-    # (explode(sequence(1, K)) — nothing persisted); full-value
-    # DuckDB oracles replay the replication.
     "scale_scan_agg",
     "scale_shuffle_agg",
     "scale_text_hash",
 ]
 
-# r4 showed ±25% round-to-round swings on unchanged sub-second queries
-# (shared sandbox), so the per-query statistic is the MEDIAN OF 5 warm
-# runs and the JSON also records each query's spread (max-min) so a
-# real plan win is distinguishable from noise
+# per-query statistic: MEDIAN OF 5 warm runs, with the spread (max-min)
+# recorded so a plan win is distinguishable from noise
 RUNS = 5
 
-# r15 verdict ask #4: the stage-heavy cluster's spreads exploded
-# exactly where medians-of-5 are weakest (dedup_bloom_admits: 1.88 s
-# spread on a 1.63 s median in BENCH_r15) — these entries run
-# median-of-9 instead; per-entry run counts are recorded in
-# BENCHDETAIL.md. Membership rule (frozen): any headline entry whose
-# spread exceeded 0.3x its median in either of the two preceding
-# rounds joins; entries leave after two consecutive rounds back under.
+# stage-heavy entries run median-of-9 with the trimmed spread.
+# Membership rule (frozen): any headline entry whose spread exceeded
+# 0.3x its median in either of the two preceding rounds joins; entries
+# leave after two consecutive rounds back under.
 RUNS_OVERRIDE = {
     "pq_adc_topk": 9,
     "ivfpq_adc_topk": 9,
@@ -247,20 +140,17 @@ RUNS_OVERRIDE = {
     "sim_ivfpq_recall": 9,
 }
 
-# HOST-CALIBRATION PROBE (r14 verdict ask #2, productizing the r13/r14
-# host-drift attribution studies): a fixed, fixture-independent JVM
-# workload timed exactly like the suite (one untimed warm pass, then
-# median of RUNS). Its cross-round ratio IS the host-share yardstick:
-# if probe_rN / probe_rN-1 moved the same way as a query's delta, the
-# delta is the HOST, not the code — r13's "regression cluster" (gif
-# x1.45, g711 x1.38, pq_adc x1.35) needed a git-worktree A/B study
-# (tools/attribute_r13_codecs.py) to refute; with the probe in every
-# BENCH_rN it is one division. NEVER resize PROBE_ROWS or change the
-# expression — cross-round comparability is the whole point; if the
-# host class ever changes, add a NEW probe key instead of editing this
-# one. Sized to ~1.1 s on the r15 reference host (32 threads; medians
-# 0.45 / 0.66 / 1.14 s at 1.2 / 2.4 / 4.8 G rows — linear past the
-# ~0.25 s scheduling floor, spread 0.04 s at this size).
+# HOST-CALIBRATION PROBE: a fixed, fixture-independent JVM workload
+# timed like the suite (one untimed warm pass, then median of RUNS).
+# Its cross-round ratio is the host-share yardstick: if probe_rN /
+# probe_rN-1 moved the same way as a query's delta, the delta is the
+# host, not the code (SCALE.md "r14: r13 codec-bench regression
+# attribution"). NEVER resize PROBE_ROWS or change the expression —
+# cross-round comparability is the whole point; if the host class ever
+# changes, add a NEW probe key instead of editing this one. Sized to
+# ~1.1 s on the r15 reference host (32 threads; medians 0.45 / 0.66 /
+# 1.14 s at 1.2 / 2.4 / 4.8 G rows — linear past the ~0.25 s
+# scheduling floor, spread 0.04 s at this size).
 PROBE_ROWS = 4_800_000_000
 
 
@@ -343,93 +233,99 @@ def _probe2(spark) -> tuple[float, float]:
     )
 
 
-def _drain(df) -> int:
-    """Execute the full plan; cheap result transfer."""
-    try:
-        df.write.format("noop").mode("overwrite").save()
-        return -1
-    except Exception:
-        return df.count()
+def fixture_dir() -> tuple[str, str, str]:
+    """(source_dir, sf_dir, layout) for $SPARK_GRAFT_SF_DIR.
 
-
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    os.environ["SPARK_GRAFT_CPUS"] = cpus
-
-    # the driver fixtures are single-row-group parquet, which caps any
-    # scan at ONE task (Spark assigns row groups, not byte ranges —
-    # SCALE.md "Bench-floor note"); rewrite them once into a repo-local
-    # ~16-row-group layout (same rows/schema/codec — the shape every
-    # real table has) so the bench measures the engine, not the fixture
-    # geometry. Falls back to the original layout if the rewrite fails.
-    source_dir, layout = sf_dir, "single-row-group (driver fixture, as-given)"
+    The generated fixtures are single-row-group parquet, which caps any
+    scan at ONE task (SCALE.md "Bench fixture layout"); ``sf_dir`` is
+    their repo-local multi-file relayout (same rows/schema/codec), so
+    timings measure the engine, not the fixture geometry. ``layout`` is
+    "mrg" for the relayout, or "srg" when the rewrite failed and
+    ``sf_dir`` is the source as given.
+    """
+    source_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
     try:
         from tools.relayout import ensure_relayout
 
-        sf_dir = ensure_relayout(sf_dir)
-        layout = f"multi-row-group relayout of {source_dir} (tools/relayout.py)"
+        return source_dir, ensure_relayout(source_dir), "mrg"
     except Exception:
-        pass
+        return source_dir, source_dir, "srg"
+
+
+def open_session(app: str, sf_dir: str):
+    """(spark, registry) on local[$SPARK_GRAFT_CPUS] (default 32), warmed.
+
+    The warm-up runs one registry query (JVM, codegen and file-listing
+    paths) and one pandas_udf, which starts the Python worker pool: the
+    first pandas_udf query otherwise pays ~6.6 s of one-time worker and
+    Arrow startup (SCALE.md "Python-worker warmup variance").
+    """
+    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
+    from pyspark.sql.functions import col, pandas_udf
 
     from easydb_server_spark import get_spark
     from easydb_server_spark.queries import spark_queries
 
-    spark = get_spark("easydb-bench")
+    spark = get_spark(app)
     qs = spark_queries()
-
-    # warm-up: JVM/codegen/file-listing paths, plus the Python worker
-    # pool — the first pandas_udf query otherwise pays ~6.6 s of
-    # one-time worker/Arrow startup (tools/attribute_variance.py:
-    # sim_topk_lsh cold first run 9.1 s vs 1.0 s thereafter; with this
-    # warm-up 2.5 s), which BENCH_r06 recorded as a 2.2 s spread
     _drain(qs["core_distinct"](spark, sf_dir))
-    import pandas as _pd  # noqa: F401
-    from pyspark.sql.functions import col as _col, pandas_udf as _pandas_udf
 
-    @_pandas_udf("double")
+    @pandas_udf("double")
     def _noop_udf(s):
         return s
 
-    spark.range(64).select(_noop_udf(_col("id").cast("double"))).count()
+    spark.range(64).select(_noop_udf(col("id").cast("double"))).count()
+    return spark, qs
+
+
+def _drain(df) -> None:
+    """Execute the full plan into the noop sink (no result transfer)."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def time_query(spark, fn, sf_dir: str, label: str, runs: int = RUNS, warm: bool = True) -> list[float]:
+    """Wall seconds of ``runs`` drains of ``fn(spark, sf_dir)``, plan
+    construction included. The untimed warm pass first pays the
+    one-time costs (codegen compile, broadcast build, scan listing, the
+    workers' numpy import) that would otherwise land in the first
+    sample as spread."""
+    sc = spark.sparkContext
+    if warm:
+        sc.setJobDescription(f"warm {label}")
+        _drain(fn(spark, sf_dir))
+    sc.setJobDescription(label)
+    samples = []
+    for _ in range(runs):
+        t0 = time.perf_counter()
+        _drain(fn(spark, sf_dir))
+        samples.append(time.perf_counter() - t0)
+    return samples
+
+
+def summarize(samples: list[float]) -> tuple[float, float]:
+    """(median, spread) at 3 dp. Spread is max-min; above RUNS samples
+    it drops the single highest and lowest first, since a lone
+    scheduler spike is expected in 9 samples and the raw range would
+    grow with the extra runs that exist to suppress it."""
+    kept = sorted(samples)[1:-1] if len(samples) > RUNS else samples
+    return round(statistics.median(samples), 3), round(max(kept) - min(kept), 3)
+
+
+def main() -> None:
+    source_dir, sf_dir, layout = fixture_dir()
+    spark, qs = open_session("easydb-bench", sf_dir)
 
     # calibration probes FIRST (suite position is part of their
     # contract, like the fixed core's): CPU probe, then the
-    # stage-heavy scheduler probe (r15 verdict ask #3)
+    # stage-heavy scheduler probe
     probe_sec, probe_spread = _probe(spark)
     probe2_sec, probe2_spread = _probe2(spark)
 
     timings: dict[str, float] = {}
     spread: dict[str, float] = {}
     for name in HEADLINE:
-        fn = qs[name]
-        # one untimed warm pass per query: whole-stage codegen compile,
-        # broadcast build, scan listing, and (for UDF queries) the
-        # workers' numpy import are one-time costs — without this the
-        # first timed run records them as spread (BENCH_r06's
-        # sim_topk_lsh: 2.2 s spread on a 0.8 s median; see SCALE.md
-        # "Python-worker warmup variance")
-        spark.sparkContext.setJobDescription(f"bench-warm:{name}")
-        _drain(fn(spark, sf_dir))
-        spark.sparkContext.setJobDescription(f"bench:{name}")
-        samples = []
-        for _ in range(RUNS_OVERRIDE.get(name, RUNS)):
-            t0 = time.perf_counter()
-            _drain(fn(spark, sf_dir))
-            samples.append(time.perf_counter() - t0)
-        timings[name] = round(statistics.median(samples), 3)
-        # spread statistic: raw max-min at 5 runs; for the 9-run
-        # override cluster, max-min AFTER dropping the single highest
-        # and lowest sample — with 9 samples a lone scheduler spike is
-        # expected (the r16 A/B measured x3.4 one-session swings on
-        # unchanged code) and the raw range would grow WITH the extra
-        # runs that exist to suppress it. BENCHDETAIL records which
-        # entries use the trimmed form (runs_per_query > default).
-        if len(samples) > RUNS:
-            trimmed = sorted(samples)[1:-1]
-            spread[name] = round(max(trimmed) - min(trimmed), 3)
-        else:
-            spread[name] = round(max(samples) - min(samples), 3)
+        samples = time_query(spark, qs[name], sf_dir, f"bench:{name}", RUNS_OVERRIDE.get(name, RUNS))
+        timings[name], spread[name] = summarize(samples)
     spark.sparkContext.setJobDescription(None)
 
     total = round(sum(timings.values()), 3)
@@ -437,34 +333,22 @@ def main() -> None:
     sf = source_dir.rstrip("/").rsplit("sf", 1)[-1].removesuffix("-mrg")
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
 
-    # Full detail (per-query spread, fixture layout, run count) goes to
-    # a repo file; the driver's per-round record keeps only the LAST
-    # 2000 chars of stdout, and the r7 line (medians at 3 dp + spreads)
-    # was ~3.6 kB — BENCH_r07.json came back `parsed: null`, losing 49
-    # of 63 medians from the official record. The printed line is the
-    # compact form: total + per-query medians at 2 dp, ~1.6 kB for the
-    # 63-query suite (re-check BENCHLINE_BUDGET below when adding
-    # headline queries).
+    # Full detail goes to BENCHDETAIL.md; stdout gets the compact line
+    # that must fit BENCHLINE_BUDGET (the 3.6 kB r7 line was recorded as
+    # `parsed: null` in BENCH_r07.json).
     detail = {
         "metric": f"headline-suite wall-clock (median of {RUNS} warm runs per query)",
         "value": total,
         "unit": "sec",
         "fixed_core_sec": fixed_core_sec,
         "fixed_core": FIXED_CORE,
-        # host-calibration probe + per-query probe-normalized ratios
-        # (query_sec / probe_sec, 3 dp): compare THESE across rounds —
-        # a per-query delta whose ratio is flat is host drift, not a
-        # code change (the r13 lesson, productized)
         "probe_sec": probe_sec,
         "probe_spread": probe_spread,
         "probe_rows": PROBE_ROWS,
-        # scheduler probe (r15 verdict ask #3): normalize STAGE-HEAVY
-        # queries against THIS one — see the attribution rule below
         "probe2_sec": probe2_sec,
         "probe2_spread": probe2_spread,
         "probe2_shape": f"{PROBE2_ITERS} sequential groupBy jobs x {PROBE2_PARTS} map tasks over {PROBE2_ROWS} rows",
-        # entries above the default run count report the TRIMMED
-        # spread (max-min after dropping one high + one low sample)
+        # entries above the default run count report the TRIMMED spread
         "runs_per_query": {"default": RUNS, **RUNS_OVERRIDE},
         "queries_per_probe": {
             k: round(v / probe_sec, 3) for k, v in timings.items()
@@ -475,7 +359,11 @@ def main() -> None:
         "queries": timings,
         "spread": spread,
         "sf": sf_val,
-        "layout": layout,
+        "layout": (
+            f"multi-row-group relayout of {source_dir} (tools/relayout.py)"
+            if layout == "mrg"
+            else "single-row-group fixture, as given"
+        ),
     }
     detail_path = Path(_REPO) / "BENCHDETAIL.md"
     detail_path.write_text(
@@ -527,11 +415,8 @@ def main() -> None:
             "probe2_sec": probe2_sec,
             "queries": {k: round(v, 2) for k, v in timings.items()},
             "sf": sf_val,
-            # compact layout marker so the per-round BENCH record shows
-            # whether the multi-row-group relayout was in effect (full
-            # prose in BENCHDETAIL.md): "mrg" = relayout, "srg" = the
-            # driver's single-row-group fixture as-given
-            "layout": "mrg" if "relayout" in layout else "srg",
+            # "mrg" = relayout, "srg" = the fixture as given
+            "layout": layout,
         },
         separators=(",", ":"),
     )

@@ -9,7 +9,8 @@
    against the catalog and register those too (A10), reject when no
    table is referenced (A23);
 4. ``spark.sql`` — Catalyst parses/optimizes/executes (the
-   reference's single ``ctx.sql`` call, §2.B);
+   reference's single ``ctx.sql`` call, §2.B); the request's path
+   views are dropped once it has analyzed the query;
 5. interactive LIMIT 200 + stringified rows (A13, A15), history (A20).
 
 ``Engine.export(sql, fmt)`` is the uncapped `/query/export` path
@@ -41,9 +42,14 @@ class Engine:
 
     # ---- registration (steps 3) ----
 
-    def _register_tables(self, sql: str) -> str:
+    def _register_tables(self, sql: str, path_views: list[str]) -> str:
+        """Register the tables ``sql`` names; return the rewritten SQL.
+        Each generated path view's name is appended to ``path_views``
+        before it is registered, so the caller can drop them all even
+        when registration fails part-way."""
         rewritten, path_map = rewrite_path_tables(sql)
         for temp_name, path in path_map.items():
+            path_views.append(temp_name)
             register_path(self.spark, temp_name, path)
             # TEMP rows persist in the catalog like the reference
             self.catalog.create_table(temp_name, path, type_="TEMP")
@@ -65,8 +71,18 @@ class Engine:
         sql_type = classify(sql)
         if sql_type is not SQLType.DML:
             raise BadRequestError("Only queries produce DataFrames; got DDL")
-        rewritten = self._register_tables(sql)
-        return self.spark.sql(rewritten.rstrip().rstrip(";"))
+        # the returned DataFrame is analyzed, so the request's path views
+        # can go once spark.sql returns: a long-lived session would
+        # otherwise keep one view per ad-hoc request forever. Cataloged
+        # names stay registered (shared by concurrent requests), and the
+        # TEMP catalog rows stay for reference parity.
+        path_views: list[str] = []
+        try:
+            rewritten = self._register_tables(sql, path_views)
+            return self.spark.sql(rewritten.rstrip().rstrip(";"))
+        finally:
+            for name in path_views:
+                self.spark.catalog.dropTempView(name)
 
     def query(self, sql: str) -> dict:
         """Interactive /fetch semantics: DML or DDL, stringified result."""

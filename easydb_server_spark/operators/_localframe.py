@@ -10,7 +10,7 @@ those partitions into one task (32 sequential worker round trips).
 The pandas/Arrow path embeds the rows JVM-side as Arrow batches at
 creation: no Python worker at evaluation, 1-2 partitions. Rows and
 schema are identical; the classic path stays as the fallback for
-anything Arrow cannot convert.
+anything Arrow cannot convert and for float fields holding NaN.
 """
 
 from __future__ import annotations
@@ -29,7 +29,7 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
         import pandas as pd
 
         from pyspark.sql import functions as F
-        from pyspark.sql.types import StructType
+        from pyspark.sql.types import DoubleType, FloatType, IntegralType, StructType
 
         st = (
             schema
@@ -44,6 +44,16 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
                 *[F.lit(None).cast(f.dataType).alias(f.name) for f in st.fields]
             )
         pdf = pd.DataFrame(rows, columns=[f.name for f in st.fields])
+        for i, f in enumerate(st.fields):
+            if isinstance(f.dataType, (FloatType, DoubleType)) and any(r[i] != r[i] for r in rows):
+                # the pandas->Arrow step masks NaN as null; only the
+                # classic path keeps a NaN distinct from a NULL
+                return spark.createDataFrame(rows, schema)
+            if isinstance(f.dataType, IntegralType) and any(r[i] is None for r in rows):
+                # pandas stores an int column holding None as float64,
+                # which rounds values past 2^53; a nullable Int64 column
+                # keeps them exact
+                pdf[f.name] = pd.array([r[i] for r in rows], dtype="Int64")
         return spark.createDataFrame(pdf, schema)
     except Exception:
         return spark.createDataFrame(rows, schema)

@@ -1894,10 +1894,6 @@ def url_features(
         # Exchange + two HashAggregates inside every broadcast build
         entries = F.broadcast(dom_entries.unionByName(kw_entries))
         toks = F.filter(F.split(F.col("_url"), "[^a-z0-9]+"), _nonempty_tok)
-        # r17 (guide §2.3 — shuffle fewer bytes): per-doc key dedup
-        # BEFORE the explode; the semi-probe and the per-doc max()
-        # are idempotent in duplicates, and repeated tokens are the
-        # common case in real URLs
         tagged = F.concat(
             F.transform(sufs, lambda s: F.struct(F.lit("d").alias("_tag"), s.alias("_key"))),
             F.transform(toks, lambda t: F.struct(F.lit("k").alias("_tag"), t.alias("_key"))),

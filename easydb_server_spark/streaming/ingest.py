@@ -801,8 +801,8 @@ def stream_landmark_ingest(
     map-only over the batch; the corpus-sized term is the probe of the
     bucketed landmark table — no exchange on the index side (the plan
     tests/test_audiofp.py locks for the batch operator) and measured
-    FLAT under x10 index growth (tools/scale_sweep_landmark_index.py:
-    x1.03). The streaming query itself is stateless; all state is the
+    FLAT under x10 index growth (SCALE.md "r16: incremental landmark
+    index": x1.03). The streaming query itself is stateless; all state is the
     index table, shared with the batch operators."""
     from easydb_server_spark.operators.audiofp import (
         audio_fingerprint,

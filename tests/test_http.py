@@ -92,6 +92,32 @@ class TestEndpoints:
         )
         assert os.path.isdir(r2.get_json()["data"]["path"])
 
+    def test_adhoc_requests_leave_no_temp_views(self, client, data_dir, spark):
+        """Ad-hoc path views are dropped once each request is analyzed,
+        also when the second quoted path of a request does not exist."""
+
+        def temp_views():
+            return sum(1 for t in spark.catalog.listTables() if t.isTemporary)
+
+        before = temp_views()
+        for i in range(19):
+            r = client.post("/fetch", json={"sql": f"select * from '{data_dir}/user.csv' where id > {i}"})
+            assert r.status_code == 200
+        r = client.post(
+            "/fetch",
+            json={"sql": f"select * from '{data_dir}/user.csv' u join 'ghost.csv' g on u.id = g.id"},
+        )
+        assert r.status_code == 404
+        for fmt in ("csv", "tsv"):
+            r = client.post(
+                "/query/export",
+                json={"sql": f"select id from '{data_dir}/order_*.csv'", "file_type": fmt},
+            )
+            assert r.status_code == 200
+            assert r.data.splitlines()[0] == b"id"
+            assert len(r.data.splitlines()) == 5
+        assert temp_views() == before
+
 
 class TestIngestEndpoint:
     def test_ingest_lands_bucketed_table_queryable_via_fetch(self, client, engine):

@@ -1,8 +1,6 @@
-"""Interleaved A/B timing of a query across git-stash states is not
-possible in one process; this tool instead interleaves TWO CALLABLES
-(variant builders) registered under env-selected names, or — the
-common case — interleaves the SAME registry query with a module-level
-toggle the caller flips between runs.
+"""Interleaved A/B timing of one registry query under a module-level
+toggle the tool flips between runs (one process cannot switch git
+states, so the variants must be selectable at runtime).
 
 Usage: python tools/abtime.py [-n RUNS] query toggle_module:attr=valA,valB
 
@@ -11,8 +9,8 @@ Example:
       easydb_server_spark.queries.llmops:_MM_SPREAD=0,1
 
 Runs one warm pass per side, then alternates A,B,A,B,... RUNS times
-each, reporting per-side medians — same-minute, same-session, so host
-drift hits both sides equally (the r16 attribution lesson).
+each through bench.py's timing path, reporting per-side medians —
+same-minute, same-session, so host drift hits both sides equally.
 """
 
 from __future__ import annotations
@@ -20,19 +18,13 @@ from __future__ import annotations
 import importlib
 import statistics
 import sys
-import time
 from pathlib import Path
 
 _REPO = str(Path(__file__).resolve().parent.parent)
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
-
-def _drain(df) -> None:
-    try:
-        df.write.format("noop").mode("overwrite").save()
-    except Exception:
-        df.count()
+import bench  # noqa: E402
 
 
 def main() -> None:
@@ -44,8 +36,6 @@ def main() -> None:
     name, toggle = args[0], args[1]
     modattr, vals = toggle.split("=")
     mod_name, attr = modattr.split(":")
-    val_a, val_b = vals.split(",")
-
     mod = importlib.import_module(mod_name)
 
     def parse(v: str):
@@ -60,46 +50,20 @@ def main() -> None:
         except ValueError:
             return v
 
-    val_a, val_b = parse(val_a), parse(val_b)
+    sides = {side: parse(v) for side, v in zip("AB", vals.split(","))}
 
-    from easydb_server_spark import get_spark
-    from easydb_server_spark.queries import spark_queries
-
-    sf_dir = "/root/testdata/sf0.1"
-    try:
-        from tools.relayout import ensure_relayout
-
-        sf_dir = ensure_relayout(sf_dir)
-    except Exception:
-        pass
-
-    spark = get_spark("abtime")
-    qs = spark_queries()
+    _, sf_dir, _ = bench.fixture_dir()
+    spark, qs = bench.open_session("abtime", sf_dir)
     fn = qs[name]
-
-    # worker-pool warm (bench.py parity)
-    import pandas as _pd  # noqa: F401
-    from pyspark.sql.functions import col as _col, pandas_udf as _pandas_udf
-
-    @_pandas_udf("double")
-    def _noop_udf(s):
-        return s
-
-    spark.range(64).select(_noop_udf(_col("id").cast("double"))).count()
-
     samples: dict[str, list[float]] = {"A": [], "B": []}
-    for side, val in (("A", val_a), ("B", val_b)):
+    for side, val in sides.items():
         setattr(mod, attr, val)
-        spark.sparkContext.setJobDescription(f"ab-warm:{name}:{side}")
-        _drain(fn(spark, sf_dir))
+        bench.time_query(spark, fn, sf_dir, f"ab:{name}:{side}", 0)
     for i in range(runs):
-        for side, val in (("A", val_a), ("B", val_b)):
+        for side, val in sides.items():
             setattr(mod, attr, val)
-            spark.sparkContext.setJobDescription(f"ab:{name}:{side}:{i}")
-            t0 = time.perf_counter()
-            _drain(fn(spark, sf_dir))
-            samples[side].append(time.perf_counter() - t0)
-    for side, val in (("A", val_a), ("B", val_b)):
+            samples[side] += bench.time_query(spark, fn, sf_dir, f"ab:{name}:{side}:{i}", 1, warm=False)
+    for side, val in sides.items():
         s = samples[side]
         print(
             f"{name} {side} ({attr}={val}): median={statistics.median(s):.3f} "

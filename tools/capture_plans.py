@@ -1,6 +1,7 @@
 """Capture `.explain("formatted")` for headline queries into
 plans/r17/<query>_<tag>.txt — the before/after evidence for the
-optimization round.
+optimization round. Plans come from plan_audit.plan_of over the
+fixture and session that bench.py times.
 
 Usage: python tools/capture_plans.py <tag> [query ...]
        (no query names = every bench HEADLINE entry)
@@ -8,8 +9,6 @@ Usage: python tools/capture_plans.py <tag> [query ...]
 
 from __future__ import annotations
 
-import contextlib
-import io
 import sys
 from pathlib import Path
 
@@ -17,36 +16,21 @@ _REPO = str(Path(__file__).resolve().parent.parent)
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
+import bench  # noqa: E402
+from tools.plan_audit import plan_of  # noqa: E402
+
 
 def main() -> None:
     tag = sys.argv[1]
-    names = sys.argv[2:]
+    names = sys.argv[2:] or bench.HEADLINE
     out_dir = Path(_REPO) / "plans" / "r17"
     out_dir.mkdir(parents=True, exist_ok=True)
 
-    import bench
-    from easydb_server_spark import get_spark
-    from easydb_server_spark.queries import spark_queries
-
-    sf_dir = "/root/testdata/sf0.1"
-    try:
-        from tools.relayout import ensure_relayout
-
-        sf_dir = ensure_relayout(sf_dir)
-    except Exception:
-        pass
-
-    spark = get_spark("plan-capture")
-    qs = spark_queries()
-    if not names:
-        names = list(bench.HEADLINE)
+    _, sf_dir, _ = bench.fixture_dir()
+    spark, qs = bench.open_session("plan-capture", sf_dir)
     for name in names:
         try:
-            df = qs[name](spark, sf_dir)
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
-            (out_dir / f"{name}_{tag}.txt").write_text(buf.getvalue())
+            (out_dir / f"{name}_{tag}.txt").write_text(plan_of(qs[name](spark, sf_dir)))
             print(f"ok   {name}")
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: {e}")

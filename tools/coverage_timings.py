@@ -1,8 +1,8 @@
-"""Once-per-round coverage timings (r16 verdict asks #7 and #8):
+"""Once-per-round coverage timings:
 
 1. The bench-tail ROTATED-OUT entries — rotation must never hide a
-   regression, so the six entries dropped from the r16 headline tail
-   get a qtime row every round.
+   regression, so every entry dropped from the headline tail gets a
+   timing row every round.
 2. The DISTRIBUTED FALLBACKS of the driver-replay dispatches
    (pagerank / connected components / BPE) — the scale paths no longer
    run at sf0.1 inside the bench, so they are timed here with the
@@ -12,20 +12,24 @@
 
 Writes BENCHCOVERAGE.md (committed; BENCHDETAIL.md is overwritten by
 every bench run, so this table lives in its own file) and prints the
-same rows to stdout. Methodology mirrors bench.py: one untimed warm
-pass, noop sink, median of N.
+same rows to stdout. Timing goes through bench.py's path: one untimed
+warm pass, noop sink, median of bench.RUNS.
+
+Usage: python tools/coverage_timings.py
 """
 
 from __future__ import annotations
 
-import statistics
+import importlib
+import os
 import sys
-import time
 from pathlib import Path
 
 _REPO = str(Path(__file__).resolve().parent.parent)
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
+
+import bench  # noqa: E402
 
 ROTATED_OUT = [
     # r16 rotation
@@ -48,56 +52,13 @@ FALLBACKS = [
     ("text_bpe_merges", "easydb_server_spark.operators.text", "BPE_DRIVER_MAX_WORDS"),
 ]
 
-RUNS = 5
-
-
-def _drain(df) -> None:
-    try:
-        df.write.format("noop").mode("overwrite").save()
-    except Exception:
-        df.count()
-
 
 def main() -> None:
-    import importlib
-
-    from easydb_server_spark import get_spark
-    from easydb_server_spark.queries import spark_queries
-
-    sf_dir = "/root/testdata/sf0.1"
-    try:
-        from tools.relayout import ensure_relayout
-
-        sf_dir = ensure_relayout(sf_dir)
-    except Exception:
-        pass
-
-    spark = get_spark("coverage-timings")
-    qs = spark_queries()
-
-    import pandas as _pd  # noqa: F401
-    from pyspark.sql.functions import col as _col, pandas_udf as _pandas_udf
-
-    @_pandas_udf("double")
-    def _noop_udf(s):
-        return s
-
-    spark.range(64).select(_noop_udf(_col("id").cast("double"))).count()
+    _, sf_dir, _ = bench.fixture_dir()
+    spark, qs = bench.open_session("coverage-timings", sf_dir)
 
     def qtime(name: str) -> tuple[float, float]:
-        fn = qs[name]
-        spark.sparkContext.setJobDescription(f"coverage-warm:{name}")
-        _drain(fn(spark, sf_dir))
-        spark.sparkContext.setJobDescription(f"coverage:{name}")
-        samples = []
-        for _ in range(RUNS):
-            t0 = time.perf_counter()
-            _drain(fn(spark, sf_dir))
-            samples.append(time.perf_counter() - t0)
-        return (
-            round(statistics.median(samples), 3),
-            round(max(samples) - min(samples), 3),
-        )
+        return bench.summarize(bench.time_query(spark, qs[name], sf_dir, f"coverage:{name}"))
 
     lines = [
         "# Bench coverage timings (once per round)",
@@ -106,8 +67,10 @@ def main() -> None:
         "bench no longer covers: the rotated-out tail entries (rotation",
         "must never hide a regression) and the distributed fallbacks of",
         "the driver-replay dispatches (forced via the dispatch-bound",
-        "module attributes; same warm+noop+median-of-%d methodology as" % RUNS,
-        "bench.py).",
+        "module attributes). Timed through bench.py's path (relayout",
+        "fixture, worker warm-up, one untimed warm pass, noop sink,",
+        f"median of {bench.RUNS}) on local[{spark.sparkContext.defaultParallelism}],",
+        f"{os.cpu_count()} host CPUs.",
         "",
         "## Rotated-out bench-tail entries",
         "",

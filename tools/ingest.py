@@ -41,15 +41,10 @@ def main() -> int:
     source, name, bucket_col = sys.argv[1:4]
     n_buckets = int(sys.argv[4]) if len(sys.argv) > 4 else 16
 
-    from pyspark.sql import SparkSession
-
+    from easydb_server_spark import get_spark
     from easydb_server_spark.engine import Engine
 
-    spark = (
-        SparkSession.builder.master("local[*]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .getOrCreate()
-    )
+    spark = get_spark("ingest")
     eng = Engine(spark)
     if "," in bucket_col:
         from easydb_server_spark.operators.zorder import zorder_write

@@ -54,12 +54,9 @@ def audit(p: str) -> dict:
 
 def main() -> None:
     import bench
-    from easydb_server_spark import get_spark
-    from easydb_server_spark.queries import spark_queries
 
-    spark = get_spark("plan-audit")
-    qs = spark_queries()
     sf_dir = "/root/testdata/sf0.01"
+    spark, qs = bench.open_session("plan-audit", sf_dir)
     rows = []
     for name in bench.HEADLINE:
         rows.append((name, audit(plan_of(qs[name](spark, sf_dir)))))

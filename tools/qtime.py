@@ -1,6 +1,6 @@
 """Targeted per-query timing: median/min/max of N warm noop-drained
-runs at sf0.1 (relayout), mirroring bench.py methodology (one untimed
-warm pass, noop sink, setJobDescription labels).
+runs through bench.py's timing path (relayout fixture, worker warm-up,
+one untimed warm pass, setJobDescription labels).
 
 Usage: python tools/qtime.py [-n RUNS] query [query ...]
 """
@@ -9,19 +9,13 @@ from __future__ import annotations
 
 import statistics
 import sys
-import time
 from pathlib import Path
 
 _REPO = str(Path(__file__).resolve().parent.parent)
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
-
-def _drain(df) -> None:
-    try:
-        df.write.format("noop").mode("overwrite").save()
-    except Exception:
-        df.count()
+import bench  # noqa: E402
 
 
 def main() -> None:
@@ -30,44 +24,13 @@ def main() -> None:
     if args and args[0] == "-n":
         runs = int(args[1])
         args = args[2:]
-    names = args
 
-    from easydb_server_spark import get_spark
-    from easydb_server_spark.queries import spark_queries
-
-    sf_dir = "/root/testdata/sf0.1"
-    try:
-        from tools.relayout import ensure_relayout
-
-        sf_dir = ensure_relayout(sf_dir)
-    except Exception:
-        pass
-
-    spark = get_spark("qtime")
-    qs = spark_queries()
-    # worker-pool warm (bench.py does the same)
-    import pandas as _pd  # noqa: F401
-    from pyspark.sql.functions import col as _col, pandas_udf as _pandas_udf
-
-    @_pandas_udf("double")
-    def _noop_udf(s):
-        return s
-
-    spark.range(64).select(_noop_udf(_col("id").cast("double"))).count()
-
-    for name in names:
-        fn = qs[name]
-        spark.sparkContext.setJobDescription(f"qtime-warm:{name}")
-        _drain(fn(spark, sf_dir))
-        spark.sparkContext.setJobDescription(f"qtime:{name}")
-        samples = []
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            _drain(fn(spark, sf_dir))
-            samples.append(time.perf_counter() - t0)
-        med = statistics.median(samples)
+    _, sf_dir, _ = bench.fixture_dir()
+    spark, qs = bench.open_session("qtime", sf_dir)
+    for name in args:
+        samples = bench.time_query(spark, qs[name], sf_dir, f"qtime:{name}", runs)
         print(
-            f"{name}: median={med:.3f} min={min(samples):.3f} "
+            f"{name}: median={statistics.median(samples):.3f} min={min(samples):.3f} "
             f"max={max(samples):.3f} n={runs}",
             flush=True,
         )

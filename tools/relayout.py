@@ -15,8 +15,9 @@ Library use (bench.py): ``ensure_relayout(sf_dir)`` creates
 on source mtimes) and returns its path.
 
 CLI: ``python tools/relayout.py [sf_dir]`` builds the relayout, then
-runs the headline bench on BOTH layouts and prints one JSON line with
-per-query medians for each — the SCALE.md evidence table.
+times the headline queries on BOTH layouts through bench.py's timing
+path and prints one JSON line with per-query medians for each — the
+SCALE.md evidence table.
 """
 
 from __future__ import annotations
@@ -125,49 +126,23 @@ def ensure_relayout(sf_dir: str, target_groups: int = TARGET_ROW_GROUPS) -> str:
     return str(out)
 
 
-def _bench_layout(sf_dir: str, runs: int = 5) -> dict[str, float]:
-    import statistics
-    import time
-
-    from easydb_server_spark import get_spark
-    from easydb_server_spark.queries import spark_queries
-
-    from bench import HEADLINE, _drain
-
-    spark = get_spark("relayout-bench")
-    qs = spark_queries()
-    _drain(qs["core_distinct"](spark, sf_dir))  # warm-up
-    timings = {}
-    for name in HEADLINE:
-        spark.sparkContext.setJobDescription(f"relayout:{name}")
-        samples = []
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            _drain(qs[name](spark, sf_dir))
-            samples.append(time.perf_counter() - t0)
-        timings[name] = round(statistics.median(samples), 3)
-    spark.sparkContext.setJobDescription(None)
-    return timings
-
-
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+    import bench
+
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else bench.DEFAULT_SF_DIR
     mrg_dir = ensure_relayout(sf_dir)
-    geom = {
-        f.name: pq.ParquetFile(f).metadata.num_row_groups
+    part_files = {
+        f.name: len(list(f.glob("*.parquet"))) if f.is_dir() else 1
         for f in sorted(Path(mrg_dir).glob("*.parquet"))
     }
-    single = _bench_layout(sf_dir)
-    multi = _bench_layout(mrg_dir)
-    out = {
-        "source": sf_dir,
-        "relayout": mrg_dir,
-        "row_groups": geom,
-        "single_rg": single,
-        "multi_rg": multi,
-        "total_single_s": round(sum(single.values()), 3),
-        "total_multi_s": round(sum(multi.values()), 3),
-    }
+    spark, qs = bench.open_session("relayout-bench", sf_dir)
+    out = {"source": sf_dir, "relayout": mrg_dir, "part_files": part_files}
+    for key, d in (("single_rg", sf_dir), ("multi_rg", mrg_dir)):
+        out[key] = {
+            name: bench.summarize(bench.time_query(spark, qs[name], d, f"relayout:{name}"))[0]
+            for name in bench.HEADLINE
+        }
+        out[f"total_{key.removesuffix('_rg')}_s"] = round(sum(out[key].values()), 3)
     print(json.dumps(out))
     return 0
 

@@ -70,13 +70,8 @@ def register_dialect_shims(spark: SparkSession) -> list[str]:
     """
     registered = []
     for name, (args, ret, body) in _SHIMS.items():
-        try:
-            spark.sql(
-                f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({args}) RETURNS {ret} RETURN {body}"
-            )
-            registered.append(name)
-        except Exception:
-            # a Spark build without SQL-function support, or the name
-            # already exists as a builtin — both fine to skip
-            pass
+        spark.sql(
+            f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({args}) RETURNS {ret} RETURN {body}"
+        )
+        registered.append(name)
     return registered

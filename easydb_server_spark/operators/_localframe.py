@@ -9,8 +9,8 @@ those partitions into one task (32 sequential worker round trips).
 
 The pandas/Arrow path embeds the rows JVM-side as Arrow batches at
 creation: no Python worker at evaluation, 1-2 partitions. Rows and
-schema are identical; the classic path stays as the fallback for
-anything Arrow cannot convert and for float fields holding NaN.
+schema are identical; the classic path is kept only for float fields
+holding NaN, and conversion errors propagate.
 """
 
 from __future__ import annotations
@@ -25,35 +25,33 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     or StructType — always applied, so dtypes match the classic path
     exactly.
     """
-    try:
-        import pandas as pd
+    import pandas as pd
 
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import DoubleType, FloatType, IntegralType, StructType
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import DoubleType, FloatType, IntegralType, StructType
 
-        st = (
-            schema
-            if isinstance(schema, StructType)
-            else StructType.fromDDL(schema)  # type: ignore[arg-type]
+    st = (
+        schema
+        if isinstance(schema, StructType)
+        else StructType.fromDDL(schema)  # type: ignore[arg-type]
+    )
+    rows = list(rows)
+    if not rows:
+        # empty: a 0-row JVM range with typed NULL casts — one
+        # empty JVM partition instead of 32 empty Python ones
+        return spark.range(0, 0, 1, 1).select(
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in st.fields]
         )
-        rows = list(rows)
-        if not rows:
-            # empty: a 0-row JVM range with typed NULL casts — one
-            # empty JVM partition instead of 32 empty Python ones
-            return spark.range(0, 0, 1, 1).select(
-                *[F.lit(None).cast(f.dataType).alias(f.name) for f in st.fields]
-            )
-        pdf = pd.DataFrame(rows, columns=[f.name for f in st.fields])
-        for i, f in enumerate(st.fields):
-            if isinstance(f.dataType, (FloatType, DoubleType)) and any(r[i] != r[i] for r in rows):
-                # the pandas->Arrow step masks NaN as null; only the
-                # classic path keeps a NaN distinct from a NULL
-                return spark.createDataFrame(rows, schema)
-            if isinstance(f.dataType, IntegralType) and any(r[i] is None for r in rows):
-                # pandas stores an int column holding None as float64,
-                # which rounds values past 2^53; a nullable Int64 column
-                # keeps them exact
-                pdf[f.name] = pd.array([r[i] for r in rows], dtype="Int64")
-        return spark.createDataFrame(pdf, schema)
-    except Exception:
-        return spark.createDataFrame(rows, schema)
+    pdf = pd.DataFrame(rows, columns=[f.name for f in st.fields])
+    for i, f in enumerate(st.fields):
+        if isinstance(f.dataType, (FloatType, DoubleType)) and any(r[i] != r[i] for r in rows):
+            # the pandas->Arrow step masks NaN as null; only the
+            # classic path keeps a NaN distinct from a NULL
+            return spark.createDataFrame(rows, schema)
+        if isinstance(f.dataType, IntegralType) and any(r[i] is None for r in rows):
+            # pandas stores an int column holding None as float64,
+            # which rounds values past 2^53; a nullable Int64 column
+            # keeps them exact
+            pdf[f.name] = pd.array([r[i] for r in rows], dtype="Int64")
+    return spark.createDataFrame(pdf, schema)
+

@@ -25,6 +25,7 @@ family of universal hashes (a*h0+b) mod p with p = 4294967311 (prime
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 
 from easydb_server_spark.functions.exactround import ratio_ge, round_ratio
@@ -217,28 +218,6 @@ def minhash_bands(df: DataFrame, text_col: str, id_col: str, k: int = 3) -> Data
     groupBy + band groupBy); this path shuffles zero times until the
     candidate self-join itself."""
     return bands_from_sig_array(minhash_sig_array(df, text_col, id_col, k))
-
-
-def _band_rows(sig: DataFrame) -> DataFrame:
-    """(doc_id, i, minhash) signature rows → (doc_id, band, band_hash)
-    LSH band rows; the band key is md5 of the sorted band slice.
-
-    Kept for callers that already hold row-form signatures (e.g. a
-    persisted index); fresh computations should use
-    :func:`minhash_bands`, which needs no groupBy."""
-    rows_per_band = MINHASH_N // MINHASH_BANDS
-    return (
-        sig.withColumn("band", (F.col("i") / rows_per_band).cast("int"))
-        .groupBy("doc_id", "band")
-        .agg(
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    F.array_sort(F.collect_list(F.format_string("%d:%d", "i", "minhash"))),
-                )
-            ).alias("band_hash")
-        )
-    )
 
 
 def minhash_candidates(df: DataFrame, text_col: str, id_col: str, k: int = 3) -> DataFrame:
@@ -935,7 +914,7 @@ def _repair_partitions_if_any(spark, table: str) -> None:
     tables is expected and swallowed."""
     try:
         spark.sql(f"MSCK REPAIR TABLE {table}")
-    except Exception:
+    except AnalysisException:
         pass
 
 

@@ -1199,10 +1199,10 @@ def rebuild_pq_store(
     overwrite of both tables. The store's persisted bucket count is
     carried over (the full rewrite is the one safe point to change it,
     but resharding is a separate decision from retraining)."""
-    try:
+    if spark.catalog.tableExists(f"{table}_codebook"):
         _cb, old_ver, _m, _w = _store_codebook(spark, table)
         nb = _store_n_buckets(spark, table)
-    except Exception:
+    else:
         old_ver, nb = -1, _PQ_STORE_BUCKETS
     _drop_table_and_location(spark, table)
     _drop_table_and_location(spark, f"{table}_codebook")

@@ -72,18 +72,6 @@ def topk_cosine_bruteforce(
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
-def bucket_signature(vec_col, planes: list[list[float]]):
-    """Sign-bit LSH bucket id for a (double-cast) vector column
-    (expression form — interpreted per element; kept as the
-    dependency-free fallback and for plan-shape tests)."""
-    sig = F.lit(0).cast("bigint")
-    for i, plane in enumerate(planes):
-        lit_plane = F.array(*[F.lit(v) for v in plane])
-        d = _dot(vec_col, lit_plane)
-        sig = sig + F.when(d >= 0, F.shiftleft(F.lit(1).cast("bigint"), i)).otherwise(0)
-    return sig
-
-
 def _sig_norm_udf(planes: list[list[float]]):
     """Arrow-batched (bucket, nrm) for a double-array vector column.
 

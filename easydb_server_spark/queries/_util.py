@@ -9,6 +9,21 @@ order-insensitive value hash, so:
 - float aggregates are rounded to a fixed number of decimals;
 - integer-valued aggregates are cast to BIGINT on the oracle side
   (DuckDB SUM(BIGINT) returns HUGEINT, Spark returns BIGINT).
+
+Each piece is written once:
+
+- one generator per synthetic corpus: a recipe that more than one
+  query builds from (the sawtooth and tone audio clips, the GIF image
+  and video frames, the C4 pages, the crawl HTML and URL hosts, the
+  dup-injected documents and vectors) lives in a module-level
+  ``_name(spark, sf_dir, ...)`` function that takes only the values
+  its callers vary; ``tests/test_registry.py`` fails when two query
+  functions carry the same nested ``build`` closure;
+- oracles compose shared fragments: a CTE chain that more than one
+  oracle replays is a module-level string or a small function that
+  returns one, inserted with an f-string or ``+``. The composed oracle
+  text is what the driver hashes against, so a fragment edit is an
+  oracle edit.
 """
 
 from __future__ import annotations
@@ -151,8 +166,4 @@ def spread(df: DataFrame) -> DataFrame:
     build function is deterministic per row and downstream plans are
     order-insensitive (oracle compares sorted)."""
     n = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        cur = df.rdd.getNumPartitions()
-    except Exception:  # pragma: no cover - defensive
-        return df
-    return df if cur >= n else df.repartition(n)
+    return df if df.rdd.getNumPartitions() >= n else df.repartition(n)

@@ -41,6 +41,19 @@ hashed AS (
 """
 
 
+# the same 3-word shingles and 32-bit md5 hash over a `docs` CTE
+# (operators/dedup.py minhash_signatures)
+_DOCS_SHINGLE_HASH_CTES = """words AS (SELECT doc_id, string_split(text, ' ') AS ws FROM docs),
+sh_all AS (
+  SELECT w.doc_id, array_to_string(w.ws[t.i + 1 : t.i + 3], ' ') AS shingle
+  FROM words w, UNNEST(generate_series(0, greatest(len(w.ws) - 3, 0))) t(i)
+),
+sh AS (SELECT DISTINCT doc_id, shingle FROM sh_all),
+hashed AS (
+  SELECT doc_id, CAST(('0x' || substr(md5(shingle), 1, 8)) AS BIGINT) AS h0 FROM sh
+)"""
+
+
 def _params_values() -> str:
     return ", ".join(f"({i}, {a}, {b})" for i, (a, b) in enumerate(D._hash_params()))
 
@@ -84,15 +97,7 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_DEDUP_MINHASH = f"""
 WITH docs AS (SELECT doc_id, text FROM documents WHERE doc_id < 100),
-words AS (SELECT doc_id, string_split(text, ' ') AS ws FROM docs),
-sh_all AS (
-  SELECT w.doc_id, array_to_string(w.ws[t.i + 1 : t.i + 3], ' ') AS shingle
-  FROM words w, UNNEST(generate_series(0, greatest(len(w.ws) - 3, 0))) t(i)
-),
-sh AS (SELECT DISTINCT doc_id, shingle FROM sh_all),
-hashed AS (
-  SELECT doc_id, CAST(('0x' || substr(md5(shingle), 1, 8)) AS BIGINT) AS h0 FROM sh
-),
+{_DOCS_SHINGLE_HASH_CTES},
 params(i, a, b) AS (VALUES {_params_values()})
 SELECT h.doc_id, p.i, MIN((p.a * h.h0 + p.b) % {D.MINHASH_P}) AS minhash
 FROM hashed h CROSS JOIN params p
@@ -119,15 +124,7 @@ WITH docs AS (
   UNION ALL
   SELECT doc_id + 10000, text FROM documents WHERE doc_id < 50 AND doc_id % 10000 < 300
 ),
-words AS (SELECT doc_id, string_split(text, ' ') AS ws FROM docs),
-sh_all AS (
-  SELECT w.doc_id, array_to_string(w.ws[t.i + 1 : t.i + 3], ' ') AS shingle
-  FROM words w, UNNEST(generate_series(0, greatest(len(w.ws) - 3, 0))) t(i)
-),
-sh AS (SELECT DISTINCT doc_id, shingle FROM sh_all),
-hashed AS (
-  SELECT doc_id, CAST(('0x' || substr(md5(shingle), 1, 8)) AS BIGINT) AS h0 FROM sh
-),
+{_DOCS_SHINGLE_HASH_CTES},
 params(i, a, b) AS (VALUES {{params}}),
 sigs AS (
   SELECT h.doc_id, p.i, MIN((p.a * h.h0 + p.b) % {D.MINHASH_P}) AS minhash
@@ -181,6 +178,35 @@ inter AS (
   GROUP BY p.doc_id, q.doc_id
 )"""
 
+# Jaccard n_inter / |union| rounded exactly to 6 dp, over `inter` joined
+# to `sizes sa, sb`
+_NGRAM_JACCARD = round_div_sql("n_inter", "sa.n_sh + sb.n_sh - n_inter", 6, "duckdb")
+
+
+def _jaccard_components_ctes(threshold: float) -> str:
+    """pairs / edges / reach / labels: the `inter`/`sizes` pairs at
+    Jaccard >= threshold, closed transitively (needs WITH RECURSIVE);
+    labels = (doc_id, min member id) per component."""
+    return f"""pairs AS (
+  SELECT doc_a, doc_b FROM inter
+  JOIN sizes sa ON sa.doc_id = doc_a
+  JOIN sizes sb ON sb.doc_id = doc_b
+  WHERE {_NGRAM_JACCARD} >= {threshold}
+),
+edges AS (
+  SELECT doc_a AS src, doc_b AS dst FROM pairs
+  UNION SELECT doc_b, doc_a FROM pairs
+),
+reach AS (
+  SELECT src, dst FROM edges
+  UNION
+  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
+),
+labels AS (
+  SELECT src AS doc_id, LEAST(src, MIN(dst)) AS component
+  FROM reach GROUP BY src
+)"""
+
 
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs via shingle inverted index,
@@ -195,11 +221,11 @@ ORACLE_DEDUP_NGRAM_JACCARD = f"""
 WITH {_SHINGLES_CTE},
 {_NGRAM_INTER_CTES}
 SELECT doc_a, doc_b,
-       (CAST((CASE WHEN (n_inter) < 0 THEN -(((((abs(CAST(n_inter AS BIGINT)) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100 + ((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100 + ((((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100 + ((((((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) + (CASE WHEN 2 * (((((((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) >= (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT)) THEN 1 ELSE 0 END)) ELSE (((((abs(CAST(n_inter AS BIGINT)) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100 + ((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100 + ((((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100 + ((((((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) + (CASE WHEN 2 * (((((((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) >= (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT)) THEN 1 ELSE 0 END)) END) AS DOUBLE) / 1000000.0) AS jaccard
+       {_NGRAM_JACCARD} AS jaccard
 FROM inter
 JOIN sizes sa ON sa.doc_id = doc_a
 JOIN sizes sb ON sb.doc_id = doc_b
-WHERE (CAST((CASE WHEN (n_inter) < 0 THEN -(((((abs(CAST(n_inter AS BIGINT)) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100 + ((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100 + ((((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100 + ((((((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) + (CASE WHEN 2 * (((((((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) >= (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT)) THEN 1 ELSE 0 END)) ELSE (((((abs(CAST(n_inter AS BIGINT)) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100 + ((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100 + ((((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100 + ((((((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) + (CASE WHEN 2 * (((((((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) >= (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT)) THEN 1 ELSE 0 END)) END) AS DOUBLE) / 1000000.0) >= 0.4
+WHERE {_NGRAM_JACCARD} >= 0.4
 ORDER BY doc_a, doc_b
 """
 
@@ -382,15 +408,29 @@ ORDER BY qid, rank
 ORACLE_SIM_TOPK_LSH = _oracle_sim_topk_lsh()
 
 
-def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH-bucketed embedding near-dup pairs over a dup-injected vector
-    corpus (exact copies share a bucket by construction, so recall on
-    true dups is 1.0); oracle replays the deterministic hyperplanes."""
+def _vecs_with_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The embedding corpus plus exact copies of vec_id < 30 at
+    vec_id + 10000 (oracle side: _VECS_WITH_DUPS_CTES)."""
     e = load(spark, sf_dir, "embeddings")
     dups = e.where(F.col("vec_id") < 30).select(
         (F.col("vec_id") + 10000).alias("vec_id"), "embedding"
     )
-    corpus = e.select("vec_id", "embedding").unionAll(dups)
+    return e.select("vec_id", "embedding").unionAll(dups)
+
+
+_VECS_WITH_DUPS_CTES = """base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
+v AS (
+  SELECT vec_id, vec FROM base
+  UNION ALL
+  SELECT vec_id + 10000, vec FROM base WHERE vec_id < 30
+)"""
+
+
+def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LSH-bucketed embedding near-dup pairs over a dup-injected vector
+    corpus (exact copies share a bucket by construction, so recall on
+    true dups is 1.0); oracle replays the deterministic hyperplanes."""
+    corpus = _vecs_with_dups(spark, sf_dir)
     return S.neardup_pairs_lsh(corpus, "embedding", "vec_id", threshold=0.9).orderBy(
         "id_a", "id_b"
     )
@@ -400,12 +440,7 @@ def _oracle_dedup_embedding_lsh() -> str:
     planes = S.lsh_planes(64)
     plane_lits = ", ".join("[" + ", ".join(repr(v) for v in row) + "]" for row in planes)
     return f"""
-WITH base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
-v AS (
-  SELECT vec_id, vec FROM base
-  UNION ALL
-  SELECT vec_id + 10000, vec FROM base WHERE vec_id < 30
-),
+WITH {_VECS_WITH_DUPS_CTES},
 planes AS (
   SELECT UNNEST(range(0, {S.LSH_PLANES})) AS i,
          UNNEST([{plane_lits}]) AS plane
@@ -439,9 +474,10 @@ def q_sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SIM_TOPK_IVF = """
-WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
-init AS (
+# one deterministic k-means step over `v` (16 md5-ranked seeds, one
+# centroid update at 5 dp) and every vector's nearest cell: the
+# operators/similarity.py ivf_centroids + _assign_cells replay
+_IVF16_CELLS_CTES = """init AS (
   SELECT vec_id AS cell, vec AS centroid FROM v
   ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16
 ),
@@ -471,7 +507,12 @@ assigned AS (
                               ORDER BY ROUND(list_dot_product(v.vec, c.centroid), 6) DESC, c.cell) AS r
     FROM v CROSS JOIN cents c
   ) WHERE r = 1
-),
+)"""
+
+
+ORACLE_SIM_TOPK_IVF = f"""
+WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
+{_IVF16_CELLS_CTES},
 probed AS (
   SELECT qid, cell FROM (
     SELECT v.vec_id AS qid, c.cell,
@@ -628,25 +669,7 @@ def q_dedup_pipeline_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_DEDUP_PIPELINE_KEEPERS = f"""
 WITH RECURSIVE {_SHINGLES_CTE},
 {_NGRAM_INTER_CTES},
-pairs AS (
-  SELECT doc_a, doc_b FROM inter
-  JOIN sizes sa ON sa.doc_id = doc_a
-  JOIN sizes sb ON sb.doc_id = doc_b
-  WHERE (CAST((CASE WHEN (n_inter) < 0 THEN -(((((abs(CAST(n_inter AS BIGINT)) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100 + ((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100 + ((((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100 + ((((((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) + (CASE WHEN 2 * (((((((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) >= (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT)) THEN 1 ELSE 0 END)) ELSE (((((abs(CAST(n_inter AS BIGINT)) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100 + ((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100 + ((((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100 + ((((((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) + (CASE WHEN 2 * (((((((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) >= (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT)) THEN 1 ELSE 0 END)) END) AS DOUBLE) / 1000000.0) >= 0.6
-),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION SELECT doc_b, doc_a FROM pairs
-),
-reach AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-),
-labels AS (
-  SELECT src AS doc_id, LEAST(src, MIN(dst)) AS component
-  FROM reach GROUP BY src
-),
+{_jaccard_components_ctes(0.6)},
 keepers AS (SELECT component, MIN(doc_id) AS keeper FROM labels GROUP BY component),
 drops AS (
   SELECT l.doc_id FROM labels l JOIN keepers k ON l.component = k.component
@@ -674,25 +697,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_DEDUP_CLUSTERS = f"""
 WITH RECURSIVE {_SHINGLES_CTE},
 {_NGRAM_INTER_CTES},
-pairs AS (
-  SELECT doc_a, doc_b FROM inter
-  JOIN sizes sa ON sa.doc_id = doc_a
-  JOIN sizes sb ON sb.doc_id = doc_b
-  WHERE (CAST((CASE WHEN (n_inter) < 0 THEN -(((((abs(CAST(n_inter AS BIGINT)) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100 + ((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100 + ((((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100 + ((((((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) + (CASE WHEN 2 * (((((((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) >= (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT)) THEN 1 ELSE 0 END)) ELSE (((((abs(CAST(n_inter AS BIGINT)) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100 + ((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100 + ((((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100 + ((((((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) + (CASE WHEN 2 * (((((((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) >= (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT)) THEN 1 ELSE 0 END)) END) AS DOUBLE) / 1000000.0) >= 0.4
-),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION SELECT doc_b, doc_a FROM pairs
-),
-reach AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-),
-labels AS (
-  SELECT src AS doc_id, LEAST(src, MIN(dst)) AS component
-  FROM reach GROUP BY src
-)
+{_jaccard_components_ctes(0.4)}
 SELECT component,
        COUNT(*) AS n_members,
        string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id) AS members_csv
@@ -866,19 +871,12 @@ ORDER BY item_id, frame_idx
 """
 
 
-def q_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio features through a REAL WAV codec end-to-end: each doc_id
-    becomes a deterministic 16-bit PCM clip (sawtooth-ish samples
-    ``((doc_id·7919 + i·104729) mod 65536) − 32768``, 8 kHz mono,
-    100 + doc_id % 50 frames) ENCODED to genuine RIFF/WAVE bytes in an
-    Arrow-batched stage, then decoded back and featurized by
-    ``multimodal.audio_features`` (pure-stdlib
-    :mod:`easydb_server_spark.operators.wav`). The oracle never sees
-    the bytes — it computes the same features in closed form from the
-    sample recipe, so a hash match proves the encode→decode→feature
-    path is byte-faithful. All sums are exact in int64/float64
-    (integer samples, < 2⁵³), so both engines agree bit-for-bit.
-    """
+def _audio_clips(spark: SparkSession, sf_dir: str, base: int, mod: int):
+    """Deterministic mono 8 kHz clips from the shared sawtooth recipe
+    ``s(doc,i) = ((doc_id*7919 + i*104729) mod 65536) - 32768`` with
+    ``n = base + doc_id % mod`` frames — the corpus every audio
+    conformance entry builds so its oracle can replay samples in
+    closed form without ever seeing bytes."""
     import pandas as pd
 
     d = load(spark, sf_dir, "documents").select("doc_id")
@@ -892,13 +890,29 @@ def q_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
             out = []
             for doc_id in pdf["doc_id"]:
                 did = int(doc_id)
-                n = 100 + did % 50
+                n = base + did % mod
                 i = np.arange(n, dtype=np.int64)
                 s = ((did * 7919 + i * 104729) % 65536 - 32768).astype(np.int16)
                 out.append((did, encode_wav(s, 8000)))
             yield pd.DataFrame(out, columns=["item_id", "payload"])
 
-    blobs = d.mapInPandas(build, "item_id bigint, payload binary")
+    return d.mapInPandas(build, "item_id bigint, payload binary")
+
+
+def q_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Audio features through a REAL WAV codec end-to-end: each doc_id
+    becomes a deterministic 16-bit PCM clip (sawtooth-ish samples
+    ``((doc_id·7919 + i·104729) mod 65536) − 32768``, 8 kHz mono,
+    100 + doc_id % 50 frames) ENCODED to genuine RIFF/WAVE bytes in an
+    Arrow-batched stage, then decoded back and featurized by
+    ``multimodal.audio_features`` (pure-stdlib
+    :mod:`easydb_server_spark.operators.wav`). The oracle never sees
+    the bytes — it computes the same features in closed form from the
+    sample recipe, so a hash match proves the encode→decode→feature
+    path is byte-faithful. All sums are exact in int64/float64
+    (integer samples, < 2⁵³), so both engines agree bit-for-bit.
+    """
+    blobs = _audio_clips(spark, sf_dir, 100, 50)
     from easydb_server_spark.operators.multimodal import audio_features
 
     return (
@@ -947,26 +961,7 @@ def q_multimodal_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     form over ``s(doc, 2i)`` — a hash match proves the
     decode→resample→encode→decode→feature chain is sample-faithful.
     """
-    import pandas as pd
-
-    d = load(spark, sf_dir, "documents").select("doc_id")
-
-    def build(batches):
-        import numpy as np
-
-        from easydb_server_spark.operators.wav import encode_wav
-
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                n = 100 + did % 50
-                i = np.arange(n, dtype=np.int64)
-                s = ((did * 7919 + i * 104729) % 65536 - 32768).astype(np.int16)
-                out.append((did, encode_wav(s, 8000)))
-            yield pd.DataFrame(out, columns=["item_id", "payload"])
-
-    blobs = d.mapInPandas(build, "item_id bigint, payload binary")
+    blobs = _audio_clips(spark, sf_dir, 100, 50)
     from easydb_server_spark.operators.multimodal import audio_features, resample_audio
 
     resampled = resample_audio(blobs, "payload", "item_id", 4000)
@@ -1109,6 +1104,64 @@ FROM mono GROUP BY doc_id ORDER BY doc_id
 """
 
 
+# the synthesized URL prefix and host (doc_id % 7): the q_* side is
+# _url_host()
+_URL_HOST_SQL = """         'https://'
+         || CASE doc_id % 7
+              WHEN 0 THEN 'spamexample.com'
+              WHEN 1 THEN 'ads.spamexample.com'
+              WHEN 2 THEN 'h' || CAST(doc_id % 1000 AS VARCHAR) || 'x99.net'
+              WHEN 3 THEN 'news.example.org'
+              ELSE 'example.com' END
+"""
+
+# url_features replay over `built(doc_id, url)`: parse, then every
+# feature up to the two block flags, which each oracle adds itself
+_URL_FEATS_HEAD = """parsed AS (
+  SELECT doc_id, lower(url) AS u,
+         regexp_extract(lower(url), '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1) AS domain,
+         regexp_extract(lower(url), '^[a-z][a-z0-9+.-]*://[^/?#]*([^?#]*)', 1) AS path,
+         regexp_extract(lower(url), '\\?([^#]*)', 1) AS query
+  FROM built
+),
+feats AS (
+  SELECT doc_id, domain,
+         regexp_extract(domain, '([^.]*)$', 1) AS tld,
+         len(list_filter(string_split(path, '/'), x -> x != '')) AS path_depth,
+         CASE WHEN query = '' THEN 0 ELSE len(string_split(query, '&')) END AS n_params,
+         """ + round_div_sql(
+    "length(domain) - length(regexp_replace(domain, '[0-9]', '', 'g'))",
+    "GREATEST(length(domain), 1)",
+    6,
+    "duckdb",
+) + """ AS digit_frac,
+"""
+
+_URL_FEATS_TAIL = """  FROM parsed
+)
+SELECT doc_id, domain, tld,
+       CAST(path_depth AS INT) AS path_depth,
+       CAST(n_params AS INT) AS n_params,
+       digit_frac, blocked_domain, blocked_keyword,
+       (NOT blocked_domain AND NOT blocked_keyword) AS pass_url
+FROM feats ORDER BY doc_id
+"""
+
+
+def _url_host():
+    """The synthesized URL host per doc_id % 7: a blocklisted domain,
+    a subdomain of it, a digit-heavy spam host, a second listed domain,
+    and example.com for the rest."""
+    doc = F.col("doc_id")
+    return (
+        F.when(doc % 7 == 0, F.lit("spamexample.com"))
+        .when(doc % 7 == 1, F.lit("ads.spamexample.com"))
+        .when(doc % 7 == 2, F.concat(F.lit("h"), (doc % 1000).cast("string"), F.lit("x99.net")))
+        .when(doc % 7 == 3, F.lit("news.example.org"))
+        .otherwise(F.lit("example.com"))
+    )
+
+
 def q_text_url_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The blocklist-TABLE overload of url_features (round 10): the
     same synthesized URL corpus as text_url_filter, but the domain and
@@ -1119,16 +1172,7 @@ def q_text_url_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     the documented narrowing from the literal form's
     substring-anywhere."""
     d = load(spark, sf_dir, "documents").select("doc_id")
-    host = (
-        F.when(F.col("doc_id") % 7 == 0, F.lit("spamexample.com"))
-        .when(F.col("doc_id") % 7 == 1, F.lit("ads.spamexample.com"))
-        .when(
-            F.col("doc_id") % 7 == 2,
-            F.concat(F.lit("h"), (F.col("doc_id") % 1000).cast("string"), F.lit("x99.net")),
-        )
-        .when(F.col("doc_id") % 7 == 3, F.lit("news.example.org"))
-        .otherwise(F.lit("example.com"))
-    )
+    host = _url_host()
     path = F.when(F.col("doc_id") % 7 == 4, F.lit("/casino-bonus/p")).otherwise(
         F.lit("/p")
     )
@@ -1155,57 +1199,33 @@ def q_text_url_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-ORACLE_TEXT_URL_BLOCKLIST = """
+ORACLE_TEXT_URL_BLOCKLIST = f"""
 WITH built AS (
   SELECT doc_id,
-         'https://'
-         || CASE doc_id % 7
-              WHEN 0 THEN 'spamexample.com'
-              WHEN 1 THEN 'ads.spamexample.com'
-              WHEN 2 THEN 'h' || CAST(doc_id % 1000 AS VARCHAR) || 'x99.net'
-              WHEN 3 THEN 'news.example.org'
-              ELSE 'example.com' END
-         || CASE WHEN doc_id % 7 = 4 THEN '/casino-bonus/p' ELSE '/p' END AS url
+{_URL_HOST_SQL}         || CASE WHEN doc_id % 7 = 4 THEN '/casino-bonus/p' ELSE '/p' END AS url
   FROM documents
 ),
-parsed AS (
-  SELECT doc_id, lower(url) AS u,
-         regexp_extract(lower(url), '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1) AS domain,
-         regexp_extract(lower(url), '^[a-z][a-z0-9+.-]*://[^/?#]*([^?#]*)', 1) AS path,
-         regexp_extract(lower(url), '\\?([^#]*)', 1) AS query
-  FROM built
-),
-feats AS (
-  SELECT doc_id, domain,
-         regexp_extract(domain, '([^.]*)$', 1) AS tld,
-         len(list_filter(string_split(path, '/'), x -> x != '')) AS path_depth,
-         CASE WHEN query = '' THEN 0 ELSE len(string_split(query, '&')) END AS n_params,
-         (CAST((CASE WHEN (length(domain) - length(regexp_replace(domain, '[0-9]', '', 'g'))) < 0 THEN -(((((abs(CAST(length(domain) - length(regexp_replace(domain, '[0-9]', '', 'g')) AS BIGINT)) // (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100 + ((abs(CAST(length(domain) - length(regexp_replace(domain, '[0-9]', '', 'g')) AS BIGINT)) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) // (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100 + ((((abs(CAST(length(domain) - length(regexp_replace(domain, '[0-9]', '', 'g')) AS BIGINT)) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) // (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100 + ((((((abs(CAST(length(domain) - length(regexp_replace(domain, '[0-9]', '', 'g')) AS BIGINT)) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) // (CAST(GREATEST(length(domain), 1) AS BIGINT))) + (CASE WHEN 2 * (((((((abs(CAST(length(domain) - length(regexp_replace(domain, '[0-9]', '', 'g')) AS BIGINT)) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) >= (CAST(GREATEST(length(domain), 1) AS BIGINT)) THEN 1 ELSE 0 END)) ELSE (((((abs(CAST(length(domain) - length(regexp_replace(domain, '[0-9]', '', 'g')) AS BIGINT)) // (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100 + ((abs(CAST(length(domain) - length(regexp_replace(domain, '[0-9]', '', 'g')) AS BIGINT)) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) // (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100 + ((((abs(CAST(length(domain) - length(regexp_replace(domain, '[0-9]', '', 'g')) AS BIGINT)) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) // (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100 + ((((((abs(CAST(length(domain) - length(regexp_replace(domain, '[0-9]', '', 'g')) AS BIGINT)) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) // (CAST(GREATEST(length(domain), 1) AS BIGINT))) + (CASE WHEN 2 * (((((((abs(CAST(length(domain) - length(regexp_replace(domain, '[0-9]', '', 'g')) AS BIGINT)) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) >= (CAST(GREATEST(length(domain), 1) AS BIGINT)) THEN 1 ELSE 0 END)) END) AS DOUBLE) / 1000000.0) AS digit_frac,
-         (domain = 'spamexample.com' OR suffix(domain, '.spamexample.com')
+{_URL_FEATS_HEAD}         (domain = 'spamexample.com' OR suffix(domain, '.spamexample.com')
           OR domain = 'news.example.org' OR suffix(domain, '.news.example.org')) AS blocked_domain,
          list_has_any(
            list_filter(regexp_split_to_array(u, '[^a-z0-9]+'), x -> x != ''),
            ['casino', 'bonus']) AS blocked_keyword
-  FROM parsed
-)
-SELECT doc_id, domain, tld,
-       CAST(path_depth AS INT) AS path_depth,
-       CAST(n_params AS INT) AS n_params,
-       digit_frac, blocked_domain, blocked_keyword,
-       (NOT blocked_domain AND NOT blocked_keyword) AS pass_url
-FROM feats ORDER BY doc_id
-"""
+{_URL_FEATS_TAIL}"""
 
 
-def q_text_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HTML → text extraction: each document is wrapped into a
-    deterministic page (head/style/comment/script blocks, heading from
-    the first 20 chars, the text in a paragraph with an escaped
-    ampersand, a list, an nbsp entity) and the extractor must strip
-    the markup, keep block boundaries as newlines, and unescape — the
-    oracle replays the construction AND the full regex pipeline."""
-    d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    html = F.concat(
+# the synthesized HTML page per document (head/style/comment/script
+# blocks, the first 20 chars as heading, a list, entities); the q_*
+# side is _html_page()
+_HTML_PAGE_SQL = """         '<html><head><title>T</title><STYLE>p {color:red}</STYLE></head>'
+         || '<body><!-- build 7 --><h1>' || substr(text, 1, 20) || '</h1><P>'
+         || text
+         || ' &amp; more</P><SCRIPT type="text/javascript">var x = 1 &lt; 2;'
+         || '</SCRIPT><ul><li>alpha</li><LI>beta</LI></ul>'
+         || '<DIV>tail&nbsp;note</DIV><BR></body></html>' AS html"""
+
+
+def _html_page():
+    return F.concat(
         F.lit(
             '<html><head><title>T</title><STYLE>p {color:red}</STYLE></head>'
             "<body><!-- build 7 --><h1>"
@@ -1219,19 +1239,28 @@ def q_text_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             "<DIV>tail&nbsp;note</DIV><BR></body></html>"
         ),
     )
+
+
+def q_text_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """HTML → text extraction: each document is wrapped into a
+    deterministic page (head/style/comment/script blocks, heading from
+    the first 20 chars, the text in a paragraph with an escaped
+    ampersand, a list, an nbsp entity) and the extractor must strip
+    the markup, keep block boundaries as newlines, and unescape — the
+    oracle replays the construction AND the full regex pipeline."""
+    d = load(spark, sf_dir, "documents").select("doc_id", "text")
+    html = _html_page()
     built = d.select("doc_id", html.alias("html"))
     return T.html_extract(built, "html", "doc_id").orderBy("doc_id")
 
 
-ORACLE_TEXT_HTML_EXTRACT = r"""
+ORACLE_TEXT_HTML_EXTRACT = (
+    """
 WITH built AS (
   SELECT doc_id,
-         '<html><head><title>T</title><STYLE>p {color:red}</STYLE></head>'
-         || '<body><!-- build 7 --><h1>' || substr(text, 1, 20) || '</h1><P>'
-         || text
-         || ' &amp; more</P><SCRIPT type="text/javascript">var x = 1 &lt; 2;'
-         || '</SCRIPT><ul><li>alpha</li><LI>beta</LI></ul>'
-         || '<DIV>tail&nbsp;note</DIV><BR></body></html>' AS html
+"""
+    + _HTML_PAGE_SQL
+    + r"""
   FROM documents
 ),
 stripped AS (
@@ -1273,6 +1302,7 @@ SELECT doc_id, clean_text,
        CAST(n_tags AS INT) AS n_tags
 FROM collapsed ORDER BY doc_id
 """
+)
 
 
 def q_text_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1338,13 +1368,7 @@ def q_text_url_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids. The oracle replays construction, parsing, and both block
     rules."""
     d = load(spark, sf_dir, "documents").select("doc_id")
-    host = (
-        F.when(F.col("doc_id") % 7 == 0, F.lit("spamexample.com"))
-        .when(F.col("doc_id") % 7 == 1, F.lit("ads.spamexample.com"))
-        .when(F.col("doc_id") % 7 == 2, F.concat(F.lit("h"), (F.col("doc_id") % 1000).cast("string"), F.lit("x99.net")))
-        .when(F.col("doc_id") % 7 == 3, F.lit("news.example.org"))
-        .otherwise(F.lit("example.com"))
-    )
+    host = _url_host()
     seg = F.concat(F.lit("seg"), (F.col("doc_id") % 5).cast("string"))
     path = F.concat(
         F.lit("/"),
@@ -1364,17 +1388,10 @@ def q_text_url_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-ORACLE_TEXT_URL_FILTER = """
+ORACLE_TEXT_URL_FILTER = f"""
 WITH built AS (
   SELECT doc_id,
-         'https://'
-         || CASE doc_id % 7
-              WHEN 0 THEN 'spamexample.com'
-              WHEN 1 THEN 'ads.spamexample.com'
-              WHEN 2 THEN 'h' || CAST(doc_id % 1000 AS VARCHAR) || 'x99.net'
-              WHEN 3 THEN 'news.example.org'
-              ELSE 'example.com' END
-         || '/'
+{_URL_HOST_SQL}         || '/'
          || CASE WHEN doc_id % 7 = 4 THEN 'casino-bonus/' ELSE '' END
          || array_to_string(
               [ 'seg' || CAST(doc_id % 5 AS VARCHAR)
@@ -1382,30 +1399,9 @@ WITH built AS (
          || CASE WHEN doc_id % 2 = 0 THEN '?a=1&b=2' ELSE '' END AS url
   FROM documents
 ),
-parsed AS (
-  SELECT doc_id, lower(url) AS u,
-         regexp_extract(lower(url), '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1) AS domain,
-         regexp_extract(lower(url), '^[a-z][a-z0-9+.-]*://[^/?#]*([^?#]*)', 1) AS path,
-         regexp_extract(lower(url), '\\?([^#]*)', 1) AS query
-  FROM built
-),
-feats AS (
-  SELECT doc_id, domain,
-         regexp_extract(domain, '([^.]*)$', 1) AS tld,
-         len(list_filter(string_split(path, '/'), x -> x != '')) AS path_depth,
-         CASE WHEN query = '' THEN 0 ELSE len(string_split(query, '&')) END AS n_params,
-         (CAST((CASE WHEN (length(domain) - length(regexp_replace(domain, '[0-9]', '', 'g'))) < 0 THEN -(((((abs(CAST(length(domain) - length(regexp_replace(domain, '[0-9]', '', 'g')) AS BIGINT)) // (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100 + ((abs(CAST(length(domain) - length(regexp_replace(domain, '[0-9]', '', 'g')) AS BIGINT)) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) // (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100 + ((((abs(CAST(length(domain) - length(regexp_replace(domain, '[0-9]', '', 'g')) AS BIGINT)) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) // (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100 + ((((((abs(CAST(length(domain) - length(regexp_replace(domain, '[0-9]', '', 'g')) AS BIGINT)) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) // (CAST(GREATEST(length(domain), 1) AS BIGINT))) + (CASE WHEN 2 * (((((((abs(CAST(length(domain) - length(regexp_replace(domain, '[0-9]', '', 'g')) AS BIGINT)) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) >= (CAST(GREATEST(length(domain), 1) AS BIGINT)) THEN 1 ELSE 0 END)) ELSE (((((abs(CAST(length(domain) - length(regexp_replace(domain, '[0-9]', '', 'g')) AS BIGINT)) // (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100 + ((abs(CAST(length(domain) - length(regexp_replace(domain, '[0-9]', '', 'g')) AS BIGINT)) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) // (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100 + ((((abs(CAST(length(domain) - length(regexp_replace(domain, '[0-9]', '', 'g')) AS BIGINT)) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) // (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100 + ((((((abs(CAST(length(domain) - length(regexp_replace(domain, '[0-9]', '', 'g')) AS BIGINT)) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) // (CAST(GREATEST(length(domain), 1) AS BIGINT))) + (CASE WHEN 2 * (((((((abs(CAST(length(domain) - length(regexp_replace(domain, '[0-9]', '', 'g')) AS BIGINT)) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) * 100) % (CAST(GREATEST(length(domain), 1) AS BIGINT))) >= (CAST(GREATEST(length(domain), 1) AS BIGINT)) THEN 1 ELSE 0 END)) END) AS DOUBLE) / 1000000.0) AS digit_frac,
-         (domain = 'spamexample.com' OR suffix(domain, '.spamexample.com')) AS blocked_domain,
+{_URL_FEATS_HEAD}         (domain = 'spamexample.com' OR suffix(domain, '.spamexample.com')) AS blocked_domain,
          contains(u, 'casino') AS blocked_keyword
-  FROM parsed
-)
-SELECT doc_id, domain, tld,
-       CAST(path_depth AS INT) AS path_depth,
-       CAST(n_params AS INT) AS n_params,
-       digit_frac, blocked_domain, blocked_keyword,
-       (NOT blocked_domain AND NOT blocked_keyword) AS pass_url
-FROM feats ORDER BY doc_id
-"""
+{_URL_FEATS_TAIL}"""
 
 
 def q_crawl_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1421,20 +1417,7 @@ def q_crawl_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     text_paragraph_dedup, text_gopher_rules); this entry locks their
     COMPOSITION."""
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    html = F.concat(
-        F.lit(
-            '<html><head><title>T</title><STYLE>p {color:red}</STYLE></head>'
-            "<body><!-- build 7 --><h1>"
-        ),
-        F.substring("text", 1, 20),
-        F.lit("</h1><P>"),
-        F.col("text"),
-        F.lit(
-            ' &amp; more</P><SCRIPT type="text/javascript">var x = 1 &lt; 2;'
-            "</SCRIPT><ul><li>alpha</li><LI>beta</LI></ul>"
-            "<DIV>tail&nbsp;note</DIV><BR></body></html>"
-        ),
-    )
+    html = _html_page()
     host = (
         F.when(F.col("doc_id") % 7 == 0, F.lit("spamexample.com"))
         .when(F.col("doc_id") % 7 == 1, F.lit("ads.spamexample.com"))
@@ -1496,15 +1479,13 @@ def q_crawl_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_CRAWL_PIPELINE = r"""
+ORACLE_CRAWL_PIPELINE = (
+    """
 WITH built AS (
   SELECT doc_id,
-         '<html><head><title>T</title><STYLE>p {color:red}</STYLE></head>'
-         || '<body><!-- build 7 --><h1>' || substr(text, 1, 20) || '</h1><P>'
-         || text
-         || ' &amp; more</P><SCRIPT type="text/javascript">var x = 1 &lt; 2;'
-         || '</SCRIPT><ul><li>alpha</li><LI>beta</LI></ul>'
-         || '<DIV>tail&nbsp;note</DIV><BR></body></html>' AS html,
+"""
+    + _HTML_PAGE_SQL
+    + r""",
          'https://'
          || CASE doc_id % 7 WHEN 0 THEN 'spamexample.com'
                             WHEN 1 THEN 'ads.spamexample.com'
@@ -1588,6 +1569,7 @@ JOIN counts c USING (doc_id)
 JOIN words w USING (doc_id)
 ORDER BY o.doc_id
 """
+)
 
 
 def q_text_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2404,8 +2386,9 @@ def q_text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     return T.unigram_logprob(d, "text", "doc_id", vocab_size=200).orderBy("doc_id")
 
 
-ORACLE_TEXT_UNIGRAM_LOGPROB = """
-WITH terms AS (
+# CCNet unigram LM: whitespace terms, the corpus top-200 vocabulary
+# and the add-one normalizer (operators/text.py unigram_logprob)
+_UNIGRAM_VOCAB_CTES = """terms AS (
   SELECT doc_id, t.term
   FROM documents, UNNEST(regexp_split_to_array(text, ' +')) t(term)
   WHERE t.term != ''
@@ -2417,7 +2400,29 @@ vocab AS (
 tot AS (
   SELECT (SELECT COUNT(*) FROM terms) AS n_words_corpus,
          (SELECT COUNT(*) FROM vocab) AS v
-)
+)"""
+
+# per-doc mean log-probability and its exact tercile cut points
+# (operators/text.py ccnet_buckets)
+_CCNET_TERCILE_CTES = _UNIGRAM_VOCAB_CTES + """,
+scored AS (
+  SELECT t.doc_id,
+         ROUND(AVG(LOG10(CAST(COALESCE(vc.c, 0) + 1 AS DOUBLE)
+                         / (tot.n_words_corpus + tot.v + 1))), 5) AS mean_logprob
+  FROM terms t
+  LEFT JOIN vocab vc USING (term)
+  CROSS JOIN tot
+  GROUP BY t.doc_id
+),
+th AS (
+  SELECT ROUND(PERCENTILE_CONT(1.0/3) WITHIN GROUP (ORDER BY mean_logprob), 4) AS t_lo,
+         ROUND(PERCENTILE_CONT(2.0/3) WITHIN GROUP (ORDER BY mean_logprob), 4) AS t_hi
+  FROM scored
+)"""
+
+
+ORACLE_TEXT_UNIGRAM_LOGPROB = f"""
+WITH {_UNIGRAM_VOCAB_CTES}
 SELECT t.doc_id, COUNT(*) AS n_words,
        ROUND(AVG(LOG10(CAST(COALESCE(vc.c, 0) + 1 AS DOUBLE)
                        / (tot.n_words_corpus + tot.v + 1))), 5) AS mean_logprob
@@ -2505,34 +2510,8 @@ def q_text_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return T.ccnet_buckets(d, "text", "doc_id", vocab_size=200).orderBy("doc_id")
 
 
-ORACLE_TEXT_CCNET_BUCKETS = """
-WITH terms AS (
-  SELECT doc_id, t.term
-  FROM documents, UNNEST(regexp_split_to_array(text, ' +')) t(term)
-  WHERE t.term != ''
-),
-vocab AS (
-  SELECT term, COUNT(*) AS c FROM terms GROUP BY term
-  ORDER BY c DESC, term LIMIT 200
-),
-tot AS (
-  SELECT (SELECT COUNT(*) FROM terms) AS n_words_corpus,
-         (SELECT COUNT(*) FROM vocab) AS v
-),
-scored AS (
-  SELECT t.doc_id,
-         ROUND(AVG(LOG10(CAST(COALESCE(vc.c, 0) + 1 AS DOUBLE)
-                         / (tot.n_words_corpus + tot.v + 1))), 5) AS mean_logprob
-  FROM terms t
-  LEFT JOIN vocab vc USING (term)
-  CROSS JOIN tot
-  GROUP BY t.doc_id
-),
-th AS (
-  SELECT ROUND(PERCENTILE_CONT(1.0/3) WITHIN GROUP (ORDER BY mean_logprob), 4) AS t_lo,
-         ROUND(PERCENTILE_CONT(2.0/3) WITHIN GROUP (ORDER BY mean_logprob), 4) AS t_hi
-  FROM scored
-)
+ORACLE_TEXT_CCNET_BUCKETS = f"""
+WITH {_CCNET_TERCILE_CTES}
 SELECT s.doc_id, s.mean_logprob,
        CASE WHEN s.mean_logprob >= th.t_hi THEN 'head'
             WHEN s.mean_logprob >= th.t_lo THEN 'middle'
@@ -2998,54 +2977,15 @@ def q_sim_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Injected exact copies land in their originals' cells (identical
     dot products, deterministic tie-break), so recall on true dups is
     exercised; oracle replays the deterministic k-means."""
-    e = load(spark, sf_dir, "embeddings")
-    dups = e.where(F.col("vec_id") < 30).select(
-        (F.col("vec_id") + 10000).alias("vec_id"), "embedding"
-    )
-    corpus = e.select("vec_id", "embedding").unionAll(dups)
+    corpus = _vecs_with_dups(spark, sf_dir)
     return S.semdedup(corpus, "embedding", "vec_id", n_cells=16, threshold=0.9).orderBy(
         "vec_id"
     )
 
 
-ORACLE_SIM_SEMDEDUP = """
-WITH base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
-v AS (
-  SELECT vec_id, vec FROM base
-  UNION ALL
-  SELECT vec_id + 10000, vec FROM base WHERE vec_id < 30
-),
-init AS (
-  SELECT vec_id AS cell, vec AS centroid FROM v
-  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16
-),
-a0 AS (
-  SELECT cid, cell FROM (
-    SELECT v.vec_id AS cid, c.cell,
-           ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                              ORDER BY ROUND(list_dot_product(v.vec, c.centroid), 6) DESC, c.cell) AS r
-    FROM v CROSS JOIN init c
-  ) WHERE r = 1
-),
-upd AS (
-  SELECT a0.cell, t.i AS pos, ROUND(AVG(v.vec[t.i]), 5) AS m
-  FROM a0 JOIN v ON v.vec_id = a0.cid,
-       UNNEST(generate_series(1, len(v.vec))) t(i)
-  GROUP BY a0.cell, t.i
-),
-newc AS (SELECT cell, list(m ORDER BY pos) AS centroid FROM upd GROUP BY cell),
-cents AS (
-  SELECT i.cell, COALESCE(n.centroid, i.centroid) AS centroid
-  FROM init i LEFT JOIN newc n ON n.cell = i.cell
-),
-assigned AS (
-  SELECT cid, cell FROM (
-    SELECT v.vec_id AS cid, c.cell,
-           ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                              ORDER BY ROUND(list_dot_product(v.vec, c.centroid), 6) DESC, c.cell) AS r
-    FROM v CROSS JOIN cents c
-  ) WHERE r = 1
-),
+ORACLE_SIM_SEMDEDUP = f"""
+WITH {_VECS_WITH_DUPS_CTES},
+{_IVF16_CELLS_CTES},
 drops AS (
   SELECT DISTINCT x.cid
   FROM assigned x
@@ -3150,7 +3090,10 @@ def _bm25_score_sql(terms: list[str], k1: float = 1.2, b: float = 0.75) -> str:
     )
 
 
-def _oracle_bm25(terms: list[str], k1: float = 1.2, b: float = 0.75, topk: int = 15) -> str:
+def _bm25_stats_ctes(terms: list[str]) -> str:
+    """d / base / stats: per-doc length and term frequency tf{i} of
+    each query term, and the corpus n_docs, sum_dl and df{i} that
+    _bm25_score_sql reads."""
     tf_cols = ",\n         ".join(
         f"len(list_filter(ws, w -> w = '{t}')) AS tf{i}" for i, t in enumerate(terms)
     )
@@ -3158,9 +3101,7 @@ def _oracle_bm25(terms: list[str], k1: float = 1.2, b: float = 0.75, topk: int =
         f"CAST(SUM(CASE WHEN tf{i} > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df{i}"
         for i in range(len(terms))
     )
-    score = _bm25_score_sql(terms, k1, b)
-    return f"""
-WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+    return f"""d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
 base AS (
   SELECT doc_id, len(ws) AS dl,
          {tf_cols}
@@ -3170,7 +3111,13 @@ stats AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(SUM(dl) AS BIGINT) AS sum_dl,
          {df_cols}
   FROM base
-)
+)"""
+
+
+def _oracle_bm25(terms: list[str], k1: float = 1.2, b: float = 0.75, topk: int = 15) -> str:
+    score = _bm25_score_sql(terms, k1, b)
+    return f"""
+WITH {_bm25_stats_ctes(terms)}
 SELECT doc_id, dl,
        ROUND({score}, 6) AS score
 FROM base CROSS JOIN stats
@@ -3202,25 +3149,8 @@ def q_sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_hybrid(terms: list[str]) -> str:
-    tf_cols = ",\n         ".join(
-        f"len(list_filter(ws, w -> w = '{t}')) AS tf{i}" for i, t in enumerate(terms)
-    )
-    df_cols = ",\n         ".join(
-        f"CAST(SUM(CASE WHEN tf{i} > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df{i}"
-        for i in range(len(terms))
-    )
     return f"""
-WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-base AS (
-  SELECT doc_id, len(ws) AS dl,
-         {tf_cols}
-  FROM d
-),
-stats AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(SUM(dl) AS BIGINT) AS sum_dl,
-         {df_cols}
-  FROM base
-),
+WITH {_bm25_stats_ctes(terms)},
 lex AS (
   SELECT doc_id,
        ROUND({_bm25_score_sql(terms)}, 6) AS score
@@ -3504,34 +3434,8 @@ def q_text_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     return T.curriculum_order(d, "text", "doc_id", n_shards=4).orderBy("doc_id")
 
 
-ORACLE_TEXT_CURRICULUM = """
-WITH terms AS (
-  SELECT doc_id, t.term
-  FROM documents, UNNEST(regexp_split_to_array(text, ' +')) t(term)
-  WHERE t.term != ''
-),
-vocab AS (
-  SELECT term, COUNT(*) AS c FROM terms GROUP BY term
-  ORDER BY c DESC, term LIMIT 200
-),
-tot AS (
-  SELECT (SELECT COUNT(*) FROM terms) AS n_words_corpus,
-         (SELECT COUNT(*) FROM vocab) AS v
-),
-scored AS (
-  SELECT t.doc_id,
-         ROUND(AVG(LOG10(CAST(COALESCE(vc.c, 0) + 1 AS DOUBLE)
-                         / (tot.n_words_corpus + tot.v + 1))), 5) AS mean_logprob
-  FROM terms t
-  LEFT JOIN vocab vc USING (term)
-  CROSS JOIN tot
-  GROUP BY t.doc_id
-),
-th AS (
-  SELECT ROUND(PERCENTILE_CONT(1.0/3) WITHIN GROUP (ORDER BY mean_logprob), 4) AS t_lo,
-         ROUND(PERCENTILE_CONT(2.0/3) WITHIN GROUP (ORDER BY mean_logprob), 4) AS t_hi
-  FROM scored
-),
+ORACLE_TEXT_CURRICULUM = f"""
+WITH {_CCNET_TERCILE_CTES},
 bucketed AS (
   SELECT s.doc_id,
          CASE WHEN s.mean_logprob >= th.t_hi THEN 'head'
@@ -3960,16 +3864,12 @@ ORDER BY b.doc_id
 """
 
 
-def q_c4_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The COMPLETE C4 pipeline composed in ONE plan: the rule gate
-    (line filter + page flags, same construction as text_c4_rules) →
-    admitted docs' line-filtered text → three-sentence-span dedup
-    (keep='first'). The two stage oracles are individually
-    driver-verified (text_c4_rules, text_sentence_span_dedup); this
-    entry locks their COMPOSITION, the full published C4 recipe.
-    Filtered text is materialized once at the stage boundary —
-    the same persist lesson as crawl_pipeline (without it Catalyst
-    re-runs the line-filter regex chain per span-dedup consumer)."""
+def _c4_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, text) pages on which every C4 rule fires somewhere: a
+    long terminal-punctuated line, an unpunctuated fragment, a 2-word
+    line, then one line each that turns into a javascript mention
+    (doc_id%3=0), lorem ipsum (%11=0), a curly brace (%13=0) or the
+    naughty word "badness" (%17=0). The oracle side is _C4_PAGES_SQL."""
     d = load(spark, sf_dir, "documents")
     line4 = F.when(
         F.col("doc_id") % 3 == 0,
@@ -3986,7 +3886,7 @@ def q_c4_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") % 17 == 0,
         F.lit("this page contains badness somewhere inside."),
     ).otherwise(F.lit("a safe concluding sentence stands here."))
-    built = d.select(
+    return d.select(
         "doc_id",
         F.concat_ws(
             "\n",
@@ -3999,21 +3899,9 @@ def q_c4_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             line7,
         ).alias("text"),
     )
-    admitted = (
-        T.c4_rules(built, "text", "doc_id", naughty_words=("badness",))
-        .where(F.col("pass_c4"))
-        .select("doc_id", "clean_text")
-        .localCheckpoint(eager=True)
-    )
-    return T.sentence_span_dedup(
-        admitted, "clean_text", "doc_id", span=3, keep="first"
-    ).orderBy("doc_id")
 
 
-ORACLE_C4_PIPELINE = (
-    """
-WITH c4built AS (
-  SELECT doc_id,
+_C4_PAGES_SQL = """  SELECT doc_id,
          text || '.'
          || chr(10) || substr(text, 1, 20)
          || chr(10) || 'too short.'
@@ -4030,7 +3918,37 @@ WITH c4built AS (
               THEN 'this page contains badness somewhere inside.'
               ELSE 'a safe concluding sentence stands here.' END AS text
   FROM documents
-),
+)"""
+
+
+def q_c4_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The COMPLETE C4 pipeline composed in ONE plan: the rule gate
+    (line filter + page flags, same construction as text_c4_rules) →
+    admitted docs' line-filtered text → three-sentence-span dedup
+    (keep='first'). The two stage oracles are individually
+    driver-verified (text_c4_rules, text_sentence_span_dedup); this
+    entry locks their COMPOSITION, the full published C4 recipe.
+    Filtered text is materialized once at the stage boundary —
+    the same persist lesson as crawl_pipeline (without it Catalyst
+    re-runs the line-filter regex chain per span-dedup consumer)."""
+    built = _c4_pages(spark, sf_dir)
+    admitted = (
+        T.c4_rules(built, "text", "doc_id", naughty_words=("badness",))
+        .where(F.col("pass_c4"))
+        .select("doc_id", "clean_text")
+        .localCheckpoint(eager=True)
+    )
+    return T.sentence_span_dedup(
+        admitted, "clean_text", "doc_id", span=3, keep="first"
+    ).orderBy("doc_id")
+
+
+ORACLE_C4_PIPELINE = (
+    """
+WITH c4built AS (
+"""
+    + _C4_PAGES_SQL
+    + """,
 cf AS (
   SELECT doc_id, text,
          list_filter(string_split(text, chr(10)),
@@ -4116,60 +4034,18 @@ def q_text_c4_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     curly-brace flag on %13=0, and a naughty-word flag on %17=0. The
     oracle replays construction, line filtering, sentence counting,
     and the page flags."""
-    d = load(spark, sf_dir, "documents")
-    line4 = F.when(
-        F.col("doc_id") % 3 == 0,
-        F.lit("this line mentions javascript libraries today."),
-    ).otherwise(F.lit("a perfectly ordinary sentence with several words."))
-    line5 = F.when(
-        F.col("doc_id") % 11 == 0,
-        F.lit("lorem ipsum dolor sit amet for padding."),
-    ).otherwise(F.lit("another good sentence appears right here!"))
-    line6 = F.when(
-        F.col("doc_id") % 13 == 0, F.lit("code snippet { return 1; }")
-    ).otherwise(F.lit("closing thought ends with a question mark?"))
-    line7 = F.when(
-        F.col("doc_id") % 17 == 0,
-        F.lit("this page contains badness somewhere inside."),
-    ).otherwise(F.lit("a safe concluding sentence stands here."))
-    built = d.select(
-        "doc_id",
-        F.concat_ws(
-            "\n",
-            F.concat(F.col("text"), F.lit(".")),
-            F.substring("text", 1, 20),
-            F.lit("too short."),
-            line4,
-            line5,
-            line6,
-            line7,
-        ).alias("text"),
-    )
+    built = _c4_pages(spark, sf_dir)
     return T.c4_rules(built, "text", "doc_id", naughty_words=("badness",)).orderBy(
         "doc_id"
     )
 
 
-ORACLE_TEXT_C4_RULES = """
+ORACLE_TEXT_C4_RULES = (
+    """
 WITH built AS (
-  SELECT doc_id,
-         text || '.'
-         || chr(10) || substr(text, 1, 20)
-         || chr(10) || 'too short.'
-         || chr(10) || CASE WHEN doc_id % 3 = 0
-              THEN 'this line mentions javascript libraries today.'
-              ELSE 'a perfectly ordinary sentence with several words.' END
-         || chr(10) || CASE WHEN doc_id % 11 = 0
-              THEN 'lorem ipsum dolor sit amet for padding.'
-              ELSE 'another good sentence appears right here!' END
-         || chr(10) || CASE WHEN doc_id % 13 = 0
-              THEN 'code snippet { return 1; }'
-              ELSE 'closing thought ends with a question mark?' END
-         || chr(10) || CASE WHEN doc_id % 17 = 0
-              THEN 'this page contains badness somewhere inside.'
-              ELSE 'a safe concluding sentence stands here.' END AS text
-  FROM documents
-),
+"""
+    + _C4_PAGES_SQL
+    + """,
 f AS (
   SELECT doc_id, text,
          string_split(text, chr(10)) AS ls,
@@ -4197,6 +4073,7 @@ SELECT doc_id, clean_text,
         AND NOT has_lorem AND NOT has_brace AND NOT has_naughty) AS pass_c4
 FROM g ORDER BY doc_id
 """
+)
 
 
 def q_dedup_keepers_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4237,25 +4114,7 @@ def q_dedup_keepers_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_DEDUP_KEEPERS_QUALITY = f"""
 WITH RECURSIVE {_SHINGLES_CTE},
 {_NGRAM_INTER_CTES},
-pairs AS (
-  SELECT doc_a, doc_b FROM inter
-  JOIN sizes sa ON sa.doc_id = doc_a
-  JOIN sizes sb ON sb.doc_id = doc_b
-  WHERE (CAST((CASE WHEN (n_inter) < 0 THEN -(((((abs(CAST(n_inter AS BIGINT)) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100 + ((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100 + ((((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100 + ((((((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) + (CASE WHEN 2 * (((((((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) >= (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT)) THEN 1 ELSE 0 END)) ELSE (((((abs(CAST(n_inter AS BIGINT)) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100 + ((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100 + ((((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100 + ((((((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) // (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) + (CASE WHEN 2 * (((((((abs(CAST(n_inter AS BIGINT)) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) * 100) % (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT))) >= (CAST(sa.n_sh + sb.n_sh - n_inter AS BIGINT)) THEN 1 ELSE 0 END)) END) AS DOUBLE) / 1000000.0) >= 0.6
-),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION SELECT doc_b, doc_a FROM pairs
-),
-reach AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-),
-labels AS (
-  SELECT src AS doc_id, LEAST(src, MIN(dst)) AS component
-  FROM reach GROUP BY src
-),
+{_jaccard_components_ctes(0.6)},
 qt AS (
   SELECT doc_id, text, string_split(text, ' ') AS ws,
          CAST(length(text) AS INT) AS n_chars,
@@ -4476,34 +4335,6 @@ ORACLE_TEXT_UNIGRAM_TOKENIZE = _oracle_unigram(UNIGRAM_VOCAB)
 # ---------- G.711 companding + exact signal analysis (round 10) ----------
 
 
-def _audio_clips(spark: SparkSession, sf_dir: str, base: int, mod: int):
-    """Deterministic mono 8 kHz clips from the shared sawtooth recipe
-    ``s(doc,i) = ((doc_id*7919 + i*104729) mod 65536) - 32768`` with
-    ``n = base + doc_id % mod`` frames — the corpus every audio
-    conformance entry builds so its oracle can replay samples in
-    closed form without ever seeing bytes."""
-    import pandas as pd
-
-    d = load(spark, sf_dir, "documents").select("doc_id")
-
-    def build(batches):
-        import numpy as np
-
-        from easydb_server_spark.operators.wav import encode_wav
-
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                n = base + did % mod
-                i = np.arange(n, dtype=np.int64)
-                s = ((did * 7919 + i * 104729) % 65536 - 32768).astype(np.int16)
-                out.append((did, encode_wav(s, 8000)))
-            yield pd.DataFrame(out, columns=["item_id", "payload"])
-
-    return d.mapInPandas(build, "item_id bigint, payload binary")
-
-
 def q_multimodal_audio_g711(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G.711 mu-law normalization end-to-end: deterministic clips
     (80 + doc_id % 40 frames) are companded and expanded through the
@@ -4617,14 +4448,13 @@ ORDER BY z.doc_id
 # ---------- link-graph centrality (round 10) ----------
 
 
-def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-point PageRank (operators/graph.py) over the real
-    customer->supplier purchase graph (orders x lineitem, node ids
-    2*custkey / 2*suppkey+1): the link-centrality signal crawl
-    pipelines rank hosts with, here exercised on the repo's actual
-    relational data. Three power iterations; every update is integer
-    multiply/floor-divide, so the DuckDB oracle unrolls the identical
-    arithmetic as CTEs and the top-100 matches bit-for-bit."""
+def _purchase_pagerank_top100(
+    spark: SparkSession, sf_dir: str, driver_max_edges: int | None
+) -> DataFrame:
+    """Top-100 nodes of 3-iteration PageRank over the customer ->
+    supplier purchase graph (orders x lineitem, node ids 2*custkey /
+    2*suppkey+1). ``driver_max_edges`` goes to operators/graph.pagerank
+    (None: its default driver-replay dispatch)."""
     from easydb_server_spark.operators.graph import pagerank
 
     o = load(spark, sf_dir, "orders")
@@ -4633,7 +4463,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_custkey") * 2).alias("src"),
         (F.col("l_suppkey") * 2 + 1).alias("dst"),
     )
-    pr = pagerank(edges, "src", "dst", iterations=3)
+    pr = pagerank(edges, "src", "dst", iterations=3, driver_max_edges=driver_max_edges)
     return (
         pr.select(
             "node",
@@ -4645,6 +4475,17 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("rank").desc(), "node")
         .limit(100)
     )
+
+
+def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Fixed-point PageRank (operators/graph.py) over the real
+    customer->supplier purchase graph (orders x lineitem, node ids
+    2*custkey / 2*suppkey+1): the link-centrality signal crawl
+    pipelines rank hosts with, here exercised on the repo's actual
+    relational data. Three power iterations; every update is integer
+    multiply/floor-divide, so the DuckDB oracle unrolls the identical
+    arithmetic as CTEs and the top-100 matches bit-for-bit."""
+    return _purchase_pagerank_top100(spark, sf_dir, None)
 
 
 def _oracle_pagerank(iterations: int = 3) -> str:
@@ -4700,26 +4541,7 @@ def q_graph_pagerank_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay path is what graph_pagerank takes at these edge counts; the
     r16 verdict's ask #2). Differential tests already force both sides
     equal; this makes the oracle see the scale path too."""
-    from easydb_server_spark.operators.graph import pagerank
-
-    o = load(spark, sf_dir, "orders")
-    l = load(spark, sf_dir, "lineitem")
-    edges = o.join(l, o["o_orderkey"] == l["l_orderkey"]).select(
-        (F.col("o_custkey") * 2).alias("src"),
-        (F.col("l_suppkey") * 2 + 1).alias("dst"),
-    )
-    pr = pagerank(edges, "src", "dst", iterations=3, driver_max_edges=0)
-    return (
-        pr.select(
-            "node",
-            "rank",
-            F.when(F.col("node") % 2 == 0, F.lit("customer"))
-            .otherwise(F.lit("supplier"))
-            .alias("kind"),
-        )
-        .orderBy(F.col("rank").desc(), "node")
-        .limit(100)
-    )
+    return _purchase_pagerank_top100(spark, sf_dir, 0)
 
 
 def q_sketch_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4832,6 +4654,17 @@ ORDER BY q.qid
 ORACLE_SIM_ANN_RECALL = _oracle_ann_recall()
 
 
+def _gif_palette():
+    """The 16-colour palette every GIF fixture indexes into:
+    entry i = ((16i) % 256, (37i) % 256, (73i) % 256)."""
+    import numpy as np
+
+    return np.array(
+        [[(i * 16) % 256, (i * 37) % 256, (i * 73) % 256] for i in range(16)],
+        dtype=np.uint8,
+    )
+
+
 def q_multimodal_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image features through the REAL GIF codec end-to-end: each
     doc_id becomes a deterministic palettized image (16 fixed palette
@@ -4845,16 +4678,13 @@ def q_multimodal_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     d = load(spark, sf_dir, "documents").select("doc_id")
+    pal = _gif_palette()
 
     def build(batches):
         import numpy as np
 
         from easydb_server_spark.operators.gif import encode_gif, gif_decoder
 
-        pal = np.array(
-            [[(i * 16) % 256, (i * 37) % 256, (i * 73) % 256] for i in range(16)],
-            dtype=np.uint8,
-        )
         for pdf in batches:
             out = []
             for doc_id in pdf["doc_id"]:
@@ -4998,16 +4828,13 @@ def q_multimodal_gif_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from easydb_server_spark.operators.multimodal import resize_images
 
     d = load(spark, sf_dir, "documents").select("doc_id")
+    pal = _gif_palette()
 
     def build(batches):
         import numpy as np
 
         from easydb_server_spark.operators.gif import encode_gif
 
-        pal = np.array(
-            [[(i * 16) % 256, (i * 37) % 256, (i * 73) % 256] for i in range(16)],
-            dtype=np.uint8,
-        )
         for pdf in batches:
             out = []
             for doc_id in pdf["doc_id"]:
@@ -5330,7 +5157,21 @@ ORDER BY w
 # round, encode) — shared by the raw-vector oracles (pq_codes /
 # pq_adc_topk) and the residual-vector oracle (ivfpq_adc_topk), which
 # differ only in what the ``subs`` CTE slices
-_PQ_FROM_SUBS = """
+def _pq_nearest_code(subs: str, cb: str) -> str:
+    """Each (cid, sub) row of ``subs`` to its codebook entry in ``cb``:
+    rounded-dot argmax, ties by code (operators/pq.py pq_encode)."""
+    return f"""SELECT cid, sub, code FROM (
+    SELECT s.cid, s.sub, c.code,
+           ROW_NUMBER() OVER (PARTITION BY s.cid, s.sub
+                              ORDER BY ROUND(list_dot_product(s.svec, c.centroid), 6) DESC,
+                                       c.code) AS r
+    FROM {subs} s JOIN {cb} c ON c.sub = s.sub
+  ) WHERE r = 1"""
+
+
+# m=4 x k=8 codebook `cb` trained from the `subs` CTE: md5-seeded
+# init, one rounded-mean Lloyd update with empty-cell carry
+_PQ_TRAIN_FROM_SUBS = f"""
 init AS (
   SELECT sub, r - 1 AS code, svec AS centroid FROM (
     SELECT sub, svec,
@@ -5340,13 +5181,7 @@ init AS (
   ) WHERE r <= 8
 ),
 a0 AS (
-  SELECT cid, sub, code FROM (
-    SELECT s.cid, s.sub, c.code,
-           ROW_NUMBER() OVER (PARTITION BY s.cid, s.sub
-                              ORDER BY ROUND(list_dot_product(s.svec, c.centroid), 6) DESC,
-                                       c.code) AS r
-    FROM subs s JOIN init c ON c.sub = s.sub
-  ) WHERE r = 1
+  {_pq_nearest_code("subs", "init")}
 ),
 upd AS (
   SELECT a0.sub, a0.code, t.i AS pos, ROUND(AVG(s.svec[t.i]), 5) AS m
@@ -5358,17 +5193,43 @@ newc AS (SELECT sub, code, list(m ORDER BY pos) AS centroid FROM upd GROUP BY su
 cb AS (
   SELECT i.sub, i.code, COALESCE(n.centroid, i.centroid) AS centroid
   FROM init i LEFT JOIN newc n ON n.sub = i.sub AND n.code = i.code
-),
+)"""
+
+_PQ_FROM_SUBS = f"""{_PQ_TRAIN_FROM_SUBS},
 enc AS (
-  SELECT cid, sub, code FROM (
-    SELECT s.cid, s.sub, c.code,
-           ROW_NUMBER() OVER (PARTITION BY s.cid, s.sub
-                              ORDER BY ROUND(list_dot_product(s.svec, c.centroid), 6) DESC,
-                                       c.code) AS r
-    FROM subs s JOIN cb c ON c.sub = s.sub
-  ) WHERE r = 1
+  {_pq_nearest_code("subs", "cb")}
 )
 """
+
+_ADC_FINAL_SELECT = """SELECT qid, cid,
+       ROUND(CAST(adc_units AS DOUBLE) / 1000000.0, 6) AS adc_score,
+       CAST(rank AS INT) AS rank
+FROM ranked WHERE rank <= 5
+ORDER BY qid, rank"""
+
+# top-5 by summed LUT micro-units: rank (adc_units DESC, cid)
+_ADC_RANKED_TOP5 = (
+    """ranked AS (
+  SELECT qid, cid, adc_units,
+         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc_units DESC, cid) AS rank
+  FROM scored
+)
+"""
+    + _ADC_FINAL_SELECT
+    + "\n"
+)
+
+# brute ADC over the `enc` codes and the per-query `lut`
+_PQ_SCORED_TOP5 = (
+    """scored AS (
+  SELECT l.qid, e2.cid, SUM(l.part_units) AS adc_units
+  FROM enc e2 JOIN lut l ON l.sub = e2.sub AND l.code = e2.code
+  WHERE e2.cid != l.qid
+  GROUP BY l.qid, e2.cid
+),
+"""
+    + _ADC_RANKED_TOP5
+)
 
 _PQ_CB_CTES = (
     """
@@ -5442,23 +5303,8 @@ lut AS (
   FROM subs s JOIN cb c ON c.sub = s.sub
   WHERE s.cid < 8
 ),
-scored AS (
-  SELECT l.qid, e2.cid, SUM(l.part_units) AS adc_units
-  FROM enc e2 JOIN lut l ON l.sub = e2.sub AND l.code = e2.code
-  WHERE e2.cid != l.qid
-  GROUP BY l.qid, e2.cid
-),
-ranked AS (
-  SELECT qid, cid, adc_units,
-         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc_units DESC, cid) AS rank
-  FROM scored
-)
-SELECT qid, cid,
-       ROUND(CAST(adc_units AS DOUBLE) / 1000000.0, 6) AS adc_score,
-       CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= 5
-ORDER BY qid, rank
 """
+    + _PQ_SCORED_TOP5
 )
 
 
@@ -5543,7 +5389,8 @@ def q_pq_store_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PQ_STORE_TRAIN_CTES = """
+_PQ_STORE_TRAIN_CTES = (
+    """
 WITH vbase AS (
   SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS e
   FROM embeddings WHERE vec_id < 40
@@ -5551,40 +5398,14 @@ WITH vbase AS (
 subs AS (
   SELECT cid, t.s AS sub, list_slice(e, t.s * 16 + 1, t.s * 16 + 16) AS svec
   FROM vbase, UNNEST(generate_series(0, 3)) t(s)
-),
-init AS (
-  SELECT sub, r - 1 AS code, svec AS centroid FROM (
-    SELECT sub, svec,
-           ROW_NUMBER() OVER (PARTITION BY sub
-                              ORDER BY md5(CAST(cid AS VARCHAR)), cid) AS r
-    FROM subs
-  ) WHERE r <= 8
-),
-a0 AS (
-  SELECT cid, sub, code FROM (
-    SELECT s.cid, s.sub, c.code,
-           ROW_NUMBER() OVER (PARTITION BY s.cid, s.sub
-                              ORDER BY ROUND(list_dot_product(s.svec, c.centroid), 6) DESC,
-                                       c.code) AS r
-    FROM subs s JOIN init c ON c.sub = s.sub
-  ) WHERE r = 1
-),
-upd AS (
-  SELECT a0.sub, a0.code, t.i AS pos, ROUND(AVG(s.svec[t.i]), 5) AS m
-  FROM a0 JOIN subs s ON s.cid = a0.cid AND s.sub = a0.sub,
-       UNNEST(generate_series(1, 16)) t(i)
-  GROUP BY a0.sub, a0.code, t.i
-),
-newc AS (SELECT sub, code, list(m ORDER BY pos) AS centroid FROM upd GROUP BY sub, code),
-cb AS (
-  SELECT i.sub, i.code, COALESCE(n.centroid, i.centroid) AS centroid
-  FROM init i LEFT JOIN newc n ON n.sub = i.sub AND n.code = i.code
-)"""
+),"""
+    + _PQ_TRAIN_FROM_SUBS
+)
 
 
 ORACLE_PQ_STORE_LIFECYCLE = (
     _PQ_STORE_TRAIN_CTES
-    + """,
+    + f""",
 vstore AS (
   SELECT b.vec_id AS cid, CAST(n.embedding AS DOUBLE[]) AS e
   FROM embeddings b JOIN embeddings n ON n.vec_id = b.vec_id + 40
@@ -5601,13 +5422,7 @@ ssubs AS (
   FROM vstore, UNNEST(generate_series(0, 3)) t(s)
 ),
 enc AS (
-  SELECT cid, sub, code FROM (
-    SELECT s.cid, s.sub, c.code,
-           ROW_NUMBER() OVER (PARTITION BY s.cid, s.sub
-                              ORDER BY ROUND(list_dot_product(s.svec, c.centroid), 6) DESC,
-                                       c.code) AS r
-    FROM ssubs s JOIN cb c ON c.sub = s.sub
-  ) WHERE r = 1
+  {_pq_nearest_code("ssubs", "cb")}
 ),
 qsubs AS (
   SELECT vec_id AS qid, t.s AS sub,
@@ -5621,23 +5436,8 @@ lut AS (
            AS part_units
   FROM qsubs s JOIN cb c ON c.sub = s.sub
 ),
-scored AS (
-  SELECT l.qid, e2.cid, SUM(l.part_units) AS adc_units
-  FROM enc e2 JOIN lut l ON l.sub = e2.sub AND l.code = e2.code
-  WHERE e2.cid != l.qid
-  GROUP BY l.qid, e2.cid
-),
-ranked AS (
-  SELECT qid, cid, adc_units,
-         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc_units DESC, cid) AS rank
-  FROM scored
-)
-SELECT qid, cid,
-       ROUND(CAST(adc_units AS DOUBLE) / 1000000.0, 6) AS adc_score,
-       CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= 5
-ORDER BY qid, rank
 """
+    + _PQ_SCORED_TOP5
 )
 
 
@@ -5695,26 +5495,7 @@ def q_audio_spectrogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     documented oracle-exception class; analytically-known signals are
     pytest-locked instead (a pure tone at bin k must dominate bin k,
     tests/test_g711_spectral.py)."""
-    import pandas as pd
-
-    d = load(spark, sf_dir, "documents").select("doc_id")
-
-    def build(batches):
-        import numpy as np
-
-        from easydb_server_spark.operators.wav import encode_wav
-
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                n = 100 + did % 50
-                i = np.arange(n, dtype=np.int64)
-                s = ((did * 7919 + i * 104729) % 65536 - 32768).astype(np.int16)
-                out.append((did, encode_wav(s, 8000)))
-            yield pd.DataFrame(out, columns=["item_id", "payload"])
-
-    blobs = d.mapInPandas(build, "item_id bigint, payload binary")
+    blobs = _audio_clips(spark, sf_dir, 100, 50)
     from easydb_server_spark.operators.multimodal import audio_spectrogram
 
     return audio_spectrogram(blobs, "payload", "item_id").orderBy("item_id")
@@ -5790,6 +5571,7 @@ def q_multimodal_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     d = load(spark, sf_dir, "documents").select("doc_id")
+    pal = _gif_palette()
 
     # r16 (guide §4): build → decode → sample → re-encode → features
     # all run fused in ONE Arrow stage — neither the animated blob nor
@@ -5806,10 +5588,6 @@ def q_multimodal_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         from easydb_server_spark.operators.gif import encode_gif_animated
         from easydb_server_spark.operators.multimodal import frame_feature_rows
 
-        pal = np.array(
-            [[(i * 16) % 256, (i * 37) % 256, (i * 73) % 256] for i in range(16)],
-            dtype=np.uint8,
-        )
         for pdf in batches:
             out = []
             for doc_id in pdf["doc_id"]:
@@ -5972,17 +5750,8 @@ scored AS (
   SELECT qid, cid, MIN(coarse_units) + SUM(part_units) AS adc_units
   FROM cand GROUP BY qid, cid
 ),
-ranked AS (
-  SELECT qid, cid, adc_units,
-         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc_units DESC, cid) AS rank
-  FROM scored
-)
-SELECT qid, cid,
-       ROUND(CAST(adc_units AS DOUBLE) / 1000000.0, 6) AS adc_score,
-       CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= 5
-ORDER BY qid, rank
 """
+    + _ADC_RANKED_TOP5
 )
 
 
@@ -6182,16 +5951,10 @@ def q_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("qid", "rank")
 
 
-_IVFPQ_FINAL_SELECT = """SELECT qid, cid,
-       ROUND(CAST(adc_units AS DOUBLE) / 1000000.0, 6) AS adc_score,
-       CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= 5
-ORDER BY qid, rank"""
-
-assert _IVFPQ_FINAL_SELECT in ORACLE_IVFPQ_ADC_TOPK, "IVFADC oracle tail drifted"
+assert _ADC_FINAL_SELECT in ORACLE_IVFPQ_ADC_TOPK, "IVFADC oracle tail drifted"
 
 ORACLE_IVFPQ_RERANK = ORACLE_IVFPQ_ADC_TOPK.replace(
-    _IVFPQ_FINAL_SELECT,
+    _ADC_FINAL_SELECT,
     """, rr AS (
   SELECT r.qid, r.cid,
          CAST(ROUND(list_dot_product(q.e, c.e) * 1000000.0, 0) AS BIGINT)
@@ -6220,7 +5983,7 @@ ORDER BY qid, rank""",
 # ---------- image perceptual-hash near-dup dedup (operators/imagehash.py) ----------
 
 
-def _image_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _image_sigs(spark: SparkSession, sf_dir: str, n_docs: int) -> DataFrame:
     """doc_id -> dHash signature of a deterministic GIF blob with
     PLANTED near-dup groups, built and hashed inside ONE Arrow stage
     (r16, guide §4: image_dhash_row IS the image_dhash body — the
@@ -6237,10 +6000,16 @@ def _image_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     hamming(even, odd) <= 1 — real near-dups, not byte dups. Encoded
     to genuine GIF89a/LZW bytes (operators/gif.py) so the hash path
     exercises the REAL codec; the oracle replays the palette/sampling
-    arithmetic in closed form and never sees bytes."""
+    arithmetic in closed form and never sees bytes.
+
+    doc_id in [400, n_docs) are retrieval queries: base (doc_id - 400)
+    % 40 re-rendered with a different single-pixel edit, (1,1)+4."""
     import pandas as pd
 
-    d = load(spark, sf_dir, "documents").where(F.col("doc_id") < 400).select("doc_id")
+    from easydb_server_spark.operators.imagehash import DHASH_SCHEMA
+
+    d = load(spark, sf_dir, "documents").where(F.col("doc_id") < n_docs).select("doc_id")
+    pal = _gif_palette()
 
     def build(batches):
         import numpy as np
@@ -6248,27 +6017,27 @@ def _image_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
         from easydb_server_spark.operators.gif import encode_gif
         from easydb_server_spark.operators.imagehash import image_dhash_row
 
-        pal = np.array(
-            [[(i * 16) % 256, (i * 37) % 256, (i * 73) % 256] for i in range(16)],
-            dtype=np.uint8,
-        )
         for pdf in batches:
             out = []
             for doc_id in pdf["doc_id"]:
                 did = int(doc_id)
-                base = did % 40
+                base = did % 40 if did < 400 else (did - 400) % 40
                 w, h = 12 + base % 5, 10 + base % 4
                 y, x = np.mgrid[0:h, 0:w]
                 idx = (base * 3 + y * 5 + x * 7) % 16
-                if did % 2 == 1:
+                if did < 400 and did % 2 == 1:
                     idx[0, 0] = (idx[0, 0] + 8) % 16
+                elif did >= 400:
+                    idx[1, 1] = (idx[1, 1] + 4) % 16
+                # r16 (guide §4): hash right here — the encode →
+                # decode codec round-trip stays inside this one Arrow
+                # stage (image_dhash_row IS the operator body), and
+                # the GIF blobs never cross the JVM↔Python boundary
                 out.append(image_dhash_row(did, encode_gif(pal[idx])))
             yield pd.DataFrame(
                 out,
                 columns=["item_id", "band0", "band1", "band2", "band3", "phash"],
             )
-
-    from easydb_server_spark.operators.imagehash import DHASH_SCHEMA
 
     return d.mapInPandas(build, DHASH_SCHEMA)
 
@@ -6331,7 +6100,7 @@ def q_dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/imagehash.py image_dhash). A hash match against the
     closed-form pixel-arithmetic oracle proves the full
     encode->decode->grayscale->sample->bit path is bit-exact."""
-    return _image_sigs(spark, sf_dir).orderBy("item_id")
+    return _image_sigs(spark, sf_dir, 400).orderBy("item_id")
 
 
 ORACLE_DEDUP_IMAGE_PHASH = f"""
@@ -6359,7 +6128,7 @@ def q_dedup_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # image) re-executes ~4x per run — measured 4.64 s -> the codec
     # cost once. At 100 TB the same rule holds: persist signatures
     # (k bytes/image) before any self-join; never re-decode blobs.
-    sigs = _image_sigs(spark, sf_dir).localCheckpoint(eager=True)
+    sigs = _image_sigs(spark, sf_dir, 400).localCheckpoint(eager=True)
     pairs = dhash_pairs(sigs, max_hamming=3).select(
         F.col("item_a").alias("doc_a"), F.col("item_b").alias("doc_b")
     )
@@ -6415,6 +6184,55 @@ ORDER BY d.doc_id
 """
 
 
+def _animated_clips(spark: SparkSession, sf_dir: str, keyframes: bool) -> DataFrame:
+    """The scene-cut corpus: each doc_id < 300 becomes a T-frame
+    animated GIF (T = 6 + doc_id%4, w = 12 + doc_id%5, h = 10 +
+    doc_id%4) in scenes of 3 frames — within a scene frame f jitters
+    source pixel (0,0) by f%3 palette steps, each scene boundary
+    shifts the whole recipe by 6. Rows are the per-frame dHash
+    signatures (frame_dhash_rows), or with ``keyframes`` one
+    representative frame per scene (keyframe_rows, max_hamming=3).
+
+    r16 (guide §4): build and hash/extract run fused in ONE Arrow stage
+    (frame_dhash_rows / keyframe_rows ARE the operator bodies — same
+    encode → decode codec round-trip), so the animated blobs never
+    cross the JVM↔Python boundary."""
+    import pandas as pd
+
+    from easydb_server_spark.operators.imagehash import FRAME_DHASH_SCHEMA, KEYFRAME_SCHEMA
+
+    d = load(spark, sf_dir, "documents").where(F.col("doc_id") < 300).select("doc_id")
+    schema = KEYFRAME_SCHEMA if keyframes else FRAME_DHASH_SCHEMA
+    columns = [field.split()[0] for field in schema.split(", ")]
+    pal = _gif_palette()
+
+    def build(batches):
+        import numpy as np
+
+        from easydb_server_spark.operators.gif import encode_gif_animated
+        from easydb_server_spark.operators.imagehash import frame_dhash_rows, keyframe_rows
+
+        for pdf in batches:
+            out = []
+            for doc_id in pdf["doc_id"]:
+                did = int(doc_id)
+                w, h, t = 12 + did % 5, 10 + did % 4, 6 + did % 4
+                y, x = np.mgrid[0:h, 0:w]
+                frames = []
+                for f in range(t):
+                    idx = (did * 3 + (f // 3) * 6 + y * 5 + x * 7) % 16
+                    idx[0, 0] = (idx[0, 0] + f % 3) % 16
+                    frames.append(pal[idx])
+                blob = encode_gif_animated(frames)
+                if keyframes:
+                    out.extend(keyframe_rows(did, blob, max_hamming=3))
+                else:
+                    out.extend(frame_dhash_rows(did, blob))
+            yield pd.DataFrame(out, columns=columns)
+
+    return spread(d).mapInPandas(build, schema)
+
+
 def q_video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shot-boundary detection end-to-end through the REAL animated
     GIF codec: each doc_id < 300 becomes a T-frame animation
@@ -6429,53 +6247,41 @@ def q_video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the per-frame sampled-pixel arithmetic and the f-1
     self-join in closed form — both engines flag the SAME frames,
     whatever hamming each boundary happens to produce."""
-    import pandas as pd
+    from easydb_server_spark.operators.imagehash import scene_cuts
 
-    from easydb_server_spark.operators.imagehash import (
-        FRAME_DHASH_SCHEMA,
-        scene_cuts,
-    )
-
-    d = load(spark, sf_dir, "documents").where(F.col("doc_id") < 300).select("doc_id")
-
-    def build(batches):
-        import numpy as np
-
-        from easydb_server_spark.operators.gif import encode_gif_animated
-        from easydb_server_spark.operators.imagehash import frame_dhash_rows
-
-        pal = np.array(
-            [[(i * 16) % 256, (i * 37) % 256, (i * 73) % 256] for i in range(16)],
-            dtype=np.uint8,
-        )
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h, t = 12 + did % 5, 10 + did % 4, 6 + did % 4
-                y, x = np.mgrid[0:h, 0:w]
-                frames = []
-                for f in range(t):
-                    idx = (did * 3 + (f // 3) * 6 + y * 5 + x * 7) % 16
-                    idx[0, 0] = (idx[0, 0] + f % 3) % 16
-                    frames.append(pal[idx])
-                # r16 (guide §4): hash right here — the encode →
-                # decode codec round-trip stays inside this one Arrow
-                # stage (frame_dhash_rows IS the operator body), and
-                # the GIF blobs never cross the JVM↔Python boundary
-                out.extend(frame_dhash_rows(did, encode_gif_animated(frames)))
-            yield pd.DataFrame(
-                out,
-                columns=["item_id", "frame_idx", "band0", "band1", "band2", "band3"],
-            )
-
-    sigs = spread(d).mapInPandas(build, FRAME_DHASH_SCHEMA)
+    sigs = _animated_clips(spark, sf_dir, keyframes=False)
     return scene_cuts(sigs, max_hamming=3).orderBy("item_id", "frame_idx")
+
+
+def _frame_dhash_ctes(p: str) -> str:
+    """{p}bits / {p}bnd / {p}sig: per-frame dHash bands (4 x 16 bits)
+    from the sampled 9x8 grey grid {p}gry(doc_id, f, v, u, gr)."""
+    pad = " " * (23 + 2 * len(p))  # keeps each oracle's text byte-identical
+    return f"""{p}bits AS (
+  SELECT l.doc_id, l.f, l.v * 8 + l.u AS i,
+         CASE WHEN l.gr < r.gr THEN 1 ELSE 0 END AS bit
+  FROM {p}gry l JOIN {p}gry r ON r.doc_id = l.doc_id AND r.f = l.f
+{pad}AND r.v = l.v AND r.u = l.u + 1
+  WHERE l.u < 8
+),
+{p}bnd AS (
+  SELECT doc_id, f, i // 16 AS b,
+         CAST(SUM(CAST(bit AS BIGINT) << (i % 16)) AS BIGINT) AS bv
+  FROM {p}bits GROUP BY doc_id, f, i // 16
+),
+{p}sig AS (
+  SELECT doc_id, f,
+         MAX(CASE WHEN b = 0 THEN bv END) AS band0,
+         MAX(CASE WHEN b = 1 THEN bv END) AS band1,
+         MAX(CASE WHEN b = 2 THEN bv END) AS band2,
+         MAX(CASE WHEN b = 3 THEN bv END) AS band3
+  FROM {p}bnd GROUP BY doc_id, f
+)"""
 
 
 # Shared closed-form replay of the per-frame sampled-pixel dHash
 # (video_scene_cuts + video_keyframes): the 9x8 sampled grid only.
-_VIDEO_SIG_CTES = """
+_VIDEO_SIG_CTES = f"""
 vdocs AS (
   SELECT doc_id, 12 + doc_id % 5 AS w, 10 + doc_id % 4 AS h,
          6 + doc_id % 4 AS t
@@ -6503,26 +6309,7 @@ vgry AS (
     FROM vsamp
   )
 ),
-vbits AS (
-  SELECT l.doc_id, l.f, l.v * 8 + l.u AS i,
-         CASE WHEN l.gr < r.gr THEN 1 ELSE 0 END AS bit
-  FROM vgry l JOIN vgry r ON r.doc_id = l.doc_id AND r.f = l.f
-                         AND r.v = l.v AND r.u = l.u + 1
-  WHERE l.u < 8
-),
-vbnd AS (
-  SELECT doc_id, f, i // 16 AS b,
-         CAST(SUM(CAST(bit AS BIGINT) << (i % 16)) AS BIGINT) AS bv
-  FROM vbits GROUP BY doc_id, f, i // 16
-),
-vsig AS (
-  SELECT doc_id, f,
-         MAX(CASE WHEN b = 0 THEN bv END) AS band0,
-         MAX(CASE WHEN b = 1 THEN bv END) AS band1,
-         MAX(CASE WHEN b = 2 THEN bv END) AS band2,
-         MAX(CASE WHEN b = 3 THEN bv END) AS band3
-  FROM vbnd GROUP BY doc_id, f
-)
+{_frame_dhash_ctes("v")}
 """
 
 ORACLE_VIDEO_SCENE_CUTS = f"""
@@ -6632,49 +6419,7 @@ def q_video_keyframes(spark: SparkSession, sf_dir: str) -> DataFrame:
     in closed form; a hash match proves the fused path agrees with
     the windowed scene_cuts semantics AND the codec's pixel
     fidelity."""
-    import pandas as pd
-
-    d = load(spark, sf_dir, "documents").where(F.col("doc_id") < 300).select("doc_id")
-
-    # r16 (guide §4): build + keyframe extraction fused in ONE Arrow
-    # stage (keyframe_rows IS the keyframes operator body — same
-    # encode → decode codec round-trip, same scene/mean arithmetic);
-    # the animated blobs never cross the JVM↔Python boundary.
-    def build(batches):
-        import numpy as np
-
-        from easydb_server_spark.operators.gif import encode_gif_animated
-        from easydb_server_spark.operators.imagehash import keyframe_rows
-
-        pal = np.array(
-            [[(i * 16) % 256, (i * 37) % 256, (i * 73) % 256] for i in range(16)],
-            dtype=np.uint8,
-        )
-        out_cols = [
-            "item_id", "frame_idx", "scene_idx", "width", "height",
-            "mean_r_q4", "mean_g_q4", "mean_b_q4",
-        ]
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h, t = 12 + did % 5, 10 + did % 4, 6 + did % 4
-                y, x = np.mgrid[0:h, 0:w]
-                frames = []
-                for f in range(t):
-                    idx = (did * 3 + (f // 3) * 6 + y * 5 + x * 7) % 16
-                    idx[0, 0] = (idx[0, 0] + f % 3) % 16
-                    frames.append(pal[idx])
-                out.extend(
-                    keyframe_rows(did, encode_gif_animated(frames), max_hamming=3)
-                )
-            yield pd.DataFrame(out, columns=out_cols)
-
-    from easydb_server_spark.operators.imagehash import KEYFRAME_SCHEMA
-
-    return spread(d).mapInPandas(build, KEYFRAME_SCHEMA).orderBy(
-        "item_id", "frame_idx"
-    )
+    return _animated_clips(spark, sf_dir, keyframes=True).orderBy("item_id", "frame_idx")
 
 
 ORACLE_VIDEO_KEYFRAMES = f"""
@@ -6714,6 +6459,63 @@ ORDER BY item_id, frame_idx
 """
 
 
+def _scene_clip_sigs(spark: SparkSession, sf_dir: str, n_docs: int) -> DataFrame:
+    """Scene signatures (item_id, n_scenes, sig_seq, sig) of animated
+    GIF clips, built and signed in one Arrow stage. doc_id < 360 is a
+    6-frame clip of 3 two-frame scenes on ``base = doc_id % 30``, with
+    scene 1 shifted (+9) for variants vr = doc_id // 30 with vr%3 == 2;
+    doc_id in [360, n_docs) re-renders base (doc_id - 360) % 30 behind
+    1 + doc_id%2 prepended promo scenes."""
+    import pandas as pd
+
+    d = load(spark, sf_dir, "documents").where(F.col("doc_id") < n_docs).select("doc_id")
+    pal = _gif_palette()
+
+    def build(batches):
+        import numpy as np
+
+        from easydb_server_spark.operators.gif import encode_gif_animated
+        from easydb_server_spark.operators.imagehash import (
+            video_signature_row,
+        )
+
+        for pdf in batches:
+            out = []
+            for doc_id in pdf["doc_id"]:
+                did = int(doc_id)
+                if did < 360:
+                    base, vr, p = did % 30, did // 30, 0
+                else:
+                    base, vr, p = (did - 360) % 30, 0, 1 + did % 2
+                w, h = 12 + base % 5, 10 + base % 4
+                y, x = np.mgrid[0:h, 0:w]
+                frames = []
+                for f in range(2 * p):
+                    sp, j = f // 2, f % 2
+                    idx = (base * 5 + 7 + sp * 3 + y * 7 + x * 5) % 16
+                    idx[0, 0] = (idx[0, 0] + j) % 16
+                    frames.append(pal[idx])
+                for f in range(6):
+                    s, j = f // 2, f % 2
+                    shift9 = 9 if (s == 1 and vr % 3 == 2) else 0
+                    idx = (base * 5 + s * 6 + shift9 + y * 5 + x * 7) % 16
+                    idx[0, 0] = (idx[0, 0] + j) % 16
+                    frames.append(pal[idx])
+                # r16 (guide §4): sign right here — the encode →
+                # decode codec round-trip stays inside this one Arrow
+                # stage (video_signature_row IS the operator body),
+                # and the GIF blobs never cross the JVM↔Python
+                # boundary
+                out.append(video_signature_row(did, encode_gif_animated(frames)))
+            yield pd.DataFrame(
+                out, columns=["item_id", "n_scenes", "sig_seq", "sig"]
+            )
+
+    return spread(d).mapInPandas(
+        build, "item_id bigint, n_scenes int, sig_seq string, sig string"
+    )
+
+
 def q_dedup_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Clip-level video near-dup dedup end-to-end (the r14 verdict's
     ask #3): each doc_id < 360 becomes a 6-frame animated GIF of 3
@@ -6737,56 +6539,17 @@ def q_dedup_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dash-joined hex sequence + md5, the <=1-mismatch pair spec
     DIRECTLY (all-pairs over 360 clips — which also proves the banded
     candidates are pigeonhole-complete), and the reachability closure."""
-    import pandas as pd
     from pyspark.sql import Window
 
     from easydb_server_spark.operators.clusters import connected_components
     from easydb_server_spark.operators.imagehash import video_neardup_pairs
-
-    d = load(spark, sf_dir, "documents").where(F.col("doc_id") < 360).select("doc_id")
-
-    def build(batches):
-        import numpy as np
-
-        from easydb_server_spark.operators.gif import encode_gif_animated
-        from easydb_server_spark.operators.imagehash import video_signature_row
-
-        pal = np.array(
-            [[(i * 16) % 256, (i * 37) % 256, (i * 73) % 256] for i in range(16)],
-            dtype=np.uint8,
-        )
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                base, vr = did % 30, did // 30
-                w, h = 12 + base % 5, 10 + base % 4
-                y, x = np.mgrid[0:h, 0:w]
-                frames = []
-                for f in range(6):
-                    s, j = f // 2, f % 2
-                    shift9 = 9 if (s == 1 and vr % 3 == 2) else 0
-                    idx = (base * 5 + s * 6 + shift9 + y * 5 + x * 7) % 16
-                    idx[0, 0] = (idx[0, 0] + j) % 16
-                    frames.append(pal[idx])
-                # r16 (guide §4): sign right here — the encode →
-                # decode codec round-trip runs inside this one Arrow
-                # stage (video_signature_row IS the operator body),
-                # and the GIF blobs never cross the JVM↔Python
-                # boundary a second time
-                out.append(video_signature_row(did, encode_gif_animated(frames)))
-            yield pd.DataFrame(
-                out, columns=["item_id", "n_scenes", "sig_seq", "sig"]
-            )
 
     # persist the tiny signature table before any self-join (the
     # dedup_image_neardup rule): the banded join reads sigs on both
     # sides, the verify stage re-attaches sequences twice more, and
     # the final projection reads it again — without this the Arrow
     # codec stage re-decodes every clip per consumer.
-    sigs = spread(d).mapInPandas(
-        build, "item_id bigint, n_scenes int, sig_seq string, sig string"
-    ).localCheckpoint(eager=True)
+    sigs = _scene_clip_sigs(spark, sf_dir, 360).localCheckpoint(eager=True)
     pairs = video_neardup_pairs(sigs, max_diff=1).select(
         F.col("item_a").alias("doc_a"), F.col("item_b").alias("doc_b")
     )
@@ -6806,7 +6569,7 @@ def q_dedup_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_DEDUP_VIDEO_NEARDUP = """
+ORACLE_DEDUP_VIDEO_NEARDUP = f"""
 WITH RECURSIVE
 nvdocs AS (
   SELECT doc_id, doc_id % 30 AS base, doc_id // 30 AS vr,
@@ -6834,26 +6597,7 @@ nvgry AS (
     FROM nvsamp
   )
 ),
-nvbits AS (
-  SELECT l.doc_id, l.f, l.v * 8 + l.u AS i,
-         CASE WHEN l.gr < r.gr THEN 1 ELSE 0 END AS bit
-  FROM nvgry l JOIN nvgry r ON r.doc_id = l.doc_id AND r.f = l.f
-                           AND r.v = l.v AND r.u = l.u + 1
-  WHERE l.u < 8
-),
-nvbnd AS (
-  SELECT doc_id, f, i // 16 AS b,
-         CAST(SUM(CAST(bit AS BIGINT) << (i % 16)) AS BIGINT) AS bv
-  FROM nvbits GROUP BY doc_id, f, i // 16
-),
-nvsig AS (
-  SELECT doc_id, f,
-         MAX(CASE WHEN b = 0 THEN bv END) AS band0,
-         MAX(CASE WHEN b = 1 THEN bv END) AS band1,
-         MAX(CASE WHEN b = 2 THEN bv END) AS band2,
-         MAX(CASE WHEN b = 3 THEN bv END) AS band3
-  FROM nvbnd GROUP BY doc_id, f
-),
+{_frame_dhash_ctes("nv")},
 nvham AS (
   SELECT c.doc_id, c.f,
          printf('%04x%04x%04x%04x', c.band3, c.band2, c.band1, c.band0) AS ph,
@@ -6898,6 +6642,80 @@ ORDER BY item_id
 """
 
 
+def _tone_clips(
+    spark: SparkSession,
+    sf_dir: str,
+    n_docs: int,
+    n_src: int,
+    copies_end: int,
+    fingerprint: bool,
+) -> DataFrame:
+    """The audio-landmark corpus: each doc_id < n_docs becomes a clip of
+    frame-aligned bin-exact 64-sample tones at 8 kHz, amplitude
+    8000 + (doc_id % 5)*3000.
+
+    - doc_id < n_src: a source recording, 4 segments, segment k at bin
+      1 + (base*7 + k*11 + base*k*5) % 31 with base = doc_id % 30;
+    - doc_id < copies_end: a COPY of base (doc_id - n_src) % 30,
+      padded with 1 + doc_id%3 silence frames and, for odd doc_id,
+      trimmed to 3 segments;
+    - the rest: novel recording j = (doc_id - copies_end) % 20, 4
+      segments at bin 1 + (j*13 + 17k + 7jk) % 31.
+
+    Rows are (item_id, n_frames, peak_seq, fp) fingerprints when
+    ``fingerprint`` is set, else (item_id, payload) WAV blobs."""
+    import pandas as pd
+
+    d = load(spark, sf_dir, "documents").where(F.col("doc_id") < n_docs).select("doc_id")
+    schema = (
+        "item_id bigint, n_frames int, peak_seq string, fp string"
+        if fingerprint
+        else "item_id bigint, payload binary"
+    )
+    columns = [field.split()[0] for field in schema.split(", ")]
+
+    def build(batches):
+        import numpy as np
+
+        from easydb_server_spark.operators.audiofp import (
+            audio_fingerprint_row,
+        )
+        from easydb_server_spark.operators.wav import encode_wav
+
+        j = np.arange(64, dtype=np.float64)
+        for pdf in batches:
+            out = []
+            for doc_id in pdf["doc_id"]:
+                did = int(doc_id)
+                if did < n_src:
+                    base, off, nseg, novel = did % 30, 0, 4, None
+                elif did < copies_end:
+                    base = (did - n_src) % 30
+                    off = 1 + did % 3
+                    nseg = 3 if did % 2 == 1 else 4
+                    novel = None
+                else:
+                    base, off, nseg, novel = None, 0, 4, (did - copies_end) % 20
+                amp = float(8000 + (did % 5) * 3000)
+                segs = [np.zeros(64 * off, dtype=np.float64)] if off else []
+                for k in range(nseg):
+                    if novel is None:
+                        b = 1 + (base * 7 + k * 11 + base * k * 5) % 31
+                    else:
+                        b = 1 + (novel * 13 + 17 * k + 7 * novel * k) % 31
+                    segs.append(np.round(amp * np.sin(2.0 * np.pi * b * j / 64.0)))
+                wav = encode_wav(np.concatenate(segs).astype(np.int16), 8000)
+                # r16 (guide §4): fingerprint right here — the encode
+                # → decode codec round-trip stays inside this one
+                # Arrow stage (audio_fingerprint_row IS the operator
+                # body), and the WAV blobs never cross the JVM↔Python
+                # boundary
+                out.append(audio_fingerprint_row(did, wav, 64, 64) if fingerprint else (did, wav))
+            yield pd.DataFrame(out, columns=columns)
+
+    return d.mapInPandas(build, schema)
+
+
 def q_dedup_audio_landmark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SHIFT-robust audio near-dup matching (the r14 verdict's ask
     #4): landmark/constellation pairs per Wang 2003 — the exact-
@@ -6929,53 +6747,12 @@ def q_dedup_audio_landmark(spark: SparkSession, sf_dir: str) -> DataFrame:
     the threshold — the honest false-positive floor of landmark
     fingerprinting at min_shared=3, replayed identically by the
     oracle."""
-    import pandas as pd
-
     from easydb_server_spark.operators.audiofp import (
         audio_landmarks,
         landmark_matches,
     )
 
-    d = load(spark, sf_dir, "documents").where(F.col("doc_id") < 500).select("doc_id")
-
-    def build(batches):
-        import numpy as np
-
-        from easydb_server_spark.operators.audiofp import (
-            audio_fingerprint_row,
-        )
-        from easydb_server_spark.operators.wav import encode_wav
-
-        j = np.arange(64, dtype=np.float64)
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                if did < 400:
-                    base, off, nseg = did % 30, 0, 4
-                else:
-                    base = (did - 400) % 30
-                    off = 1 + did % 3
-                    nseg = 3 if did % 2 == 1 else 4
-                amp = float(8000 + (did % 5) * 3000)
-                segs = [np.zeros(64 * off, dtype=np.float64)] if off else []
-                for k in range(nseg):
-                    b = 1 + (base * 7 + k * 11 + base * k * 5) % 31
-                    segs.append(np.round(amp * np.sin(2.0 * np.pi * b * j / 64.0)))
-                s = np.concatenate(segs).astype(np.int16)
-                # r16 (guide §4): fingerprint right here — the encode
-                # → decode codec round-trip stays inside this one
-                # Arrow stage (audio_fingerprint_row IS the operator
-                # body), and the WAV blobs never cross the JVM↔Python
-                # boundary
-                out.append(audio_fingerprint_row(did, encode_wav(s, 8000), 64, 64))
-            yield pd.DataFrame(
-                out, columns=["item_id", "n_frames", "peak_seq", "fp"]
-            )
-
-    sigs = d.mapInPandas(
-        build, "item_id bigint, n_frames int, peak_seq string, fp string"
-    )
+    sigs = _tone_clips(spark, sf_dir, 500, 400, 500, fingerprint=True)
     # persist the landmark table before the self-join (the
     # dedup_image_neardup rule — never re-decode blobs per consumer)
     lms = audio_landmarks(sigs, fanout=3).localCheckpoint(eager=True)
@@ -6984,8 +6761,8 @@ def q_dedup_audio_landmark(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_DEDUP_AUDIO_LANDMARK = """
-WITH aldocs AS (
+# per-frame peak bins of the _tone_clips(.., 500, 400, 500, ..) corpus
+_AL_FRAMES_CTES = """aldocs AS (
   SELECT doc_id,
          CASE WHEN doc_id < 400 THEN doc_id % 30 ELSE (doc_id - 400) % 30 END AS base,
          CASE WHEN doc_id < 400 THEN 0 ELSE 1 + doc_id % 3 END AS off,
@@ -6999,7 +6776,11 @@ alframes AS (
                         + d.base * (tt.t - d.off) * 5) % 31
          END AS p
   FROM aldocs d, UNNEST(generate_series(0, d.off + d.nseg - 1)) tt(t)
-),
+)"""
+
+
+ORACLE_DEDUP_AUDIO_LANDMARK = f"""
+WITH {_AL_FRAMES_CTES},
 allm AS (
   SELECT DISTINCT a.doc_id, a.p * 1048576 + b.p * 1024 + (b.t - a.t) AS lm
   FROM alframes a JOIN alframes b
@@ -7034,53 +6815,12 @@ def q_audio_landmark_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     votes DESC, then smallest (match_id, offset) — so among a base's
     ~13 identical index clips the smallest doc_id wins on both
     engines."""
-    import pandas as pd
-
     from easydb_server_spark.operators.audiofp import (
         audio_landmarks_timed,
         landmark_search,
     )
 
-    d = load(spark, sf_dir, "documents").where(F.col("doc_id") < 500).select("doc_id")
-
-    def build(batches):
-        import numpy as np
-
-        from easydb_server_spark.operators.audiofp import (
-            audio_fingerprint_row,
-        )
-        from easydb_server_spark.operators.wav import encode_wav
-
-        j = np.arange(64, dtype=np.float64)
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                if did < 400:
-                    base, off, nseg = did % 30, 0, 4
-                else:
-                    base = (did - 400) % 30
-                    off = 1 + did % 3
-                    nseg = 3 if did % 2 == 1 else 4
-                amp = float(8000 + (did % 5) * 3000)
-                segs = [np.zeros(64 * off, dtype=np.float64)] if off else []
-                for k in range(nseg):
-                    b = 1 + (base * 7 + k * 11 + base * k * 5) % 31
-                    segs.append(np.round(amp * np.sin(2.0 * np.pi * b * j / 64.0)))
-                s = np.concatenate(segs).astype(np.int16)
-                # r16 (guide §4): fingerprint right here — the encode
-                # → decode codec round-trip stays inside this one
-                # Arrow stage (audio_fingerprint_row IS the operator
-                # body), and the WAV blobs never cross the JVM↔Python
-                # boundary
-                out.append(audio_fingerprint_row(did, encode_wav(s, 8000), 64, 64))
-            yield pd.DataFrame(
-                out, columns=["item_id", "n_frames", "peak_seq", "fp"]
-            )
-
-    sigs = d.mapInPandas(
-        build, "item_id bigint, n_frames int, peak_seq string, fp string"
-    )
+    sigs = _tone_clips(spark, sf_dir, 500, 400, 500, fingerprint=True)
     # persist once; both the index and the query side slice from it
     lms = audio_landmarks_timed(sigs, fanout=3).localCheckpoint(eager=True)
     return landmark_search(
@@ -7091,22 +6831,8 @@ def q_audio_landmark_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("query_id")
 
 
-ORACLE_AUDIO_LANDMARK_SEARCH = """
-WITH aldocs AS (
-  SELECT doc_id,
-         CASE WHEN doc_id < 400 THEN doc_id % 30 ELSE (doc_id - 400) % 30 END AS base,
-         CASE WHEN doc_id < 400 THEN 0 ELSE 1 + doc_id % 3 END AS off,
-         CASE WHEN doc_id >= 400 AND doc_id % 2 = 1 THEN 3 ELSE 4 END AS nseg
-  FROM documents WHERE doc_id < 500
-),
-alframes AS (
-  SELECT d.doc_id, tt.t,
-         CASE WHEN tt.t < d.off THEN 0
-              ELSE 1 + (d.base * 7 + (tt.t - d.off) * 11
-                        + d.base * (tt.t - d.off) * 5) % 31
-         END AS p
-  FROM aldocs d, UNNEST(generate_series(0, d.off + d.nseg - 1)) tt(t)
-),
+ORACLE_AUDIO_LANDMARK_SEARCH = f"""
+WITH {_AL_FRAMES_CTES},
 allmt AS (
   SELECT a.doc_id, a.t, a.p * 1048576 + b.p * 1024 + (b.t - a.t) AS lm
   FROM alframes a JOIN alframes b
@@ -7161,62 +6887,12 @@ def q_video_landmark_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical plain members). The oracle replays frame arithmetic,
     scene detection, the md5 scene landmarks, vote cells, and the
     ROW_NUMBER tiebreak in closed form."""
-    import pandas as pd
-
     from easydb_server_spark.operators.audiofp import landmark_search
     from easydb_server_spark.operators.imagehash import (
         scene_landmarks,
     )
 
-    d = load(spark, sf_dir, "documents").where(F.col("doc_id") < 440).select("doc_id")
-
-    def build(batches):
-        import numpy as np
-
-        from easydb_server_spark.operators.gif import encode_gif_animated
-        from easydb_server_spark.operators.imagehash import (
-            video_signature_row,
-        )
-
-        pal = np.array(
-            [[(i * 16) % 256, (i * 37) % 256, (i * 73) % 256] for i in range(16)],
-            dtype=np.uint8,
-        )
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                if did < 360:
-                    base, vr, p = did % 30, did // 30, 0
-                else:
-                    base, vr, p = (did - 360) % 30, 0, 1 + did % 2
-                w, h = 12 + base % 5, 10 + base % 4
-                y, x = np.mgrid[0:h, 0:w]
-                frames = []
-                for f in range(2 * p):
-                    sp, j = f // 2, f % 2
-                    idx = (base * 5 + 7 + sp * 3 + y * 7 + x * 5) % 16
-                    idx[0, 0] = (idx[0, 0] + j) % 16
-                    frames.append(pal[idx])
-                for f in range(6):
-                    s, j = f // 2, f % 2
-                    shift9 = 9 if (s == 1 and vr % 3 == 2) else 0
-                    idx = (base * 5 + s * 6 + shift9 + y * 5 + x * 7) % 16
-                    idx[0, 0] = (idx[0, 0] + j) % 16
-                    frames.append(pal[idx])
-                # r16 (guide §4): sign right here — the encode →
-                # decode codec round-trip stays inside this one Arrow
-                # stage (video_signature_row IS the operator body),
-                # and the GIF blobs never cross the JVM↔Python
-                # boundary
-                out.append(video_signature_row(did, encode_gif_animated(frames)))
-            yield pd.DataFrame(
-                out, columns=["item_id", "n_scenes", "sig_seq", "sig"]
-            )
-
-    sigs = spread(d).mapInPandas(
-        build, "item_id bigint, n_scenes int, sig_seq string, sig string"
-    )
+    sigs = _scene_clip_sigs(spark, sf_dir, 440)
     # persist once; index and query sides both slice from it
     lms = scene_landmarks(sigs, fanout=3).localCheckpoint(eager=True)
     return landmark_search(
@@ -7227,7 +6903,7 @@ def q_video_landmark_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("query_id")
 
 
-ORACLE_VIDEO_LANDMARK_SEARCH = """
+ORACLE_VIDEO_LANDMARK_SEARCH = f"""
 WITH vldocs AS (
   SELECT doc_id,
          CASE WHEN doc_id < 360 THEN doc_id % 30 ELSE (doc_id - 360) % 30 END AS base,
@@ -7265,26 +6941,7 @@ vlgry AS (
     FROM vlsamp
   )
 ),
-vlbits AS (
-  SELECT l.doc_id, l.f, l.v * 8 + l.u AS i,
-         CASE WHEN l.gr < r.gr THEN 1 ELSE 0 END AS bit
-  FROM vlgry l JOIN vlgry r ON r.doc_id = l.doc_id AND r.f = l.f
-                           AND r.v = l.v AND r.u = l.u + 1
-  WHERE l.u < 8
-),
-vlbnd AS (
-  SELECT doc_id, f, i // 16 AS b,
-         CAST(SUM(CAST(bit AS BIGINT) << (i % 16)) AS BIGINT) AS bv
-  FROM vlbits GROUP BY doc_id, f, i // 16
-),
-vlsig AS (
-  SELECT doc_id, f,
-         MAX(CASE WHEN b = 0 THEN bv END) AS band0,
-         MAX(CASE WHEN b = 1 THEN bv END) AS band1,
-         MAX(CASE WHEN b = 2 THEN bv END) AS band2,
-         MAX(CASE WHEN b = 3 THEN bv END) AS band3
-  FROM vlbnd GROUP BY doc_id, f
-),
+{_frame_dhash_ctes("vl")},
 vlham AS (
   SELECT c.doc_id, c.f,
          printf('%04x%04x%04x%04x', c.band3, c.band2, c.band1, c.band0) AS ph,
@@ -7356,45 +7013,7 @@ def _phash_fixture_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (0,0)+8 single-pixel edit) plus the 80 queries (doc_id in
     [400, 480), (1,1)+4 edit), persisted once so index and query sides
     slice from one table (the signatures-before-self-join rule)."""
-    import pandas as pd
-
-    from easydb_server_spark.operators.imagehash import DHASH_SCHEMA
-
-    d = load(spark, sf_dir, "documents").where(F.col("doc_id") < 480).select("doc_id")
-
-    def build(batches):
-        import numpy as np
-
-        from easydb_server_spark.operators.gif import encode_gif
-        from easydb_server_spark.operators.imagehash import image_dhash_row
-
-        pal = np.array(
-            [[(i * 16) % 256, (i * 37) % 256, (i * 73) % 256] for i in range(16)],
-            dtype=np.uint8,
-        )
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                base = did % 40 if did < 400 else (did - 400) % 40
-                w, h = 12 + base % 5, 10 + base % 4
-                y, x = np.mgrid[0:h, 0:w]
-                idx = (base * 3 + y * 5 + x * 7) % 16
-                if did < 400 and did % 2 == 1:
-                    idx[0, 0] = (idx[0, 0] + 8) % 16
-                elif did >= 400:
-                    idx[1, 1] = (idx[1, 1] + 4) % 16
-                # r16 (guide §4): hash right here — the encode →
-                # decode codec round-trip stays inside this one Arrow
-                # stage (image_dhash_row IS the operator body), and
-                # the GIF blobs never cross the JVM↔Python boundary
-                out.append(image_dhash_row(did, encode_gif(pal[idx])))
-            yield pd.DataFrame(
-                out,
-                columns=["item_id", "band0", "band1", "band2", "band3", "phash"],
-            )
-
-    return d.mapInPandas(build, DHASH_SCHEMA).localCheckpoint(eager=True)
+    return _image_sigs(spark, sf_dir, 480).localCheckpoint(eager=True)
 
 
 def q_image_phash_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7559,6 +7178,7 @@ def q_curation_pipeline_mm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from easydb_server_spark.operators.imagehash import video_neardup_pairs
 
     d = load(spark, sf_dir, "documents").where(F.col("doc_id") < 120).select("doc_id")
+    pal = _gif_palette()
 
     def build_sign(batches):
         import numpy as np
@@ -7568,10 +7188,6 @@ def q_curation_pipeline_mm(spark: SparkSession, sf_dir: str) -> DataFrame:
         from easydb_server_spark.operators.imagehash import video_signature_row
         from easydb_server_spark.operators.wav import encode_wav
 
-        pal = np.array(
-            [[(i * 16) % 256, (i * 37) % 256, (i * 73) % 256] for i in range(16)],
-            dtype=np.uint8,
-        )
         j = np.arange(256, dtype=np.float64)
         for pdf in batches:
             out = []
@@ -7693,7 +7309,7 @@ def q_curation_pipeline_mm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_CURATION_PIPELINE_MM = """
+ORACLE_CURATION_PIPELINE_MM = f"""
 WITH RECURSIVE
 mmdocs AS (
   SELECT doc_id, doc_id % 30 AS base, doc_id // 30 AS vr,
@@ -7724,26 +7340,7 @@ mmgry AS (
     FROM mmsamp
   )
 ),
-mmbits AS (
-  SELECT l.doc_id, l.f, l.v * 8 + l.u AS i,
-         CASE WHEN l.gr < r.gr THEN 1 ELSE 0 END AS bit
-  FROM mmgry l JOIN mmgry r ON r.doc_id = l.doc_id AND r.f = l.f
-                           AND r.v = l.v AND r.u = l.u + 1
-  WHERE l.u < 8
-),
-mmbnd AS (
-  SELECT doc_id, f, i // 16 AS b,
-         CAST(SUM(CAST(bit AS BIGINT) << (i % 16)) AS BIGINT) AS bv
-  FROM mmbits GROUP BY doc_id, f, i // 16
-),
-mmsig AS (
-  SELECT doc_id, f,
-         MAX(CASE WHEN b = 0 THEN bv END) AS band0,
-         MAX(CASE WHEN b = 1 THEN bv END) AS band1,
-         MAX(CASE WHEN b = 2 THEN bv END) AS band2,
-         MAX(CASE WHEN b = 3 THEN bv END) AS band3
-  FROM mmbnd GROUP BY doc_id, f
-),
+{_frame_dhash_ctes("mm")},
 mmham AS (
   SELECT c.doc_id, c.f,
          printf('%04x%04x%04x%04x', c.band3, c.band2, c.band1, c.band0) AS ph,
@@ -7842,53 +7439,12 @@ def q_audio_landmark_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     once, and the whole ordering is deterministic on both engines.
     The oracle reuses the search oracle's CTE chain verbatim with the
     two-window ranking tail."""
-    import pandas as pd
-
     from easydb_server_spark.operators.audiofp import (
         audio_landmarks_timed,
         landmark_search_topk,
     )
 
-    d = load(spark, sf_dir, "documents").where(F.col("doc_id") < 500).select("doc_id")
-
-    def build(batches):
-        import numpy as np
-
-        from easydb_server_spark.operators.audiofp import (
-            audio_fingerprint_row,
-        )
-        from easydb_server_spark.operators.wav import encode_wav
-
-        j = np.arange(64, dtype=np.float64)
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                if did < 400:
-                    base, off, nseg = did % 30, 0, 4
-                else:
-                    base = (did - 400) % 30
-                    off = 1 + did % 3
-                    nseg = 3 if did % 2 == 1 else 4
-                amp = float(8000 + (did % 5) * 3000)
-                segs = [np.zeros(64 * off, dtype=np.float64)] if off else []
-                for k in range(nseg):
-                    b = 1 + (base * 7 + k * 11 + base * k * 5) % 31
-                    segs.append(np.round(amp * np.sin(2.0 * np.pi * b * j / 64.0)))
-                s = np.concatenate(segs).astype(np.int16)
-                # r16 (guide §4): fingerprint right here — the encode
-                # → decode codec round-trip stays inside this one
-                # Arrow stage (audio_fingerprint_row IS the operator
-                # body), and the WAV blobs never cross the JVM↔Python
-                # boundary
-                out.append(audio_fingerprint_row(did, encode_wav(s, 8000), 64, 64))
-            yield pd.DataFrame(
-                out, columns=["item_id", "n_frames", "peak_seq", "fp"]
-            )
-
-    sigs = d.mapInPandas(
-        build, "item_id bigint, n_frames int, peak_seq string, fp string"
-    )
+    sigs = _tone_clips(spark, sf_dir, 500, 400, 500, fingerprint=True)
     # persist once; both the index and the query side slice from it
     lms = audio_landmarks_timed(sigs, fanout=3).localCheckpoint(eager=True)
     return landmark_search_topk(
@@ -7955,61 +7511,14 @@ def q_audio_landmark_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     durable bucketed-table path (write/append/compact + the
     exchange-free probe plan) is pytest-locked
     (tests/test_audiofp.py::test_landmark_index_lifecycle*)."""
-    import pandas as pd
-
     from easydb_server_spark.operators.audiofp import (
         audio_landmarks_timed,
         incremental_landmark_admit,
     )
 
-    d = load(spark, sf_dir, "documents").where(F.col("doc_id") < 500).select("doc_id")
-
-    def build(batches):
-        import numpy as np
-
-        from easydb_server_spark.operators.audiofp import (
-            audio_fingerprint_row,
-        )
-        from easydb_server_spark.operators.wav import encode_wav
-
-        j = np.arange(64, dtype=np.float64)
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                if did < 360:
-                    base, off, nseg, novel = did % 30, 0, 4, None
-                elif did < 460:
-                    base = (did - 360) % 30
-                    off = 1 + did % 3
-                    nseg = 3 if did % 2 == 1 else 4
-                    novel = None
-                else:
-                    base, off, nseg, novel = None, 0, 4, (did - 460) % 20
-                amp = float(8000 + (did % 5) * 3000)
-                segs = [np.zeros(64 * off, dtype=np.float64)] if off else []
-                for k in range(nseg):
-                    if novel is None:
-                        b = 1 + (base * 7 + k * 11 + base * k * 5) % 31
-                    else:
-                        b = 1 + (novel * 13 + 17 * k + 7 * novel * k) % 31
-                    segs.append(np.round(amp * np.sin(2.0 * np.pi * b * j / 64.0)))
-                s = np.concatenate(segs).astype(np.int16)
-                # r16 (guide §4): fingerprint right here — the encode
-                # → decode codec round-trip stays inside this one
-                # Arrow stage (audio_fingerprint_row IS the operator
-                # body), and the WAV blobs never cross the JVM↔Python
-                # boundary
-                out.append(audio_fingerprint_row(did, encode_wav(s, 8000), 64, 64))
-            yield pd.DataFrame(
-                out, columns=["item_id", "n_frames", "peak_seq", "fp"]
-            )
-
     # r17 A/B note: spread() measured WORSE here (1.68 vs 1.45
     # interleaved) — same negative result as the r16 audio sites
-    sigs = d.mapInPandas(
-        build, "item_id bigint, n_frames int, peak_seq string, fp string"
-    )
+    sigs = _tone_clips(spark, sf_dir, 500, 360, 460, fingerprint=True)
     # persist once; corpus and batch sides slice from it
     # r17 (guide §5, the BPE lazy-checkpoint play): eager=False fuses
     # the checkpoint materialization into the admit plan's first pass
@@ -8025,18 +7534,21 @@ def q_audio_landmark_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("item_id")
 
 
-ORACLE_AUDIO_LANDMARK_INCREMENTAL = """
-WITH ildocs AS (
+def _novel_landmark_ctes(p: str, n_docs: int, n_src: int, copies_end: int, nv: str) -> str:
+    """{p}docs / {p}frames / {p}lmt: the timed landmarks of the
+    _tone_clips(n_docs, n_src, copies_end) corpus; ``nv`` is the novel
+    recipe index as SQL."""
+    return f"""{p}docs AS (
   SELECT doc_id,
-         CASE WHEN doc_id < 360 THEN doc_id % 30
-              WHEN doc_id < 460 THEN (doc_id - 360) % 30
+         CASE WHEN doc_id < {n_src} THEN doc_id % 30
+              WHEN doc_id < {copies_end} THEN (doc_id - {n_src}) % 30
               ELSE NULL END AS base,
-         CASE WHEN doc_id >= 460 THEN (doc_id - 460) % 20 ELSE NULL END AS nv,
-         CASE WHEN doc_id >= 360 AND doc_id < 460 THEN 1 + doc_id % 3 ELSE 0 END AS off,
-         CASE WHEN doc_id >= 360 AND doc_id < 460 AND doc_id % 2 = 1 THEN 3 ELSE 4 END AS nseg
-  FROM documents WHERE doc_id < 500
+         CASE WHEN doc_id >= {copies_end} THEN {nv} ELSE NULL END AS nv,
+         CASE WHEN doc_id >= {n_src} AND doc_id < {copies_end} THEN 1 + doc_id % 3 ELSE 0 END AS off,
+         CASE WHEN doc_id >= {n_src} AND doc_id < {copies_end} AND doc_id % 2 = 1 THEN 3 ELSE 4 END AS nseg
+  FROM documents WHERE doc_id < {n_docs}
 ),
-ilframes AS (
+{p}frames AS (
   SELECT d.doc_id, tt.t,
          CASE WHEN tt.t < d.off THEN 0
               WHEN d.nv IS NULL THEN
@@ -8044,51 +7556,68 @@ ilframes AS (
                      + d.base * (tt.t - d.off) * 5) % 31
               ELSE 1 + (d.nv * 13 + 17 * tt.t + 7 * d.nv * tt.t) % 31
          END AS p
-  FROM ildocs d, UNNEST(generate_series(0, d.off + d.nseg - 1)) tt(t)
+  FROM {p}docs d, UNNEST(generate_series(0, d.off + d.nseg - 1)) tt(t)
 ),
-illmt AS (
+{p}lmt AS (
   SELECT a.doc_id, a.t, a.p * 1048576 + b.p * 1024 + (b.t - a.t) AS lm
-  FROM ilframes a JOIN ilframes b
+  FROM {p}frames a JOIN {p}frames b
     ON b.doc_id = a.doc_id AND b.t - a.t BETWEEN 1 AND 3
-),
-ilidx AS (SELECT doc_id, t, lm FROM illmt WHERE doc_id < 360),
-ilidxkeep AS (
-  SELECT doc_id, t, lm FROM ilidx
+)"""
+
+
+def _corpus_vote_ctes(idx: str, p: str, lmt: str, lo: int) -> str:
+    """{idx}keep / {p}cells / {p}best: offset voting of the
+    ``doc_id >= lo`` rows of ``lmt`` against the index CTE ``idx``
+    (stop-landmark cap 48, min_votes 3), best cell per item as rn = 1."""
+    return f"""{idx}keep AS (
+  SELECT doc_id, t, lm FROM {idx}
   WHERE lm IN (
-    SELECT lm FROM (SELECT DISTINCT doc_id, lm FROM ilidx)
+    SELECT lm FROM (SELECT DISTINCT doc_id, lm FROM {idx})
     GROUP BY lm HAVING COUNT(*) <= 48
   )
 ),
-ilcells AS (
+{p}cells AS (
   SELECT q.doc_id AS item_id, x.doc_id AS match_id,
          x.t - q.t AS off_cell, CAST(COUNT(*) AS INT) AS votes
-  FROM (SELECT doc_id, t, lm FROM illmt WHERE doc_id >= 360) q
-  JOIN ilidxkeep x ON x.lm = q.lm
+  FROM (SELECT doc_id, t, lm FROM {lmt} WHERE doc_id >= {lo}) q
+  JOIN {idx}keep x ON x.lm = q.lm
   GROUP BY 1, 2, 3 HAVING COUNT(*) >= 3
 ),
-ilbest AS (
+{p}best AS (
   SELECT item_id, match_id AS corpus_match, votes AS corpus_votes,
          ROW_NUMBER() OVER (
            PARTITION BY item_id ORDER BY votes DESC, match_id, off_cell
          ) AS rn
-  FROM ilcells
+  FROM {p}cells
+)"""
+
+
+def _batch_selfmatch_ctes(p: str) -> str:
+    """{p}keep / {p}pairs / {p}first: in-batch landmark matching over
+    the distinct (doc_id, lm) CTE {p}lm; first = smallest matching id."""
+    return f"""{p}keep AS (
+  SELECT doc_id, lm FROM {p}lm
+  WHERE lm IN (SELECT lm FROM {p}lm GROUP BY lm HAVING COUNT(*) <= 48)
 ),
+{p}pairs AS (
+  SELECT x.doc_id AS item_a, y.doc_id AS item_b
+  FROM {p}keep x JOIN {p}keep y ON y.lm = x.lm AND x.doc_id < y.doc_id
+  GROUP BY 1, 2 HAVING COUNT(*) >= 3
+),
+{p}first AS (
+  SELECT item_b AS item_id, MIN(item_a) AS batch_match
+  FROM {p}pairs GROUP BY item_b
+)"""
+
+
+ORACLE_AUDIO_LANDMARK_INCREMENTAL = f"""
+WITH {_novel_landmark_ctes("il", 500, 360, 460, "(doc_id - 460) % 20")},
+ilidx AS (SELECT doc_id, t, lm FROM illmt WHERE doc_id < 360),
+{_corpus_vote_ctes("ilidx", "il", "illmt", 360)},
 ilblm AS (
   SELECT DISTINCT doc_id, lm FROM illmt WHERE doc_id >= 360
 ),
-ilbkeep AS (
-  SELECT doc_id, lm FROM ilblm
-  WHERE lm IN (SELECT lm FROM ilblm GROUP BY lm HAVING COUNT(*) <= 48)
-),
-ilbpairs AS (
-  SELECT x.doc_id AS item_a, y.doc_id AS item_b
-  FROM ilbkeep x JOIN ilbkeep y ON y.lm = x.lm AND x.doc_id < y.doc_id
-  GROUP BY 1, 2 HAVING COUNT(*) >= 3
-),
-ilbfirst AS (
-  SELECT item_b AS item_id, MIN(item_a) AS batch_match
-  FROM ilbpairs GROUP BY item_b
-)
+{_batch_selfmatch_ctes("ilb")}
 SELECT d.doc_id AS item_id,
        b.corpus_match, b.corpus_votes, f.batch_match,
        b.corpus_match IS NULL AND f.batch_match IS NULL AS admitted
@@ -8124,8 +7653,6 @@ def q_stream_landmark_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    import pandas as pd
-
     from easydb_server_spark.streaming.ingest import (
         AUDIO_BLOB_SCHEMA,
         stream_landmark_ingest,
@@ -8143,40 +7670,7 @@ def q_stream_landmark_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     in_dir = os.path.join(work, "in")
     os.makedirs(in_dir)
 
-    d = load(spark, sf_dir, "documents").where(F.col("doc_id") < 120).select("doc_id")
-
-    def build(batches):
-        import numpy as np
-
-        from easydb_server_spark.operators.wav import encode_wav
-
-        j = np.arange(64, dtype=np.float64)
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                if did < 60:
-                    base, off, nseg, novel = did % 30, 0, 4, None
-                elif did < 100:
-                    base = (did - 60) % 30
-                    off = 1 + did % 3
-                    nseg = 3 if did % 2 == 1 else 4
-                    novel = None
-                else:
-                    base, off, nseg, novel = None, 0, 4, did - 100
-                amp = float(8000 + (did % 5) * 3000)
-                segs = [np.zeros(64 * off, dtype=np.float64)] if off else []
-                for k in range(nseg):
-                    if novel is None:
-                        b = 1 + (base * 7 + k * 11 + base * k * 5) % 31
-                    else:
-                        b = 1 + (novel * 13 + 17 * k + 7 * novel * k) % 31
-                    segs.append(np.round(amp * np.sin(2.0 * np.pi * b * j / 64.0)))
-                s = np.concatenate(segs).astype(np.int16)
-                out.append((did, encode_wav(s, 8000)))
-            yield pd.DataFrame(out, columns=["item_id", "payload"])
-
-    blobs = d.mapInPandas(build, "item_id bigint, payload binary").collect()
+    blobs = _tone_clips(spark, sf_dir, 120, 60, 100, fingerprint=False).collect()
 
     import pyarrow as pa
     import pyarrow.parquet as papq
@@ -8227,47 +7721,11 @@ def q_stream_landmark_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Replays BOTH micro-batch generations of the streaming ingest: the
 # sl* CTE chain is the il* incremental chain with the index defined as
 # batch 0's ADMITTED clips instead of a static corpus.
-ORACLE_STREAM_LANDMARK_INGEST = """
-WITH sldocs AS (
-  SELECT doc_id,
-         CASE WHEN doc_id < 60 THEN doc_id % 30
-              WHEN doc_id < 100 THEN (doc_id - 60) % 30
-              ELSE NULL END AS base,
-         CASE WHEN doc_id >= 100 THEN doc_id - 100 ELSE NULL END AS nv,
-         CASE WHEN doc_id >= 60 AND doc_id < 100 THEN 1 + doc_id % 3 ELSE 0 END AS off,
-         CASE WHEN doc_id >= 60 AND doc_id < 100 AND doc_id % 2 = 1 THEN 3 ELSE 4 END AS nseg
-  FROM documents WHERE doc_id < 120
-),
-slframes AS (
-  SELECT d.doc_id, tt.t,
-         CASE WHEN tt.t < d.off THEN 0
-              WHEN d.nv IS NULL THEN
-                1 + (d.base * 7 + (tt.t - d.off) * 11
-                     + d.base * (tt.t - d.off) * 5) % 31
-              ELSE 1 + (d.nv * 13 + 17 * tt.t + 7 * d.nv * tt.t) % 31
-         END AS p
-  FROM sldocs d, UNNEST(generate_series(0, d.off + d.nseg - 1)) tt(t)
-),
-sllmt AS (
-  SELECT a.doc_id, a.t, a.p * 1048576 + b.p * 1024 + (b.t - a.t) AS lm
-  FROM slframes a JOIN slframes b
-    ON b.doc_id = a.doc_id AND b.t - a.t BETWEEN 1 AND 3
-),
+ORACLE_STREAM_LANDMARK_INGEST = f"""
+WITH {_novel_landmark_ctes("sl", 120, 60, 100, "doc_id - 100")},
 -- batch 0: empty corpus, in-batch matching only
 b0lm AS (SELECT DISTINCT doc_id, lm FROM sllmt WHERE doc_id < 60),
-b0keep AS (
-  SELECT doc_id, lm FROM b0lm
-  WHERE lm IN (SELECT lm FROM b0lm GROUP BY lm HAVING COUNT(*) <= 48)
-),
-b0pairs AS (
-  SELECT x.doc_id AS item_a, y.doc_id AS item_b
-  FROM b0keep x JOIN b0keep y ON y.lm = x.lm AND x.doc_id < y.doc_id
-  GROUP BY 1, 2 HAVING COUNT(*) >= 3
-),
-b0first AS (
-  SELECT item_b AS item_id, MIN(item_a) AS batch_match
-  FROM b0pairs GROUP BY item_b
-),
+{_batch_selfmatch_ctes("b0")},
 b0rows AS (
   SELECT d.doc_id AS item_id,
          CAST(NULL AS BIGINT) AS corpus_match,
@@ -8283,41 +7741,9 @@ slidx AS (
   SELECT l.doc_id, l.t, l.lm FROM sllmt l
   JOIN b0rows r ON r.item_id = l.doc_id AND r.admitted
 ),
-slidxkeep AS (
-  SELECT doc_id, t, lm FROM slidx
-  WHERE lm IN (
-    SELECT lm FROM (SELECT DISTINCT doc_id, lm FROM slidx)
-    GROUP BY lm HAVING COUNT(*) <= 48
-  )
-),
-b1cells AS (
-  SELECT q.doc_id AS item_id, x.doc_id AS match_id,
-         x.t - q.t AS off_cell, CAST(COUNT(*) AS INT) AS votes
-  FROM (SELECT doc_id, t, lm FROM sllmt WHERE doc_id >= 60) q
-  JOIN slidxkeep x ON x.lm = q.lm
-  GROUP BY 1, 2, 3 HAVING COUNT(*) >= 3
-),
-b1best AS (
-  SELECT item_id, match_id AS corpus_match, votes AS corpus_votes,
-         ROW_NUMBER() OVER (
-           PARTITION BY item_id ORDER BY votes DESC, match_id, off_cell
-         ) AS rn
-  FROM b1cells
-),
+{_corpus_vote_ctes("slidx", "b1", "sllmt", 60)},
 b1lm AS (SELECT DISTINCT doc_id, lm FROM sllmt WHERE doc_id >= 60),
-b1keep AS (
-  SELECT doc_id, lm FROM b1lm
-  WHERE lm IN (SELECT lm FROM b1lm GROUP BY lm HAVING COUNT(*) <= 48)
-),
-b1pairs AS (
-  SELECT x.doc_id AS item_a, y.doc_id AS item_b
-  FROM b1keep x JOIN b1keep y ON y.lm = x.lm AND x.doc_id < y.doc_id
-  GROUP BY 1, 2 HAVING COUNT(*) >= 3
-),
-b1first AS (
-  SELECT item_b AS item_id, MIN(item_a) AS batch_match
-  FROM b1pairs GROUP BY item_b
-),
+{_batch_selfmatch_ctes("b1")},
 b1rows AS (
   SELECT d.doc_id AS item_id,
          b.corpus_match, b.corpus_votes, f.batch_match,

@@ -30,6 +30,7 @@ import time
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from easydb_server_spark.queries.timeseries import SESSION_ISLANDS_SQL, session_summary
 from easydb_server_spark.streaming.events import run_to_memory
 
 
@@ -115,50 +116,26 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     session is emitted once the 30 min watermark passes its end (last
     event + 5 min gap) and its state is evicted. Oracle = batch
     gaps-and-islands restricted to watermark-closed sessions."""
-    agg = (
-        _events_stream(spark, sf_dir)
-        .withWatermark("ts", "30 minutes")
-        .groupBy(F.session_window("ts", "5 minutes").alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("session_value"))
-        .select(
-            "user_id",
-            F.col("w.start").cast("string").alias("session_start"),
-            "n_events",
-            "session_value",
-        )
-    )
+    agg = session_summary(_events_stream(spark, sf_dir).withWatermark("ts", "30 minutes"))
     name = f"stream_session_{int(time.time() * 1000)}"
     run_to_memory(agg, name, output_mode="append")
     return spark.table(name).orderBy("user_id", "session_start")
 
 
-ORACLE_STREAM_SESSION = """
+ORACLE_STREAM_SESSION = (
+    """
 WITH wm AS (SELECT date_trunc('milliseconds', MAX(ts)) - INTERVAL 30 MINUTE AS w FROM events),
 flagged AS (
   SELECT user_id, ts, value,
          -- STRICT >: Spark's session_window merges an exactly-at-gap
          -- event (same boundary fact as the batch oracle,
          -- queries/timeseries.py ORACLE_TS_SESSION)
-         CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) > INTERVAL 5 MINUTE
-              OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-),
-islands AS (
-  SELECT user_id, ts, value,
-         SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts
-                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-  FROM flagged
-)
-SELECT user_id,
-       CAST(MIN(ts) AS VARCHAR) AS session_start,
-       COUNT(*) AS n_events,
-       ROUND(SUM(value), 2) AS session_value
-FROM islands
-GROUP BY user_id, session_id
-HAVING MAX(ts) + INTERVAL 5 MINUTE <= (SELECT w FROM wm)
+"""
+    + SESSION_ISLANDS_SQL
+    + """HAVING MAX(ts) + INTERVAL 5 MINUTE <= (SELECT w FROM wm)
 ORDER BY user_id, session_start
 """
+)
 
 
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -66,13 +66,12 @@ ORDER BY window_start
 """
 
 
-def q_ts_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session windows (5-min inactivity gap) per user — Spark's
-    session_window in batch mode; oracle is the classic
-    gaps-and-islands (lag + running flag sum)."""
-    e = load(spark, sf_dir, "events")
+def session_summary(events: DataFrame) -> DataFrame:
+    """(user_id, session_start, n_events, session_value) per 5-minute
+    inactivity-gap session_window; batch or streaming ``events``. The
+    oracle side is SESSION_ISLANDS_SQL."""
     return (
-        e.groupBy(F.session_window("ts", "5 minutes").alias("w"), "user_id")
+        events.groupBy(F.session_window("ts", "5 minutes").alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("session_value"))
         .select(
             "user_id",
@@ -80,18 +79,13 @@ def q_ts_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
             "session_value",
         )
-        .orderBy("user_id", "session_start")
     )
 
 
-ORACLE_TS_SESSION = """
-WITH flagged AS (
-  SELECT user_id, ts, value,
-         -- STRICT >: Spark's session_window MERGES an event landing
-         -- exactly gap after the previous one (measured on 4.1 — the
-         -- [start, end) doc reading is wrong at the boundary; caught
-         -- by the events regeneration differential's exact-gap rows)
-         CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) > INTERVAL 5 MINUTE
+# gaps-and-islands replay of session_summary over `events`: closes the
+# caller's `flagged AS (SELECT user_id, ts, value,` CTE and groups the
+# islands; the caller adds any HAVING and the ORDER BY
+SESSION_ISLANDS_SQL = """         CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) > INTERVAL 5 MINUTE
               OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
               THEN 1 ELSE 0 END AS new_session
   FROM events
@@ -108,8 +102,28 @@ SELECT user_id,
        ROUND(SUM(value), 2) AS session_value
 FROM islands
 GROUP BY user_id, session_id
-ORDER BY user_id, session_start
 """
+
+
+def q_ts_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Session windows (5-min inactivity gap) per user — Spark's
+    session_window in batch mode; oracle is the classic
+    gaps-and-islands (lag + running flag sum)."""
+    return session_summary(load(spark, sf_dir, "events")).orderBy("user_id", "session_start")
+
+
+ORACLE_TS_SESSION = (
+    """
+WITH flagged AS (
+  SELECT user_id, ts, value,
+         -- STRICT >: Spark's session_window MERGES an event landing
+         -- exactly gap after the previous one (measured on 4.1 — the
+         -- [start, end) doc reading is wrong at the boundary; caught
+         -- by the events regeneration differential's exact-gap rows)
+"""
+    + SESSION_ISLANDS_SQL
+    + "ORDER BY user_id, session_start\n"
+)
 
 
 def q_ts_date_bin(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -177,24 +191,33 @@ ORDER BY user_id
 """
 
 
-def q_ts_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of (point-in-time) join: each purchase event picks up the
-    most recent preceding click by the same user — the union+window
-    composition from operators/asof.py (one shuffle, no range
-    explosion). Oracle: DuckDB's native ASOF LEFT JOIN."""
+def _purchase_click_asof(spark: SparkSession, sf_dir: str, **asof_kw) -> DataFrame:
+    """Each purchase event (p_id, user_id, ts) as-of joined to the same
+    user's click events (quote columns c_event_id, c_value) through
+    operators/asof.asof_join; ``asof_kw`` picks direction, tolerance
+    and tiebreak."""
     from easydb_server_spark.operators.asof import asof_join
 
     e = load(spark, sf_dir, "events")
     purchases = e.where(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
     clicks = e.where(F.col("event_type") == "click").select("user_id", "ts", "event_id", "value")
-    joined = asof_join(
+    return asof_join(
         purchases.withColumnRenamed("event_id", "p_id"),
         clicks.withColumnRenamed("event_id", "c_event_id").withColumnRenamed("value", "c_value"),
         on="user_id",
         probe_ts="ts",
         quote_ts="ts",
         quote_cols=["c_event_id", "c_value"],
+        **asof_kw,
     )
+
+
+def q_ts_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """As-of (point-in-time) join: each purchase event picks up the
+    most recent preceding click by the same user — the union+window
+    composition from operators/asof.py (one shuffle, no range
+    explosion). Oracle: DuckDB's native ASOF LEFT JOIN."""
+    joined = _purchase_click_asof(spark, sf_dir)
     return joined.select(
         "p_id",
         "user_id",
@@ -529,21 +552,8 @@ def q_ts_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     union+window plan as the backward entry, window ordered ts DESC.
     Unmatched purchases keep NULL click columns (left semantics); the
     oracle is the plain LEFT-join + row_number replay."""
-    from easydb_server_spark.operators.asof import asof_join
-
-    e = load(spark, sf_dir, "events")
-    purchases = e.where(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
-    clicks = e.where(F.col("event_type") == "click").select("user_id", "ts", "event_id", "value")
-    joined = asof_join(
-        purchases.withColumnRenamed("event_id", "p_id"),
-        clicks.withColumnRenamed("event_id", "c_event_id").withColumnRenamed("value", "c_value"),
-        on="user_id",
-        probe_ts="ts",
-        quote_ts="ts",
-        quote_cols=["c_event_id", "c_value"],
-        tolerance_seconds=600,
-        direction="forward",
-        quote_tiebreak="c_event_id",
+    joined = _purchase_click_asof(
+        spark, sf_dir, tolerance_seconds=600, direction="forward", quote_tiebreak="c_event_id"
     )
     return joined.select(
         "p_id",

@@ -47,11 +47,6 @@ DOC_SCHEMA = StructType(
 )
 
 
-def stream_docs_ndjson(spark: SparkSession, input_dir: str) -> DataFrame:
-    """NDJSON landing directory → unbounded documents DataFrame."""
-    return spark.readStream.schema(DOC_SCHEMA).json(input_dir)
-
-
 def stream_incremental_dedup(
     docs_stream: DataFrame,
     text_col: str,

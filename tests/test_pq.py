@@ -292,6 +292,27 @@ def test_pq_store_lifecycle(spark):
     assert PQ.pq_store_adc_topk(spark, q, "embedding", "vec_id", tbl).count() == 20
 
 
+def test_rebuild_creates_missing_store(spark):
+    """rebuild_pq_store on a table that does not exist yet starts the
+    store at cb_ver 0 with the default bucket count (no codebook to
+    carry over) and serves from it."""
+    from easydb_server_spark.operators import pq as PQ
+
+    e = _vecs(spark, n=40, dim=DIM, seed=5)
+    tbl = "pq_store_rebuild_new_t"
+    PQ._drop_table_and_location(spark, tbl)
+    PQ._drop_table_and_location(spark, f"{tbl}_codebook")
+    assert not spark.catalog.tableExists(f"{tbl}_codebook")
+
+    PQ.rebuild_pq_store(spark, e, "embedding", "vec_id", tbl, m=4, k=8)
+    _cb, ver, m, _w = PQ._store_codebook(spark, tbl)
+    assert (ver, m) == (0, 4)
+    assert PQ._store_n_buckets(spark, tbl) == PQ._PQ_STORE_BUCKETS
+    assert spark.table(tbl).count() == 40
+    q = e.where(F.col("vec_id") < 2)
+    assert PQ.pq_store_adc_topk(spark, q, "embedding", "vec_id", tbl, k_top=5).count() == 10
+
+
 def test_pq_store_stats_compaction_trigger(spark):
     import pyspark.sql.functions as F
 

@@ -309,3 +309,33 @@ def test_plans_md_rows_match_bench_headline():
         f"(missing: {sorted(set(bench.HEADLINE) - set(rows))}; "
         f"extra: {sorted(set(rows) - set(bench.HEADLINE))})"
     )
+
+
+def test_no_nested_function_is_copied_across_queries():
+    """Every synthetic corpus has ONE generator: no two top-level
+    functions in queries/ may define a nested function (a mapInPandas
+    ``build`` closure, say) of 5+ lines with identical source. A
+    second copy of a corpus recipe belongs in a shared module-level
+    generator. AST only — no Spark."""
+    import ast
+    import glob
+    import os
+    import textwrap
+
+    from tests.conftest import REPO
+
+    owners: dict[str, set[str]] = {}
+    for path in sorted(glob.glob(os.path.join(REPO, "easydb_server_spark", "queries", "*.py"))):
+        src = open(path).read()
+        for top in ast.parse(src).body:
+            if not isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for node in ast.walk(top):
+                if node is top or not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    continue
+                if node.end_lineno - node.lineno + 1 < 5:
+                    continue
+                body = textwrap.dedent(ast.get_source_segment(src, node, padded=True))
+                owners.setdefault(body, set()).add(f"{os.path.basename(path)}:{top.name}")
+    copied = sorted(sorted(o) for o in owners.values() if len(o) > 1)
+    assert not copied, f"nested functions copied across top-level functions: {copied}"

@@ -7,7 +7,9 @@
 3. DML: rewrite quoted-path table factors to generated temp views
    (A9), register them by format (A1–A8), resolve remaining names
    against the catalog and register those too (A10), reject when no
-   table is referenced (A23);
+   table is referenced (A23); each source resolves once per change
+   signature and a view is rebound only when its source changed
+   (``sources/readers.py``);
 4. ``spark.sql`` — Catalyst parses/optimizes/executes (the
    reference's single ``ctx.sql`` call, §2.B); the request's path
    views are dropped once it has analyzed the query;
@@ -26,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from easydb_server_spark.catalog import Catalog
 from easydb_server_spark.errors import BadRequestError, EmptyTableNameError
 from easydb_server_spark.results import INTERACTIVE_LIMIT, materialize
-from easydb_server_spark.sources.readers import register_path
+from easydb_server_spark.sources.readers import drop_view, register_path
 from easydb_server_spark.sqlgate import classify, extract_table_names, rewrite_path_tables
 from easydb_server_spark.sqlgate.parse import SQLType, parse_create_table
 
@@ -72,17 +74,19 @@ class Engine:
         if sql_type is not SQLType.DML:
             raise BadRequestError("Only queries produce DataFrames; got DDL")
         # the returned DataFrame is analyzed, so the request's path views
-        # can go once spark.sql returns: a long-lived session would
-        # otherwise keep one view per ad-hoc request forever. Cataloged
-        # names stay registered (shared by concurrent requests), and the
-        # TEMP catalog rows stay for reference parity.
+        # (and their bindings in the readers) can go once spark.sql
+        # returns: a long-lived session would otherwise keep one view per
+        # ad-hoc request forever. The sources they read stay resolved and
+        # cached for the next request; cataloged names stay registered
+        # (shared by concurrent requests), and the TEMP catalog rows stay
+        # for reference parity.
         path_views: list[str] = []
         try:
             rewritten = self._register_tables(sql, path_views)
             return self.spark.sql(rewritten.rstrip().rstrip(";"))
         finally:
             for name in path_views:
-                self.spark.catalog.dropTempView(name)
+                drop_view(self.spark, name)
 
     def query(self, sql: str) -> dict:
         """Interactive /fetch semantics: DML or DDL, stringified result."""
@@ -144,7 +148,7 @@ class Engine:
         """
         from easydb_server_spark.sources.readers import read_path
 
-        df = read_path(self.spark, source_path)
+        df = read_path(self.spark, source_path, reuse=False)
         (
             df.repartition(n_buckets, bucket_by)
             .write.bucketBy(n_buckets, bucket_by)

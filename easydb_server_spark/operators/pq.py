@@ -517,7 +517,6 @@ def _ivfpq_adc_topk_literal(
     )
 
     rows = sorted(cell_rows, key=lambda t: t[0])
-    nc = len(rows)
     cell_type = cents.schema["cell"].dataType.simpleString()
     # in-row nearest cell: candidates in cell-ascending order carry
     # their INDEX; the fold keeps the accumulator on ties (= the

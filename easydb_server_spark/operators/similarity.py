@@ -531,8 +531,6 @@ def topk_cosine_ivf(
     partition/join key: the corpus is bucketed once, each query
     touches nprobe/n_cells of the data — the classic recall/cost dial.
     """
-    from pyspark.sql import Window
-
     c = corpus.select(F.col(id_col).alias("cid"), _as_double(F.col(vec_col)).alias("cvec"))
     q = queries.select(F.col(id_col).alias("qid"), _as_double(F.col(vec_col)).alias("qvec"))
     cents = (
@@ -1116,8 +1114,6 @@ def topk_cosine_ivf_store(
     identical by construction (both paths feed the shared
     :func:`_rank_probed`; locked by tests/test_ivf_lifecycle.py).
     """
-    from pyspark.sql import Window
-
     cents = spark.table(f"{table}_centroids")
     q = queries.select(F.col(id_col).alias("qid"), _as_double(F.col(vec_col)).alias("qvec"))
     probed = _assign_cells(q, cents, id_col="qid", vec_col="qvec", top=nprobe)

@@ -17,16 +17,35 @@ Globs are native to Spark's DataFrameReader for CSV/JSON/Parquet
 (A1–A3, A7); xlsx expands with ``glob.glob`` like the reference's
 ``find_files`` (`src/data_source/utils.rs:28-38`).
 
-Scale note: CSV/NdJSON listing + schema inference is a distributed
-scan; inferred schemas are cached per (path, mtime) so re-registration
-per request (the reference's fresh-session semantics) doesn't re-scan
-— the optimization the reference's roadmap asks for (SURVEY.md §7.4).
+Scale note: a gateway request names the same few sources again and
+again, so CSV/TSV/NdJSON sources are resolved once per change
+signature — the per-source caching the reference's roadmap asks for
+(SURVEY.md §7.4), where the reference re-reads every file per request:
+
+- one entry per (resolved path, format) holds the signature, the
+  inferred schema and the DataFrame (its file listing included);
+  every request re-stats the listing, and any added, removed, renamed
+  or touched file replaces the entry;
+- the entry's DataFrame is ``.cache()``d while the summed input bytes
+  of the cached sources stay within ``CACHE_BUDGET_BYTES``; past it the
+  least recently used source is unpersisted, and a source larger than
+  the whole budget is kept resolved but read from its files each time;
+- ``register_path`` rebinds a view only when the name points at a
+  different DataFrame, keyed by view name (it assumes it alone binds
+  the names it registers; ``drop_view`` forgets one).
+
+Parquet, ORC and xlsx are read per request as before; one-shot reads
+(``reuse=False``: bucketed ingest) keep nothing.
 """
 
 from __future__ import annotations
 
 import glob as _glob
+import hashlib
 import os
+import stat
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -35,10 +54,21 @@ from easydb_server_spark.sources.formats import DataSourceFormat, get_format
 
 DEFAULT_DATA_DIR = "/var/lib/easydb"
 
-# (resolved_path, fmt) -> (mtime_signature, StructType); one entry per
-# source so a changed signature evicts the stale schema instead of
-# accumulating keys forever in a long-lived server
-_SCHEMA_CACHE: dict[tuple[str, str], tuple[tuple, object]] = {}
+# summed input bytes of the sources held in Spark's cache (the stat
+# sizes of their files; the in-memory columns are about as large)
+CACHE_BUDGET_BYTES = 64 << 20
+# resolved sources kept at once, cached or not
+MAX_SOURCES = 256
+
+# (resolved_path, fmt) -> (signature, StructType, DataFrame), least
+# recently used first; one entry per source, so a changed signature
+# replaces the entry instead of accumulating keys in a long-lived server
+_SCHEMA_CACHE: OrderedDict[tuple[str, str], tuple[tuple, object, DataFrame]] = OrderedDict()
+# keys of the entries whose DataFrame is in Spark's cache
+_CACHED: set[tuple[str, str]] = set()
+# view name -> (session, DataFrame) register_path last bound it to
+_VIEWS: dict[str, tuple[SparkSession, DataFrame]] = {}
+_LOCK = threading.Lock()
 
 
 def data_dir() -> str:
@@ -53,38 +83,100 @@ def resolve_path(path: str) -> str:
     return os.path.join(data_dir(), path)
 
 
-def _mtime_signature(resolved: str) -> tuple:
-    """Change signature over the FULL glob listing: file count plus an
-    order-sensitive digest of every (name, mtime, size). Constant-size
-    key — a 10⁵-file glob costs one stat pass but no giant tuple — and
-    ANY difference in membership, order, mtime, or size invalidates
-    (an aggregate like (count, max mtime, total bytes) would miss a
-    same-size rename that preserves mtimes)."""
-    import hashlib
+def _listing(resolved: str) -> list[str]:
+    """The files (or directories) ``resolved`` names; empty if none."""
+    return sorted(_glob.glob(resolved)) or ([resolved] if os.path.exists(resolved) else [])
 
-    files = sorted(_glob.glob(resolved)) or [resolved]
+
+def _mtime_signature(resolved: str, files: list[str] | None = None) -> tuple:
+    """Change signature over the FULL listing: (file count, an
+    order-sensitive digest of every (name, mtime, size), total bytes).
+    Constant-size key — a 10⁵-file glob costs one stat pass but no
+    giant tuple — and ANY difference in membership, order, mtime, or
+    size invalidates (an aggregate like (count, max mtime, total bytes)
+    would miss a same-size rename that preserves mtimes). A directory
+    counts by the files under it. ``files`` is the listing when the
+    caller has it already."""
     h = hashlib.md5()
-    for f in files:
+    n = total = 0
+    pending = list(reversed(files or _listing(resolved) or [resolved]))
+    while pending:
+        f = pending.pop()
         try:
             st = os.stat(f)
-            h.update(f"{f}\x00{st.st_mtime_ns}\x00{st.st_size}\x1e".encode())
         except OSError:
             h.update(f"{f}\x00missing\x1e".encode())
-    return (len(files), h.hexdigest())
+            n += 1
+            continue
+        if stat.S_ISDIR(st.st_mode):
+            pending.extend(sorted((os.path.join(f, e) for e in os.listdir(f)), reverse=True))
+            continue
+        h.update(f"{f}\x00{st.st_mtime_ns}\x00{st.st_size}\x1e".encode())
+        n += 1
+        total += st.st_size
+    return (n, h.hexdigest(), total)
 
 
 def _cached_schema(resolved: str, fmt: str, sig: tuple):
+    """The entry resolved for this source if its signature still
+    matches, else None; a hit means the entry is reused."""
     hit = _SCHEMA_CACHE.get((resolved, fmt))
     if hit is not None and hit[0] == sig:
-        return hit[1]
+        return hit
     return None
 
 
-def read_path(spark: SparkSession, path: str) -> DataFrame:
-    """Read a file/glob path into a DataFrame, routing by extension."""
+def _uncache(key: tuple[str, str]) -> None:
+    if key in _CACHED:
+        _CACHED.discard(key)
+        _SCHEMA_CACHE[key][2].unpersist(blocking=False)
+
+
+def _evict(key: tuple[str, str]) -> None:
+    """Forget ``key``'s entry. Its DataFrame leaves Spark's cache
+    first: a new read of the same files builds a plan equal to the old
+    one, and Spark would serve it the stale cached rows."""
+    if key in _SCHEMA_CACHE:
+        _uncache(key)
+        del _SCHEMA_CACHE[key]
+
+
+def _admit(key: tuple[str, str]) -> None:
+    """Cache ``key``'s DataFrame if its input fits the budget,
+    unpersisting the least recently used cached sources to make room."""
+    size = _SCHEMA_CACHE[key][0][2]
+    if key in _CACHED or size > CACHE_BUDGET_BYTES:
+        return
+    used = sum(_SCHEMA_CACHE[k][0][2] for k in _CACHED)
+    for old in list(_SCHEMA_CACHE):
+        if used + size <= CACHE_BUDGET_BYTES:
+            break
+        if old in _CACHED:
+            used -= _SCHEMA_CACHE[old][0][2]
+            _uncache(old)
+    _SCHEMA_CACHE[key][2].cache()
+    _CACHED.add(key)
+
+
+def _read_text(spark: SparkSession, fmt: DataSourceFormat, resolved: str, schema) -> DataFrame:
+    """CSV/TSV/NdJSON reader; infers the schema unless one is given."""
+    if fmt == DataSourceFormat.NDJSON:
+        return (spark.read if schema is None else spark.read.schema(schema)).json(resolved)
+    reader = spark.read.option("header", True)
+    if fmt == DataSourceFormat.TSV:
+        reader = reader.option("sep", "\t")
+    reader = reader.option("inferSchema", True) if schema is None else reader.schema(schema)
+    return reader.csv(resolved)
+
+
+def read_path(spark: SparkSession, path: str, reuse: bool = True) -> DataFrame:
+    """Read a file/glob path into a DataFrame, routing by extension.
+    CSV/TSV/NdJSON come from the source cache (module docstring);
+    ``reuse=False`` builds a fresh DataFrame and keeps nothing."""
     fmt = get_format(path)
     resolved = resolve_path(path)
-    if not _glob.glob(resolved) and not os.path.exists(resolved):
+    files = _listing(resolved)
+    if not files:
         raise NotFoundError(f"No files match path: {path!r}")
     if fmt == DataSourceFormat.JSON:
         raise UnsupportedFormatError("JSON files are currently not supported.")
@@ -92,36 +184,56 @@ def read_path(spark: SparkSession, path: str) -> DataFrame:
         from easydb_server_spark.sources.excel import read_xlsx
 
         return read_xlsx(spark, resolved)
-
-    sig = _mtime_signature(resolved)
-    cached_schema = _cached_schema(resolved, fmt.value, sig)
-
-    if fmt == DataSourceFormat.CSV or fmt == DataSourceFormat.TSV:
-        reader = spark.read.option("header", True)
-        if fmt == DataSourceFormat.TSV:
-            reader = reader.option("sep", "\t")
-        if cached_schema is not None:
-            df = reader.schema(cached_schema).csv(resolved)
-        else:
-            df = reader.option("inferSchema", True).csv(resolved)
-            _SCHEMA_CACHE[(resolved, fmt.value)] = (sig, df.schema)
-        return df
-    if fmt == DataSourceFormat.NDJSON:
-        if cached_schema is not None:
-            return spark.read.schema(cached_schema).json(resolved)
-        df = spark.read.json(resolved)
-        _SCHEMA_CACHE[(resolved, fmt.value)] = (sig, df.schema)
-        return df
     if fmt == DataSourceFormat.PARQUET:
         return spark.read.parquet(resolved)
     if fmt == DataSourceFormat.ORC:
         return spark.read.orc(resolved)
-    raise UnsupportedFormatError(f"Unsupported file format: {path!r}")
+    if fmt not in (DataSourceFormat.CSV, DataSourceFormat.TSV, DataSourceFormat.NDJSON):
+        raise UnsupportedFormatError(f"Unsupported file format: {path!r}")
+
+    key = (resolved, fmt.value)
+    sig = _mtime_signature(resolved, files)
+    with _LOCK:
+        hit = _cached_schema(resolved, fmt.value, sig)
+        if hit is None:
+            _evict(key)
+        elif reuse:
+            _SCHEMA_CACHE.move_to_end(key)
+            _admit(key)
+            return hit[2]
+    df = _read_text(spark, fmt, resolved, hit[1] if hit is not None else None)
+    if not reuse:
+        return df
+    with _LOCK:
+        won = _cached_schema(resolved, fmt.value, sig)
+        if won is not None:  # a concurrent request resolved it first
+            return won[2]
+        _evict(key)
+        _SCHEMA_CACHE[key] = (sig, df.schema, df)
+        _admit(key)
+        while len(_SCHEMA_CACHE) > MAX_SOURCES:
+            _evict(next(iter(_SCHEMA_CACHE)))
+    return df
 
 
 def register_path(spark: SparkSession, name: str, path: str) -> DataFrame:
     """read_path + temp-view registration (A1–A3 registration ⇔
-    ``createOrReplaceTempView``)."""
+    ``createOrReplaceTempView``), skipped when ``name`` already points
+    at the same DataFrame in this session."""
     df = read_path(spark, path)
-    df.createOrReplaceTempView(name)
+    with _LOCK:
+        bound = _VIEWS.get(name)
+        if bound is None or bound[0] is not spark or bound[1] is not df:
+            df.createOrReplaceTempView(name)
+            _VIEWS[name] = (spark, df)
     return df
+
+
+def drop_view(spark: SparkSession, name: str) -> None:
+    """Drop a view ``register_path`` made and forget its binding. The
+    view goes through the session catalog: ``spark.catalog.dropTempView``
+    would also uncache the view's DataFrame, the source other requests
+    share."""
+    with _LOCK:
+        _VIEWS.pop(name, None)
+        spark._jsparkSession.sessionState().catalog().dropTempView(name)

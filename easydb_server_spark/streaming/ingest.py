@@ -64,8 +64,6 @@ def stream_incremental_dedup(
     ``admitted_path``: parquet of admitted (doc_id, content_hash),
     one ``batch_id=N`` partition per micro-batch (idempotent replay).
     """
-    spark = docs_stream.sparkSession
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
         b = batch_df.select(

@@ -15,14 +15,14 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    # r17 (driver pytest budget): the suite runs on local[8] by
-    # default — every fixture is tiny, so wall time is task-launch
-    # overhead, and 32-thread stages only add scheduler cost
-    # (test_pq.py measured 111 s at 32 vs 86 s at 8, same results).
-    # No test reads defaultParallelism or partition counts. Override
-    # with SPARK_GRAFT_CPUS_TEST; the bench keeps honoring
-    # SPARK_GRAFT_CPUS untouched (bench.py sets it itself).
-    os.environ["SPARK_GRAFT_CPUS"] = os.environ.get("SPARK_GRAFT_CPUS_TEST", "8")
+    # An exported SPARK_GRAFT_CPUS sizes the session as it does for the
+    # bench; unset, the suite runs on SPARK_GRAFT_CPUS_TEST or local[8]
+    # — every fixture is tiny, so wall time is task-launch overhead,
+    # and 32-thread stages only add scheduler cost (test_pq.py measured
+    # 111 s at 32 vs 86 s at 8, and 134 s at 4 vs 161 s at 8 on a 4-vCPU
+    # host, same results). No test reads defaultParallelism or partition
+    # counts.
+    os.environ.setdefault("SPARK_GRAFT_CPUS", os.environ.get("SPARK_GRAFT_CPUS_TEST", "8"))
     from easydb_server_spark import get_spark
 
     return get_spark("easydb-tests")

@@ -35,8 +35,10 @@ add it here WITH a category and one-line justification.
 
 from __future__ import annotations
 
+import io
 import pathlib
 import re
+import tokenize
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent / "easydb_server_spark"
 
@@ -101,11 +103,24 @@ def _balanced_arg(s: str, start: int) -> str:
     return " ".join(s[start : i - 1].split())
 
 
+def _code_text(p: pathlib.Path) -> str:
+    """``p``'s source with every comment blanked in place (lines and
+    columns kept), so a comment that describes a ROUND over a division
+    is not taken for a site. Strings stay: oracle SQL lives in them."""
+    src = p.read_text()
+    lines = io.StringIO(src).readlines()
+    for tok in tokenize.generate_tokens(io.StringIO(src).readline):
+        if tok.type == tokenize.COMMENT:
+            (row, c0), (_, c1) = tok.start, tok.end
+            lines[row - 1] = lines[row - 1][:c0] + " " * (c1 - c0) + lines[row - 1][c1:]
+    return "".join(lines)
+
+
 def _hits(pattern: str):
     pat = re.compile(pattern)
     out = []
     for p in sorted(ROOT.rglob("*.py")):
-        s = p.read_text()
+        s = _code_text(p)
         rel = str(p.relative_to(ROOT.parent)).replace("easydb_server_spark/", "", 1)
         for m in pat.finditer(s):
             arg = _balanced_arg(s, m.end())

@@ -110,6 +110,93 @@ class TestReaders:
         assert "c" in df.columns
 
 
+    def test_byte_budget_unpersists_least_recently_used(self, spark, tmp_path, monkeypatch):
+        from easydb_server_spark.sources import readers
+
+        monkeypatch.setenv("DATA_DIR", str(tmp_path))
+        for name in ("a", "b", "c"):
+            (tmp_path / f"{name}.csv").write_text("k,v\n" + "".join(f"{i},{name}\n" for i in range(100)))
+        size = (tmp_path / "a.csv").stat().st_size
+        monkeypatch.setattr(readers, "CACHE_BUDGET_BYTES", 2 * size)
+        a = read_path(spark, "a.csv")
+        b = read_path(spark, "b.csv")
+        assert a.storageLevel.useMemory and b.storageLevel.useMemory
+        assert read_path(spark, "a.csv") is a  # a becomes the most recent
+        c = read_path(spark, "c.csv")
+        assert not b.storageLevel.useMemory
+        assert a.storageLevel.useMemory and c.storageLevel.useMemory
+        # b is still resolved; using it again caches it and evicts a
+        assert read_path(spark, "b.csv") is b
+        assert b.storageLevel.useMemory and not a.storageLevel.useMemory
+        assert b.count() == 100
+        # a source bigger than the whole budget is resolved, not cached
+        (tmp_path / "big.csv").write_text("k\n" + "".join(f"{i}\n" for i in range(3 * size)))
+        big = read_path(spark, "big.csv")
+        assert read_path(spark, "big.csv") is big
+        assert not big.storageLevel.useMemory
+        assert big.count() == 3 * size
+
+    def test_source_count_is_bounded(self, spark, data_dir, monkeypatch):
+        from easydb_server_spark.sources import readers
+
+        monkeypatch.setattr(readers, "MAX_SOURCES", 2)
+        user = read_path(spark, "user.csv")
+        read_path(spark, "user.tsv")
+        read_path(spark, "notes.txt")
+        assert len(readers._SCHEMA_CACHE) == 2
+        assert (str(data_dir / "user.csv"), "csv") not in readers._SCHEMA_CACHE
+        assert not user.storageLevel.useMemory
+        assert read_path(spark, "user.csv") is not user  # resolved afresh
+
+    def test_concurrent_registration_keeps_cache_and_views_consistent(self, spark, tmp_path, monkeypatch):
+        """8 threads rebind one view across three sources while a budget
+        that holds two of them forces evictions: afterwards Spark's cache
+        and the view agree with the readers' bookkeeping."""
+        import sys
+        import threading
+
+        from easydb_server_spark.sources import readers
+
+        monkeypatch.setenv("DATA_DIR", str(tmp_path))
+        for n in (1, 2, 3):  # 4, 6 and 8 bytes
+            (tmp_path / f"s{n}.csv").write_text("k\n" + "".join(f"{i}\n" for i in range(n)))
+        monkeypatch.setattr(readers, "CACHE_BUDGET_BYTES", 14)
+        errors: list[Exception] = []
+
+        def worker(i: int):
+            try:
+                for j in range(20):
+                    readers.register_path(spark, "stress_view", f"s{(i + j) % 3 + 1}.csv")
+            except Exception as e:  # pragma: no cover - surfaced below
+                errors.append(e)
+
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(8)]
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=120)
+        finally:
+            sys.setswitchinterval(interval)
+        assert not errors and not any(t.is_alive() for t in threads)
+        keys = [(str(tmp_path / f"s{n}.csv"), "csv") for n in (1, 2, 3)]
+        assert sum(readers._SCHEMA_CACHE[k][0][2] for k in keys if k in readers._CACHED) <= 14
+        for k in keys:
+            assert readers._SCHEMA_CACHE[k][2].storageLevel.useMemory == (k in readers._CACHED)
+        bound = readers._VIEWS["stress_view"][1]
+        assert spark.table("stress_view").count() == bound.count()
+        readers.drop_view(spark, "stress_view")
+
+    def test_one_shot_read_keeps_nothing(self, spark, data_dir):
+        from easydb_server_spark.sources import readers
+
+        df = read_path(spark, "user.tsv", reuse=False)
+        assert df.count() == 1
+        assert (str(data_dir / "user.tsv"), "tsv") not in readers._SCHEMA_CACHE
+        assert not df.storageLevel.useMemory
+
 class TestExcel:
     def test_injected_loader_and_glob(self, spark, data_dir):
         calls = []

@@ -1,7 +1,8 @@
 """Capture `.explain("formatted")` for headline queries into
-plans/r17/<query>_<tag>.txt — the before/after evidence for the
-optimization round. Plans come from plan_audit.plan_of over the
-fixture and session that bench.py times.
+.plans/<query>_<tag>.txt — before/after evidence for a change. Plans
+come from plan_audit.plan_of over the fixture and session that bench.py
+times. ``.plans/`` is git-ignored, so capture runs leave the checkout
+clean; the committed dumps in plans/r17/ are not touched.
 
 Usage: python tools/capture_plans.py <tag> [query ...]
        (no query names = every bench HEADLINE entry)
@@ -23,7 +24,7 @@ from tools.plan_audit import plan_of  # noqa: E402
 def main() -> None:
     tag = sys.argv[1]
     names = sys.argv[2:] or bench.HEADLINE
-    out_dir = Path(_REPO) / "plans" / "r17"
+    out_dir = Path(_REPO) / ".plans"
     out_dir.mkdir(parents=True, exist_ok=True)
 
     _, sf_dir, _ = bench.fixture_dir()

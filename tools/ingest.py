@@ -53,7 +53,7 @@ def main() -> int:
         cols = [c.strip() for c in bucket_col.split(",") if c.strip()]
         wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse").removeprefix("file:")
         loc = f"{wh}/{name}"
-        zorder_write(read_path(spark, source), cols, loc, n_files=n_buckets)
+        zorder_write(read_path(spark, source, reuse=False), cols, loc, n_files=n_buckets)
         # register the part-file glob: the format router routes by
         # extension, and a plain parquet read keeps the stats-skipping
         # benefit (unlike bucket metadata, the layout IS the files)

@@ -24,15 +24,28 @@ signature — the per-source caching the reference's roadmap asks for
 
 - one entry per (resolved path, format) holds the signature, the
   inferred schema and the DataFrame (its file listing included);
-  every request re-stats the listing, and any added, removed, renamed
-  or touched file replaces the entry;
+  every request re-stats the listing, and any added, removed, renamed,
+  replaced or rewritten file replaces the entry. The signature trusts
+  each file's (name, mtime, ctime, inode, size): a rewrite that keeps
+  the size and lands within the filesystem's timestamp granularity of
+  the last stat (the kernel's coarse clock on Linux, up to 2 s on some
+  filesystems) is not seen until the file changes again;
+- the key's path is normalised, and two spellings that list the same
+  files ('x.csv', a glob matching only x.csv) share one entry: a miss
+  takes over such an entry if its signature still holds and unpersists
+  it otherwise. Spark's cache matches a read by its expanded listing
+  and options; by default a single path's spelling is one of those
+  options, but with ``spark.sql.legacy.pathOptionBehavior.enabled`` it
+  is not, and a stale entry under another spelling would answer a
+  fresh read;
 - the entry's DataFrame is ``.cache()``d while the summed input bytes
   of the cached sources stay within ``CACHE_BUDGET_BYTES``; past it the
   least recently used source is unpersisted, and a source larger than
   the whole budget is kept resolved but read from its files each time;
 - ``register_path`` rebinds a view only when the name points at a
-  different DataFrame, keyed by view name (it assumes it alone binds
-  the names it registers; ``drop_view`` forgets one).
+  different DataFrame, keyed by view name, or when the session's view
+  is no longer the one it bound (other code sharing the session
+  replaced or dropped it; one catalog lookup per call).
 
 Parquet, ORC and xlsx are read per request as before; one-shot reads
 (``reuse=False``: bucketed ingest) keep nothing.
@@ -46,6 +59,7 @@ import os
 import stat
 import threading
 from collections import OrderedDict
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -60,14 +74,30 @@ CACHE_BUDGET_BYTES = 64 << 20
 # resolved sources kept at once, cached or not
 MAX_SOURCES = 256
 
-# (resolved_path, fmt) -> (signature, StructType, DataFrame), least
-# recently used first; one entry per source, so a changed signature
-# replaces the entry instead of accumulating keys in a long-lived server
-_SCHEMA_CACHE: OrderedDict[tuple[str, str], tuple[tuple, object, DataFrame]] = OrderedDict()
-# keys of the entries whose DataFrame is in Spark's cache
-_CACHED: set[tuple[str, str]] = set()
-# view name -> (session, DataFrame) register_path last bound it to
-_VIEWS: dict[str, tuple[SparkSession, DataFrame]] = {}
+
+class _Source(NamedTuple):
+    sig: tuple  # _mtime_signature of the listing; sig[2] is its input bytes
+    schema: object  # StructType
+    df: DataFrame
+    roots: str  # digest of the normalised listing: the root paths of df's plan
+    cached: bool  # df is in Spark's cache
+
+
+class _View(NamedTuple):
+    spark: SparkSession
+    df: DataFrame
+    catalog: object  # the session's JVM SessionCatalog
+    view: object  # the JVM view relation createOrReplaceTempView made
+
+
+# (resolved_path, fmt) -> _Source, least recently used first; one entry
+# per source, so a changed signature replaces the entry instead of
+# accumulating keys in a long-lived server
+_SCHEMA_CACHE: OrderedDict[tuple[str, str], _Source] = OrderedDict()
+# summed sig[2] of the entries with cached=True
+_cached_bytes = 0
+# view name -> what register_path last bound it to
+_VIEWS: dict[str, _View] = {}
 _LOCK = threading.Lock()
 
 
@@ -90,11 +120,14 @@ def _listing(resolved: str) -> list[str]:
 
 def _mtime_signature(resolved: str, files: list[str] | None = None) -> tuple:
     """Change signature over the FULL listing: (file count, an
-    order-sensitive digest of every (name, mtime, size), total bytes).
+    order-sensitive digest of every (name, mtime, ctime, inode, size),
+    total bytes).
     Constant-size key — a 10⁵-file glob costs one stat pass but no
     giant tuple — and ANY difference in membership, order, mtime, or
     size invalidates (an aggregate like (count, max mtime, total bytes)
-    would miss a same-size rename that preserves mtimes). A directory
+    would miss a same-size rename that preserves mtimes; ctime also
+    moves when a rewrite restores the old mtime, and the inode when a
+    file is replaced by a rename). A directory
     counts by the files under it. ``files`` is the listing when the
     caller has it already."""
     h = hashlib.md5()
@@ -111,7 +144,7 @@ def _mtime_signature(resolved: str, files: list[str] | None = None) -> tuple:
         if stat.S_ISDIR(st.st_mode):
             pending.extend(sorted((os.path.join(f, e) for e in os.listdir(f)), reverse=True))
             continue
-        h.update(f"{f}\x00{st.st_mtime_ns}\x00{st.st_size}\x1e".encode())
+        h.update(f"{f}\x00{st.st_mtime_ns}\x00{st.st_ctime_ns}\x00{st.st_ino}\x00{st.st_size}\x1e".encode())
         n += 1
         total += st.st_size
     return (n, h.hexdigest(), total)
@@ -127,9 +160,12 @@ def _cached_schema(resolved: str, fmt: str, sig: tuple):
 
 
 def _uncache(key: tuple[str, str]) -> None:
-    if key in _CACHED:
-        _CACHED.discard(key)
-        _SCHEMA_CACHE[key][2].unpersist(blocking=False)
+    global _cached_bytes
+    entry = _SCHEMA_CACHE[key]
+    if entry.cached:
+        entry.df.unpersist(blocking=False)
+        _cached_bytes -= entry.sig[2]
+        _SCHEMA_CACHE[key] = entry._replace(cached=False)
 
 
 def _evict(key: tuple[str, str]) -> None:
@@ -141,21 +177,38 @@ def _evict(key: tuple[str, str]) -> None:
         del _SCHEMA_CACHE[key]
 
 
+def _take_twin(key: tuple[str, str], roots: str, sig: tuple) -> _Source | None:
+    """On a miss for ``key``: the entry another spelling of the same
+    listing made. Spark may answer a fresh read with that entry's
+    cached plan (module docstring), so it moves to ``key`` if its
+    signature still holds and is evicted otherwise. Entries never share
+    a listing, so there is at most one."""
+    for other, entry in _SCHEMA_CACHE.items():
+        if other != key and other[1] == key[1] and entry.roots == roots:
+            if entry.sig != sig:
+                _evict(other)
+                return None
+            del _SCHEMA_CACHE[other]
+            _SCHEMA_CACHE[key] = entry
+            return entry
+    return None
+
+
 def _admit(key: tuple[str, str]) -> None:
     """Cache ``key``'s DataFrame if its input fits the budget,
     unpersisting the least recently used cached sources to make room."""
-    size = _SCHEMA_CACHE[key][0][2]
-    if key in _CACHED or size > CACHE_BUDGET_BYTES:
+    global _cached_bytes
+    entry = _SCHEMA_CACHE[key]
+    size = entry.sig[2]
+    if entry.cached or size > CACHE_BUDGET_BYTES:
         return
-    used = sum(_SCHEMA_CACHE[k][0][2] for k in _CACHED)
     for old in list(_SCHEMA_CACHE):
-        if used + size <= CACHE_BUDGET_BYTES:
+        if _cached_bytes + size <= CACHE_BUDGET_BYTES:
             break
-        if old in _CACHED:
-            used -= _SCHEMA_CACHE[old][0][2]
-            _uncache(old)
-    _SCHEMA_CACHE[key][2].cache()
-    _CACHED.add(key)
+        _uncache(old)
+    entry.df.cache()
+    _cached_bytes += size
+    _SCHEMA_CACHE[key] = entry._replace(cached=True)
 
 
 def _read_text(spark: SparkSession, fmt: DataSourceFormat, resolved: str, schema) -> DataFrame:
@@ -172,9 +225,9 @@ def _read_text(spark: SparkSession, fmt: DataSourceFormat, resolved: str, schema
 def read_path(spark: SparkSession, path: str, reuse: bool = True) -> DataFrame:
     """Read a file/glob path into a DataFrame, routing by extension.
     CSV/TSV/NdJSON come from the source cache (module docstring);
-    ``reuse=False`` builds a fresh DataFrame and keeps nothing."""
+    ``reuse=False`` builds a fresh DataFrame and adds nothing."""
     fmt = get_format(path)
-    resolved = resolve_path(path)
+    resolved = os.path.normpath(resolve_path(path))
     files = _listing(resolved)
     if not files:
         raise NotFoundError(f"No files match path: {path!r}")
@@ -192,24 +245,29 @@ def read_path(spark: SparkSession, path: str, reuse: bool = True) -> DataFrame:
         raise UnsupportedFormatError(f"Unsupported file format: {path!r}")
 
     key = (resolved, fmt.value)
+    # glob lists a normalised pattern in normalised names
+    roots = hashlib.md5("\x00".join(files).encode()).hexdigest()
     sig = _mtime_signature(resolved, files)
     with _LOCK:
         hit = _cached_schema(resolved, fmt.value, sig)
         if hit is None:
             _evict(key)
-        elif reuse:
+            hit = _take_twin(key, roots, sig)
+        if hit is not None and reuse:
             _SCHEMA_CACHE.move_to_end(key)
             _admit(key)
-            return hit[2]
-    df = _read_text(spark, fmt, resolved, hit[1] if hit is not None else None)
+            return hit.df
+    df = _read_text(spark, fmt, resolved, hit.schema if hit is not None else None)
     if not reuse:
         return df
     with _LOCK:
         won = _cached_schema(resolved, fmt.value, sig)
+        if won is None:
+            _evict(key)
+            won = _take_twin(key, roots, sig)
         if won is not None:  # a concurrent request resolved it first
-            return won[2]
-        _evict(key)
-        _SCHEMA_CACHE[key] = (sig, df.schema, df)
+            return won.df
+        _SCHEMA_CACHE[key] = _Source(sig, df.schema, df, roots, False)
         _admit(key)
         while len(_SCHEMA_CACHE) > MAX_SOURCES:
             _evict(next(iter(_SCHEMA_CACHE)))
@@ -218,14 +276,22 @@ def read_path(spark: SparkSession, path: str, reuse: bool = True) -> DataFrame:
 
 def register_path(spark: SparkSession, name: str, path: str) -> DataFrame:
     """read_path + temp-view registration (A1–A3 registration ⇔
-    ``createOrReplaceTempView``), skipped when ``name`` already points
-    at the same DataFrame in this session."""
+    ``createOrReplaceTempView``), skipped when ``name`` still points at
+    the same DataFrame in this session. The session's view is checked
+    too, so a view replaced or dropped by other code is bound again."""
     df = read_path(spark, path)
+    bound = _VIEWS.get(name)
+    if (
+        bound is not None
+        and bound.spark is spark
+        and bound.df is df
+        and bound.catalog.getTempView(name).contains(bound.view)
+    ):
+        return df
     with _LOCK:
-        bound = _VIEWS.get(name)
-        if bound is None or bound[0] is not spark or bound[1] is not df:
-            df.createOrReplaceTempView(name)
-            _VIEWS[name] = (spark, df)
+        df.createOrReplaceTempView(name)
+        catalog = spark._jsparkSession.sessionState().catalog()
+        _VIEWS[name] = _View(spark, df, catalog, catalog.getTempView(name).get())
     return df
 
 

@@ -286,6 +286,17 @@ class TestSourceCache:
         for sql in (cataloged, quoted):
             assert engine.query(sql)["rows"][0] == ["1", "Appla"]
 
+    def test_view_replaced_or_dropped_outside_is_bound_again(self, engine, data_dir, spark):
+        """Other code sharing the session may rebind or drop a name the
+        engine bound; the next request still reads the cataloged file."""
+        engine.query("create table orders () location 'order_*.csv'")
+        sql = "select count(*) as n from orders"
+        assert engine.query(sql)["rows"] == [["4"]]
+        spark.range(1).createOrReplaceTempView("orders")
+        assert engine.query(sql)["rows"] == [["4"]]
+        spark._jsparkSession.sessionState().catalog().dropTempView("orders")
+        assert engine.query(sql)["rows"] == [["4"]]
+
     def test_ingest_bucketed_leaves_no_cached_source(self, engine, data_dir, spark):
         import shutil
 

@@ -182,12 +182,70 @@ class TestReaders:
             sys.setswitchinterval(interval)
         assert not errors and not any(t.is_alive() for t in threads)
         keys = [(str(tmp_path / f"s{n}.csv"), "csv") for n in (1, 2, 3)]
-        assert sum(readers._SCHEMA_CACHE[k][0][2] for k in keys if k in readers._CACHED) <= 14
-        for k in keys:
-            assert readers._SCHEMA_CACHE[k][2].storageLevel.useMemory == (k in readers._CACHED)
+        entries = [readers._SCHEMA_CACHE[k] for k in keys]
+        assert sum(e.sig[2] for e in entries if e.cached) <= 14
+        for e in entries:
+            assert e.df.storageLevel.useMemory == e.cached
+        assert readers._cached_bytes == sum(e.sig[2] for e in readers._SCHEMA_CACHE.values() if e.cached)
         bound = readers._VIEWS["stress_view"][1]
         assert spark.table("stress_view").count() == bound.count()
         readers.drop_view(spark, "stress_view")
+
+    @pytest.mark.parametrize("legacy_path_option", ["false", "true"])
+    def test_spellings_of_one_listing_share_an_entry_and_see_rewrites(
+        self, spark, tmp_path, monkeypatch, legacy_path_option
+    ):
+        """After 'x*.csv' is cached and x.csv is rewritten (same size,
+        same schema), no other spelling of x.csv may get the old rows.
+        Spark's cache tells spellings apart only by the single-path
+        option; with the legacy path-option behaviour it compares the
+        expanded listing alone and would answer them all from the
+        stale plan."""
+        import os
+
+        from easydb_server_spark.sources import readers
+
+        monkeypatch.setenv("DATA_DIR", str(tmp_path))
+        conf = "spark.sql.legacy.pathOptionBehavior.enabled"
+        old = spark.conf.get(conf)
+        spark.conf.set(conf, legacy_path_option)
+        try:
+            x = tmp_path / "x.csv"
+            x.write_text("k,v\n1,a\n")
+            glob_df = read_path(spark, "x*.csv")
+            assert [tuple(r) for r in glob_df.collect()] == [(1, "a")]
+            assert glob_df.storageLevel.useMemory
+            before = x.stat()
+            x.write_text("k,v\n1,b\n")
+            os.utime(x, ns=(before.st_atime_ns, before.st_mtime_ns + 10**9))
+            for spelling in ("./x.csv", f"{tmp_path}//x.csv", "x.csv", "x*.csv"):
+                assert [tuple(r) for r in read_path(spark, spelling).collect()] == [(1, "b")], spelling
+            assert read_path(spark, "x*.csv") is not glob_df
+            # one entry for the listing, taken over by each spelling in turn
+            assert [k for k in readers._SCHEMA_CACHE if k[0].startswith(str(tmp_path))] == [
+                (str(tmp_path / "x*.csv"), "csv")
+            ]
+            assert read_path(spark, "x.csv") is read_path(spark, "x*.csv")
+        finally:
+            spark.conf.set(conf, old)
+
+    def test_signature_catches_rewrite_that_restores_mtime(self, tmp_path):
+        """A same-size rewrite whose mtime is set back still moves the
+        file's ctime."""
+        import os
+        import time
+
+        from easydb_server_spark.sources.readers import _mtime_signature
+
+        f = tmp_path / "r.csv"
+        f.write_text("a\n1\n")
+        before = f.stat()
+        sig1 = _mtime_signature(str(f))
+        time.sleep(0.05)  # past the coarse clock's tick
+        f.write_text("a\n2\n")
+        os.utime(f, ns=(before.st_atime_ns, before.st_mtime_ns))
+        assert f.stat().st_mtime_ns == before.st_mtime_ns
+        assert _mtime_signature(str(f)) != sig1
 
     def test_one_shot_read_keeps_nothing(self, spark, data_dir):
         from easydb_server_spark.sources import readers

@@ -611,7 +611,6 @@ def duplicate_ngram_spans(
     id_col: str,
     n: int = 5,
     min_docs: int = 2,
-    verify: bool = True,
 ) -> DataFrame:
     """Cross-document duplicate n-gram spans — the substring-granular
     dedup signal (Lee et al. 2022, "Deduplicating Training Data Makes
@@ -636,10 +635,10 @@ def duplicate_ngram_spans(
     (doc frequencies, then positions), ONE digest-width shuffle, no
     Python.
 
-    ``verify=True`` (default) makes the result EXACT, not
-    hash-approximate: a 60-bit hash collision between two different
-    grams would otherwise clip innocent text (a flag on a gram whose
-    string is actually unique, or an inflated n_docs). The verify pass
+    A verify pass makes the result EXACT, not hash-approximate: a
+    60-bit hash collision between two different grams would otherwise
+    clip innocent text (a flag on a gram whose string is actually
+    unique, or an inflated n_docs). The verify pass
     is candidate-restricted — only positions the hash pass flagged
     carry their gram STRING into a re-count by the actual string — and
     every genuinely-duplicated gram's occurrences are all inside the
@@ -647,10 +646,9 @@ def duplicate_ngram_spans(
     count ≤ its hash's doc count), which is what makes the recount
     exact. Cost: the hash-flagged tail's gram text shuffles once
     (bounded by the duplicated tail, never the corpus); the
-    corpus-wide stages still move only 8-byte digests.
-    ``verify=False`` keeps the pure-hash plan for pipelines accepting
-    the ~|grams|²/2⁶¹ birthday-collision odds in exchange for a
-    text-free tail.
+    corpus-wide stages still move only 8-byte digests. The verify pass
+    always runs: a pure-hash result would trade exactness for a
+    text-free tail at ~|grams|²/2⁶¹ birthday-collision odds.
     """
     words = F.split(F.col(text_col), " ")
     base = df.select(F.col(id_col).alias("doc_id"), words.alias("ws"), F.size(words).alias("nw"))
@@ -668,10 +666,6 @@ def duplicate_ngram_spans(
         .agg(F.count(F.lit(1)).alias("n_docs"))
         .where(F.col("n_docs") >= min_docs)
     )
-    if not verify:
-        return hashed.drop("gram").join(flagged, "gram_hash").select(
-            "doc_id", "pos", "gram_hash", "n_docs"
-        )
     cand = hashed.join(flagged.select("gram_hash"), "gram_hash").select(
         "doc_id", "pos", "gram", "gram_hash"
     )

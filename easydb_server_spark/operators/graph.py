@@ -80,7 +80,6 @@ def pagerank(
     src_col: str,
     dst_col: str,
     iterations: int = 5,
-    bounded_memory: bool = False,
     driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Fixed-point PageRank over a directed edge list. Returns
@@ -94,22 +93,17 @@ def pagerank(
       r'(v)      = (3*SCALE div (20*N))
                    + (17 * (contrib(v) + dangling div N) div 20)
 
-    Materialization dial: every re-referenced frame persists either
-    way (without pinning, Catalyst re-derives each reference and the
-    plan DOUBLES per iteration — audited at 161 exchanges for 3
-    unpersisted iterations vs 26 pinned). Default (``bounded_memory=
-    False``) builds ONE lazy pinned plan — fastest for the bounded
-    iteration counts a ranking signal needs (convergence contracts at
-    the 0.85 damping rate, so ~10-30 iterations; measured 1.9 s vs
-    5.5 s eager at sf0.1 — the eager cost is per-action scheduling,
-    not data), at the cost of per-call cached intermediates living
-    until session cleanup. ``bounded_memory=True`` runs EAGER
-    supersteps: each iteration's rank state materializes, its
-    predecessor unpersists immediately, and the static frames release
-    at the end — a long-horizon session iterating many graphs retains
-    exactly one node-width frame per call (the superstep-with-actions
-    shape of bpe_merges; at 100 TB also checkpoint every ~10
-    iterations to truncate lineage).
+    Materialization: every re-referenced frame persists (without
+    pinning, Catalyst re-derives each reference and the plan DOUBLES
+    per iteration — audited at 161 exchanges for 3 unpersisted
+    iterations vs 26 pinned), and the distributed path builds ONE lazy
+    pinned plan. That is the fastest shape for the bounded iteration
+    counts a ranking signal needs (convergence contracts at the 0.85
+    damping rate, so ~10-30 iterations): eager supersteps that
+    materialize each iteration and unpersist its predecessor measured
+    5.5 s against 1.9 s at sf0.1, the difference being per-action
+    scheduling, not data. The cost is that per-call cached
+    intermediates live until session cleanup.
     """
     e = (
         edges.select(
@@ -164,12 +158,8 @@ def pagerank(
     ranks = nodes_deg.crossJoin(n_row).selectExpr(
         "node", "out", f"CAST({RANK_SCALE} AS BIGINT) div _n AS rank"
     )
-    if bounded_memory:
-        ranks = ranks.persist()
-        ranks.count()
     for _ in range(iterations):
-        if not bounded_memory:
-            ranks = ranks.persist()
+        ranks = ranks.persist()
         contrib = (
             ranks.where(F.col("out").isNotNull())
             .join(e, F.col("node") == e["src"])
@@ -182,7 +172,7 @@ def pagerank(
                 F.coalesce(F.sum("rank"), F.lit(0)).alias("_dang")
             )
         )
-        new_ranks = (
+        ranks = (
             nodes_deg.join(contrib, nodes_deg["node"] == contrib["dst"], "left")
             .crossJoin(dangling)
             .crossJoin(n_row)
@@ -193,12 +183,4 @@ def pagerank(
                 " + (17 * (COALESCE(contrib, 0) + _dang div _n) div 20) AS rank",
             )
         )
-        if bounded_memory:
-            new_ranks = new_ranks.persist()
-            new_ranks.count()
-            ranks.unpersist()
-        ranks = new_ranks
-    if bounded_memory:
-        for frame in (e, nodes, nodes_deg):
-            frame.unpersist()
     return ranks.select("node", "rank")

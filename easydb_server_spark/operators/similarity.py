@@ -1085,7 +1085,6 @@ def topk_cosine_ivf_store(
     id_col: str,
     k: int = 3,
     nprobe: int = 2,
-    prune: str = "static",
 ) -> DataFrame:
     """ANN serving against a persisted IVF store: queries rank the
     stored centroids (broadcast, tiny), the probed cell ids — a
@@ -1104,26 +1103,14 @@ def topk_cosine_ivf_store(
     probed cell ids are collected to build the partition filter, so
     the driver holds ≤ min(nprobe × |queries|, n_cells) ids. This
     serving path is for BATCH query sets (the normal ANN-serving
-    shape); ``prune="join"`` is the no-collect alternative for
-    unbounded/huge query sets — the probed cells join the store on the
-    cell id (broadcast of the probe side; nothing touches the driver),
-    trading the STATIC partition filter for Spark's runtime pruning:
-    with AQE the broadcast-hash join on the partition column skips
-    non-probed partitions dynamically, and even without pruning the
-    join itself discards non-probed cells after the scan. Results are
-    identical by construction (both paths feed the shared
-    :func:`_rank_probed`; locked by tests/test_ivf_lifecycle.py).
+    shape). The filter lists the probed partitions in the scan itself,
+    so skipping the other cells never depends on runtime pruning.
     """
     cents = spark.table(f"{table}_centroids")
     q = queries.select(F.col(id_col).alias("qid"), _as_double(F.col(vec_col)).alias("qvec"))
     probed = _assign_cells(q, cents, id_col="qid", vec_col="qvec", top=nprobe)
-    if prune == "join":
-        store = spark.table(table).join(
-            F.broadcast(probed.select("cell").distinct()), "cell", "left_semi"
-        )
-    else:
-        cells = [r.cell for r in probed.select("cell").distinct().collect()]
-        store = spark.table(table).where(F.col("cell").isin(cells))
+    cells = [r.cell for r in probed.select("cell").distinct().collect()]
+    store = spark.table(table).where(F.col("cell").isin(cells))
     return _rank_probed(store, probed, k)
 
 

@@ -862,7 +862,6 @@ def gopher_repetition_rules(
     text_col: str,
     id_col: str,
     thresholds: dict[str, float] | None = None,
-    impl: str = "agg",
 ) -> DataFrame:
     """The COMPLETE Gopher repetition filter (Rae et al. 2021 §A1.1,
     Table A1) — all 13 published signals, complementing
@@ -888,214 +887,33 @@ def gopher_repetition_rules(
     signals at or under their thresholds — override any subset via
     ``thresholds``).
 
-    Two formulations, same results (SCALE.md measures them):
-
-    - ``impl="agg"`` (default) — all-JVM: three linear
-      partial-aggregated hash shuffles of fixed-shape gram rows.
-    - ``impl="python"`` — every signal is a pure per-document
-      function, so an Arrow-batched ``mapInPandas`` stage computes the
-      RAW integer counts per doc (Counter over grams, merged-interval
-      coverage) with ZERO exchanges; the fractions/rounding run in the
-      same Spark expressions as the agg path afterwards, so the two
-      impls agree bit-for-bit (BMP caveat: Python counts codepoints
-      where the JVM counts UTF-16 code units, so astral-plane
-      characters diverge on length-derived metrics — same caveat the
-      pathological fuzz pins for every text operator).
-
-    Scale shape (``impl="agg"``): line/paragraph signals are in-row
-    array arithmetic. The nine n-gram signals flow through a HOF-free
-    double explode
-    (positions, then nine codegen'd struct expressions per position —
-    higher-order-function gram building evaluates interpreted and was
-    measured 2.3× slower), a COUNT-ONLY hash aggregate, a per-(doc, n)
-    reduction yielding the flagged gram keys (duplicated grams for
-    n ≥ 5, the deterministic (count, length, gram)-argmax for n ≤ 4 —
-    via max_by, no sort), and a keyed probe of the exploded frame that
-    recovers the flagged START positions — only the flagged tail ever
-    carries positions (collecting position lists for every gram, 97%
-    of which are unique, was the measured bottleneck). Covered
-    characters come from an in-row merged-interval fold over each
-    sorted start list (O(starts+words), not the per-token exists
-    scan's O(words·starts)). SCALE.md records the formulation study.
+    Scale shape: every signal is a pure per-document function, so an
+    Arrow-batched ``mapInPandas`` stage computes the RAW integer counts
+    per doc (a Counter over each n's grams, coverage from a per-token
+    mark array) with ZERO exchanges; the fractions and rounding then run as Spark
+    expressions (:func:`_rep_finalize`). BMP caveat: Python counts
+    codepoints where the JVM counts UTF-16 code units, so astral-plane
+    characters diverge on length-derived metrics — the same caveat the
+    pathological fuzz pins for every text operator. It is the only
+    formulation because it is the fastest measured: an all-JVM one
+    (three partial-aggregated hash shuffles of exploded gram rows, then
+    a probe for the flagged start positions) gave the same rows but
+    drained the registry input in 3.32 s against 1.48 s at sf0.01 and
+    10.90 s against 2.84 s at sf0.1 (4 vCPU, ``local[4]``, 7 interleaved
+    pairs per scale, this path faster in 7/7; SCALE.md has the study).
     """
+    from easydb_server_spark.queries._util import spread
+
     th = dict(GOPHER_REPETITION_THRESHOLDS)
     if thresholds:
         unknown = set(thresholds) - set(th)
         if unknown:
             raise ValueError(f"unknown repetition signals: {sorted(unknown)}")
         th.update(thresholds)
-    if impl == "python":
-        from easydb_server_spark.queries._util import spread
-
-        # r16: per-doc gram counting is the heavy stage; raise the
-        # input's partition count to the session cores first (the
-        # conformance fixtures scan into ~4 splits). Narrow rows only.
-        return _rep_finalize(_rep_counts_python(spread(df), text_col, id_col), th)
-    if impl != "agg":
-        raise ValueError(f"impl must be 'agg' or 'python', got {impl!r}")
-
-    t = F.col(text_col)
-    total_chars = F.greatest(F.length(t), F.lit(1))
-
-    def dup_stats(arr):
-        # duplicate chars = Σ over values v of (count(v)−1)·len(v),
-        # computed LINEARLY: sort the array once, then a single fold
-        # adds len(x) whenever x equals its sorted predecessor (each
-        # of a value's count−1 adjacent-equal pairs contributes one
-        # len). The per-distinct filter scan this replaces was
-        # O(lines × distinct_lines) IN-ROW — a 50k-line document cost
-        # ~10⁹ string comparisons on a single row (the same
-        # dial-dependent per-row cliff DSIR had before r9).
-        dup_cnt = F.size(arr) - F.size(F.array_distinct(arr))
-        dup_chars = F.aggregate(
-            F.array_sort(arr),
-            F.struct(
-                F.lit(None).cast("string").alias("prev"),
-                F.lit(0).cast("bigint").alias("chars"),
-            ),
-            _dup_char_step,
-            _acc_chars,
-        )
-        return dup_cnt, dup_chars
-
-    lines = F.split(t, "\n")
-    paras = F.split(t, "\n\n")
-    dl_cnt, dl_chars = dup_stats(lines)
-    dp_cnt, dp_chars = dup_stats(paras)
-
-    # materialize the fold-derived counts FIRST (the exact-round chain
-    # reads its operands several times; inlined folds were a measured
-    # 2x on this query), ratios in the next projection
-    base = df.select(
-        F.col(id_col).alias("doc_id"),
-        dl_cnt.alias("_dl_cnt"),
-        dp_cnt.alias("_dp_cnt"),
-        dl_chars.alias("_dl_chars"),
-        dp_chars.alias("_dp_chars"),
-        F.greatest(F.size(lines), F.lit(1)).alias("_nl"),
-        F.greatest(F.size(paras), F.lit(1)).alias("_np"),
-        total_chars.alias("n_chars"),
-        F.split(t, " ").alias("ws"),
-    ).select(
-        "doc_id",
-        round_ratio(F.col("_dl_cnt"), F.col("_nl"), 6).alias("dup_line_frac"),
-        round_ratio(F.col("_dp_cnt"), F.col("_np"), 6).alias("dup_para_frac"),
-        round_ratio(F.col("_dl_chars"), F.col("n_chars"), 6).alias("dup_line_char_frac"),
-        round_ratio(F.col("_dp_chars"), F.col("n_chars"), 6).alias("dup_para_char_frac"),
-        "n_chars",
-        "ws",
-    )
-
-    # HOF-free gram rows: explode positions, then an ARRAY of nine
-    # explicit struct expressions (ordinary codegen'd slice/concat —
-    # a transform() lambda here evaluates interpreted per element),
-    # filtered to valid spans after the explode
-    pos = base.select(
-        "doc_id",
-        "ws",
-        F.size("ws").alias("nw"),
-        F.explode(
-            F.sequence(F.lit(0), F.greatest(F.size("ws") - 2, F.lit(0)))
-        ).alias("i"),
-    )
-    nine = F.array(
-        *[
-            F.struct(
-                F.lit(n).alias("n"),
-                F.col("i").alias("pos"),
-                F.concat_ws(" ", F.slice(F.col("ws"), F.col("i") + 1, n)).alias("gram"),
-            )
-            for n in range(2, 11)
-        ]
-    )
-    ex = (
-        pos.select("doc_id", "nw", F.explode(nine).alias("g"))
-        .where(F.col("g.pos") + F.col("g.n") <= F.col("nw"))
-        .select(
-            "doc_id",
-            F.col("g.n").alias("n"),
-            F.col("g.pos").alias("pos"),
-            F.col("g.gram").alias("gram"),
-        )
-    )
-    # count-only aggregate (cheap: no per-group lists — carrying a
-    # position list for every gram, 97% unique, was the measured
-    # bottleneck), reduced to the per-(doc, n) FLAGGED gram keys
-    key = F.struct(
-        F.col("c").alias("c"), F.length("gram").alias("len"), F.col("gram").alias("gram")
-    )
-    cnt = ex.groupBy("doc_id", "n", "gram").agg(F.count(F.lit(1)).alias("c"))
-    per_n = cnt.groupBy("doc_id", "n").agg(
-        F.collect_list(F.when((F.col("c") > 1) & (F.col("n") >= 5), F.col("gram"))).alias(
-            "dup_grams"
-        ),
-        F.max_by("gram", key).alias("top_gram"),
-    )
-    keys = per_n.select(
-        "doc_id",
-        "n",
-        F.explode(
-            F.when(F.col("n") >= 5, F.col("dup_grams")).otherwise(F.array("top_gram"))
-        ).alias("gram"),
-    )
-    # probe the (re-derived, cheap) exploded frame with the flagged
-    # keys — AQE broadcasts the key side at bench scale; at corpus
-    # scale it degrades to a keyed shuffle of the gram rows, the same
-    # cost the count already paid
-    flagged = ex.join(keys, ["doc_id", "n", "gram"])
-    starts = flagged.groupBy("doc_id").agg(
-        *[
-            F.collect_set(F.when(F.col("n") == n, F.col("pos"))).alias(f"starts_{n}")
-            for n in range(2, 11)
-        ]
-    )
-    joined = base.join(starts, "doc_id", "left")
-
-    def covered_chars(n: int):
-        # union coverage via ONE merged-interval fold over the sorted
-        # start list: O(starts + words) per doc instead of the
-        # per-token exists scan's O(words × starts)
-        st = F.array_sort(
-            F.coalesce(F.col(f"starts_{n}"), F.array().cast("array<int>"))
-        )
-        return F.aggregate(
-            st,
-            F.struct(
-                F.lit(0).alias("end"), F.lit(0).cast("bigint").alias("chars")
-            ),
-            _merge_span(n),
-        )["chars"]
-
-    cov_staged = joined.select(
-        "*", *[covered_chars(n).alias(f"_cov_{n}") for n in range(2, 11)]
-    )
-    sig_cols = []
-    for n in (2, 3, 4):
-        sig_cols.append(
-            round_ratio(F.col(f"_cov_{n}"), F.col("n_chars"), 6).alias(
-                f"top_{n}gram_char_frac"
-            )
-        )
-    for n in range(5, 11):
-        sig_cols.append(
-            round_ratio(F.col(f"_cov_{n}"), F.col("n_chars"), 6).alias(
-                f"dup_{n}gram_char_frac"
-            )
-        )
-    full = cov_staged.select(
-        "doc_id",
-        "dup_line_frac",
-        "dup_para_frac",
-        "dup_line_char_frac",
-        "dup_para_char_frac",
-        *sig_cols,
-    )
-    out_cols = list(th)
-    passing = None
-    for c in out_cols:
-        ok = F.col(c) <= F.lit(th[c])
-        passing = ok if passing is None else (passing & ok)
-    return full.select("doc_id", *out_cols, passing.alias("pass_repetition"))
+    # per-doc gram counting is the heavy stage; raise the input's
+    # partition count to the session cores first (the conformance
+    # fixtures scan into ~4 splits). Narrow rows only.
+    return _rep_finalize(_rep_counts(spread(df), text_col, id_col), th)
 
 
 _REP_COUNT_SCHEMA = (
@@ -1105,25 +923,21 @@ _REP_COUNT_SCHEMA = (
 )
 
 
-def _rep_counts_python(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """The zero-exchange repetition formulation (r9 verdict ask #3):
-    every one of the 13 signals is a pure per-document function, so an
-    Arrow-batched ``mapInPandas`` stage computes the raw integer
-    counts per doc — a Counter over each n's grams, flagged starts
-    (argmax for n ≤ 4, duplicated for n ≥ 5), and union coverage via a
-    per-token mark array — with NO shuffle anywhere. Emits counts, not
-    fractions: the division/rounding runs in the same Spark
-    expressions as the agg path (:func:`_rep_finalize`), so rounding
-    semantics are identical by construction."""
+def _rep_counts(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """Raw repetition counts per document in one Arrow-batched
+    ``mapInPandas`` stage — a Counter over each n's grams, flagged
+    starts (argmax for n ≤ 4, duplicated for n ≥ 5), and union
+    coverage via a per-token mark array — with NO shuffle anywhere.
+    Emits counts, not fractions: :func:`_rep_finalize` divides and
+    rounds in Spark expressions."""
     from collections import Counter
 
     import pandas as pd
 
     def one(text: str) -> tuple:
         if text is None:
-            # replicate the agg path bit-for-bit: split(null) nulls the
-            # line/paragraph stats, while the gram pipeline yields no
-            # rows → coverage 0 over n_chars greatest(length(null),1)=1
+            # null text: null line/paragraph stats; no grams, so every
+            # coverage is 0 over n_chars greatest(length(null), 1) = 1
             return (1, None, None, None, None, None, None, *([0] * 9))
         lines = text.split("\n")
         paras = text.split("\n\n")
@@ -1183,9 +997,8 @@ def _rep_counts_python(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 
 def _rep_finalize(counts: DataFrame, th: dict[str, float]) -> DataFrame:
-    """Fractions + pass flag from raw repetition counts — the Spark
-    expressions shared verbatim with the agg path's arithmetic, so
-    both impls round identically."""
+    """Fractions + pass flag from raw repetition counts (exact-round
+    ratios, so the DuckDB replay matches to the last digit)."""
     nc = F.col("n_chars")
     sig_cols = [
         round_ratio(F.col("dup_line_cnt"), F.greatest(F.col("n_lines"), F.lit(1)), 6).alias(
@@ -1212,57 +1025,6 @@ def _rep_finalize(counts: DataFrame, th: dict[str, float]) -> DataFrame:
         ok = F.col(c) <= F.lit(th[c])
         passing = ok if passing is None else (passing & ok)
     return full.select("doc_id", *out_cols, passing.alias("pass_repetition"))
-
-
-def _dup_char_step(acc, x):
-    """Binary merge for the adjacent-equals fold in ``dup_stats``:
-    carries (previous element, duplicate chars so far) over the
-    SORTED array; ``x == prev`` is null for the first element, which
-    falls through to the zero branch."""
-    return F.struct(
-        x.alias("prev"),
-        (
-            acc["chars"] + F.when(x == acc["prev"], F.length(x)).otherwise(F.lit(0))
-        ).alias("chars"),
-    )
-
-
-def _acc_chars(acc):
-    """Unary finish for ``dup_stats``' fold (HOF-arity note on
-    _eq_term: module-level defs, not default-arg lambdas)."""
-    return acc["chars"]
-
-
-def _merge_span(n: int):
-    """Two-arg (accumulator, start) lambda factory for the span-union
-    fold: the accumulator carries (end of covered prefix, chars so
-    far). For each start p (sorted ascending), the newly-covered token
-    range is [max(p, end), min(p+n, |ws|)); its characters are the
-    token lengths plus the interior joining spaces, plus one more
-    space when the new range is flush against the previous coverage
-    (the space between token end−1 and end is then covered too)."""
-
-    def _f(acc, p):
-        end, chars = acc["end"], acc["chars"]
-        s = F.greatest(p, end)
-        e = F.least(p + F.lit(n), F.size("ws"))
-        width = e - s
-        token_chars = F.aggregate(
-            F.slice(F.col("ws"), s + 1, F.greatest(width, F.lit(0))),
-            F.lit(0).cast("bigint"),
-            lambda a, w: a + F.length(w),
-        )
-        contiguous = F.when(
-            (s == end) & (end > 0) & (width > 0), F.lit(1)
-        ).otherwise(F.lit(0))
-        add = F.when(
-            width > 0, token_chars + (width - 1) + contiguous
-        ).otherwise(F.lit(0).cast("bigint"))
-        return F.struct(
-            F.greatest(end, e).alias("end"), (chars + add).alias("chars")
-        )
-
-    return _f
 
 
 def ngram_topk(df: DataFrame, text_col: str, group_col: str, n: int = 2, k: int = 10) -> DataFrame:
@@ -1432,7 +1194,6 @@ def unigram_logprob(
     text_col: str,
     id_col: str,
     vocab_size: int = 200,
-    materialize: bool = False,
 ) -> DataFrame:
     """CCNet-style unigram language-model quality signal: score each
     document by the mean log10 probability of its words under the
@@ -1453,13 +1214,10 @@ def unigram_logprob(
     The term-count table feeds THREE consumers (top-V vocab, the
     corpus word-count scalar, the vocab size scalar) and Catalyst
     shares no subtrees across scalar subqueries, so the static plan
-    re-derives it per consumer — four corpus scans. ``materialize=
-    True`` caches it (vocabulary-sized, lazy, fault-tolerant, deduped
-    by plan) cutting the corpus to exactly two scans — the 100 TB
-    setting, where a corpus scan costs hours. The default is False
-    because at bench scale the measured cached-read overhead exceeds
-    the recompute it saves (sf0.1 A/B: 0.66 s uncached vs ~1.0 s
-    cached steady-state); equality of the two paths is pytest-locked.
+    re-derives it per consumer — four corpus scans. The plan stays
+    uncached: caching the counts (two corpus scans) measured slower at
+    bench scale, the cached read costing more than the recompute it
+    saves (sf0.1 A/B: 0.66 s uncached vs ~1.0 s cached steady-state).
     In a real pipeline the counts table is a reusable vocabulary
     artifact — write it once and score many batches against it.
     """
@@ -1468,8 +1226,6 @@ def unigram_logprob(
         F.explode(F.split(F.col(text_col), " +")).alias("term"),
     ).where(F.col("term") != "")
     counts = terms.groupBy("term").agg(F.count("*").alias("c"))
-    if materialize:
-        counts = counts.cache()
     vocab = counts.orderBy(F.col("c").desc(), F.col("term")).limit(vocab_size)
     totals = counts.agg(F.sum("c").cast("long").alias("n_words_corpus")).crossJoin(
         F.broadcast(vocab.agg(F.count("*").alias("v")))
@@ -2304,7 +2060,6 @@ def ccnet_buckets(
     text_col: str,
     id_col: str,
     vocab_size: int = 200,
-    materialize: bool = False,
     exact: bool = True,
     accuracy: int = 10_000,
 ) -> DataFrame:
@@ -2323,15 +2078,12 @@ def ccnet_buckets(
     same trade as ``quality_prune``'s approx path, with bucket
     agreement locked within the sketch's rank error; thresholds are
     rounded so the bucket boundaries are engine-portable.
+
+    The per-doc scores feed both the threshold aggregate and the output
+    projection and stay uncached, for the reason (and the sf0.1 A/B)
+    given in :func:`unigram_logprob`.
     """
-    # per-doc scores feed both the threshold aggregate and the output
-    # projection; materialize=True caches them (one row per document —
-    # tiny next to the corpus, lazy, fault-tolerant) so the scoring
-    # pipeline runs once — the at-scale setting, same bench-vs-scale
-    # trade as unigram_logprob's flag
-    scored = unigram_logprob(df, text_col, id_col, vocab_size, materialize=materialize)
-    if materialize:
-        scored = scored.cache()
+    scored = unigram_logprob(df, text_col, id_col, vocab_size)
     if exact:
         th = scored.agg(
             F.round(F.expr("percentile(mean_logprob, 1.0/3)"), 4).alias("t_lo"),
@@ -2956,7 +2708,6 @@ def bigram_logprob(
     text_col: str,
     id_col: str,
     lam: float = 0.7,
-    materialize: bool = False,
 ) -> DataFrame:
     """Interpolated bigram language-model quality signal — the next
     step up from :func:`unigram_logprob` toward CCNet's KenLM scorer:
@@ -2977,20 +2728,15 @@ def bigram_logprob(
 
     Like :func:`unigram_logprob`, the count tables feed multiple
     consumers and Catalyst shares no subtrees across them, so the
-    static plan re-derives the explodes per consumer.
-    ``materialize=True`` caches the unigram and bigram count tables
-    (both vocabulary-bounded, lazy, fault-tolerant) — the 100 TB
-    setting where a corpus scan costs hours; at bench scale the cached
-    read overhead exceeds the recompute saved, so the default is
-    False. Equality of the two paths is pytest-locked.
+    static plan re-derives the explodes per consumer. The tables stay
+    uncached: at bench scale the cached read costs more than the
+    recompute it saves (the sf0.1 A/B in :func:`unigram_logprob`).
     """
     raw = F.split(F.col(text_col), " +")
     words = F.filter(raw, lambda w: w != F.lit(""))
     base = df.select(F.col(id_col).alias("doc_id"), words.alias("ws"))
     toks = base.select("doc_id", F.explode("ws").alias("term"))
     uni = toks.groupBy("term").agg(F.count("*").alias("cu"))
-    if materialize:
-        uni = uni.cache()
     totals = uni.agg(
         F.sum("cu").cast("long").alias("n_corpus"), F.count("*").alias("v")
     )
@@ -3008,8 +2754,6 @@ def bigram_logprob(
         "doc_id", F.col("p.prev").alias("prev"), F.col("p.w").alias("w")
     )
     bi = pairs.groupBy("prev", "w").agg(F.count("*").alias("cb"))
-    if materialize:
-        bi = bi.cache()
     scored = (
         pairs.join(bi, ["prev", "w"])
         .join(uni.select(F.col("term").alias("prev"), F.col("cu").alias("c_prev")), "prev")

@@ -1588,15 +1588,7 @@ def q_text_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
             "\n", F.col("text"), F.substring("text", 1, 40), F.substring("text", 1, 40)
         ).alias("text"),
     )
-    # r16: impl="python" (the zero-exchange Arrow formulation) — the
-    # r10 study measured it 1.3x SLOWER than the agg path; re-measured
-    # on Spark 4.1 it is now 2.7x FASTER (5.38 s -> 1.99 s, 1.31 s
-    # with the spread below), so the bench/conformance entry runs it.
-    # The two impls agree bit-for-bit (differential pytest,
-    # tests/test_r10_fixes.py) and the oracle replays unchanged.
-    return T.gopher_repetition_rules(built, "text", "doc_id", impl="python").orderBy(
-        "doc_id"
-    )
+    return T.gopher_repetition_rules(built, "text", "doc_id").orderBy("doc_id")
 
 
 def _oracle_gopher_repetition(

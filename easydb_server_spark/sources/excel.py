@@ -12,11 +12,12 @@ read with zero third-party engines, matching the reference's native
 support. ``set_excel_loader`` remains the injection seam for tests or
 an openpyxl/calamine-backed loader.
 
-Scale note (SURVEY.md §7.4 risk 6): the per-file pandas load keeps the
-reference's semantics; for many/huge workbooks the scale path is
-``spark.read.format("binaryFile")`` + ``mapInPandas`` so each workbook
-decodes on an executor. The loader indirection here is exactly that
-seam — the same function body moves into the mapInPandas closure.
+Scale note (SURVEY.md §7.4 risk 6): every workbook loads on the driver,
+the reference's semantics. For many or huge workbooks the scale shape
+is ``spark.read.format("binaryFile")`` + ``mapInPandas``, decoding each
+workbook on an executor with ``xlsx_codec.load_xlsx_bytes``; it is not
+built, because it needs the result schema up front (the driver opens no
+file) and no request path could supply one.
 """
 
 from __future__ import annotations
@@ -28,7 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from easydb_server_spark.errors import NotFoundError
-from easydb_server_spark.sources.xlsx_codec import load_xlsx, load_xlsx_bytes
+from easydb_server_spark.sources.formats import split_sheet
+from easydb_server_spark.sources.xlsx_codec import load_xlsx
 
 _loader: Callable[[str, str | int], pd.DataFrame] | None = None
 
@@ -45,11 +47,11 @@ def _default_loader(path: str, sheet: str | int) -> pd.DataFrame:
 
 
 def read_xlsx(spark: SparkSession, resolved_path: str) -> DataFrame:
-    """Read all glob-matched workbooks into one DataFrame."""
-    path, sheet = resolved_path, 0
-    if "#" in resolved_path:
-        path, sheet_name = resolved_path.rsplit("#", 1)
-        sheet = sheet_name
+    """Read all glob-matched workbooks into one DataFrame; a
+    ``#SheetName`` suffix selects the sheet (default: the first)."""
+    path, sheet = split_sheet(resolved_path)
+    if sheet is None:
+        sheet = 0
     files = sorted(_glob.glob(path))
     if not files:
         raise NotFoundError(f"No files match path: {path!r}")
@@ -57,36 +59,3 @@ def read_xlsx(spark: SparkSession, resolved_path: str) -> DataFrame:
     pdfs = [loader(f, sheet) for f in files]
     merged = pd.concat(pdfs, ignore_index=True)
     return spark.createDataFrame(merged)
-
-
-def read_xlsx_distributed(spark: SparkSession, resolved_path: str, schema: str) -> DataFrame:
-    """Scale path (SURVEY.md §7.4 risk 6): each workbook decodes on an
-    executor via binaryFile + mapInPandas — no driver materialization,
-    parallelism = number of workbooks.
-
-    Requires an explicit result ``schema`` (the driver never opens a
-    file, so nothing can be inferred). The loader is snapshotted by
-    value into the closure: worker processes don't share driver module
-    state.
-    """
-    from collections.abc import Iterator
-
-    path, sheet = resolved_path, 0
-    if "#" in resolved_path:
-        path, sheet_name = resolved_path.rsplit("#", 1)
-        sheet = sheet_name
-    loader = _loader  # None → vendored stdlib decoder from bytes in the worker
-    cols = [f.split()[0] for f in schema.split(",")]
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                payload = bytes(row["content"])
-                if loader is not None:
-                    out = loader(row["path"], sheet)
-                else:
-                    out = load_xlsx_bytes(payload, sheet)
-                yield out[cols]
-
-    blobs = spark.read.format("binaryFile").load(path).select("path", "content")
-    return blobs.mapInPandas(decode, schema)

@@ -45,9 +45,21 @@ _EXT_MAP = {
 }
 
 
+def split_sheet(path: str) -> tuple[str, str | None]:
+    """Split an xlsx ``path#SheetName`` suffix off
+    (`src/data_source/excel.rs:11-101`): ``('wb.xlsx', 'Sheet2')`` for
+    ``'wb.xlsx#Sheet2'``; any other path comes back whole with no
+    sheet, so a ``#`` inside another file's name stays part of it."""
+    base, sep, sheet = path.rpartition("#")
+    if sep and os.path.splitext(base)[1].lower() == ".xlsx":
+        return base, sheet
+    return path, None
+
+
 def get_format(path: str) -> DataSourceFormat:
-    """Route by extension; JSON is recognized-but-rejected at read time."""
-    _, ext = os.path.splitext(path)
+    """Route by extension (of the path without an xlsx sheet suffix);
+    JSON is recognized-but-rejected at read time."""
+    _, ext = os.path.splitext(split_sheet(path)[0])
     fmt = _EXT_MAP.get(ext.lower())
     if fmt is None:
         raise UnsupportedFormatError(f"Unsupported file format: {path!r}")

@@ -64,7 +64,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 
 from easydb_server_spark.errors import NotFoundError, UnsupportedFormatError
-from easydb_server_spark.sources.formats import DataSourceFormat, get_format
+from easydb_server_spark.sources.formats import DataSourceFormat, get_format, split_sheet
 
 DEFAULT_DATA_DIR = "/var/lib/easydb"
 
@@ -228,7 +228,8 @@ def read_path(spark: SparkSession, path: str, reuse: bool = True) -> DataFrame:
     ``reuse=False`` builds a fresh DataFrame and adds nothing."""
     fmt = get_format(path)
     resolved = os.path.normpath(resolve_path(path))
-    files = _listing(resolved)
+    # an xlsx '#SheetName' suffix is no part of the file names
+    files = _listing(split_sheet(resolved)[0])
     if not files:
         raise NotFoundError(f"No files match path: {path!r}")
     if fmt == DataSourceFormat.JSON:

@@ -79,6 +79,26 @@ class TestReadmeScenario:
         assert out["rows"] == [["John Doe", "Apple"], ["Jane Roe", "Banana"]]
 
 
+    def test_xlsx_sheet_suffix_selects_the_sheet(self, engine, data_dir):
+        """``path#SheetName`` (`src/data_source/excel.rs:11-101`)
+        through /fetch, cataloged and quoted: the suffix picks the sheet
+        and is no part of the file name routed or listed."""
+        from easydb_server_spark.sources.xlsx_codec import write_xlsx
+
+        for i in (1, 2):
+            write_xlsx(
+                str(data_dir / f"wb{i}.xlsx"),
+                {"Sheet1": (["a"], [[i]]), "Sheet2": (["b", "c"], [[f"x{i}", 10 * i]])},
+            )
+        engine.query("create table s2 () location 'wb1.xlsx#Sheet2'")
+        out = engine.query("select b, c from s2")
+        assert (out["header"], out["rows"]) == (["b", "c"], [["x1", "10"]])
+        out = engine.query("select b, c from 'wb*.xlsx#Sheet2' order by c")
+        assert out["rows"] == [["x1", "10"], ["x2", "20"]]
+        out = engine.query("select a from 'wb1.xlsx'")
+        assert (out["header"], out["rows"]) == (["a"], [["1"]])
+
+
 class TestParityBehaviors:
     def test_implicit_limit_200(self, engine):
         out = engine.query("select * from '/root/testdata/sf0.001/lineitem.parquet'")

@@ -445,16 +445,11 @@ def test_gopher_repetition_pathological(spark, drawn):
     con = duckdb.connect()
     con.register("docs_nn", pd.DataFrame(rows, columns=["doc_id", "text"]))
     want = con.execute(_oracle_gopher_repetition("text", "docs_nn")).df()
-    for impl in ("agg", "python"):
-        got = (
-            gopher_repetition_rules(sdf, "text", "doc_id", impl=impl)
-            .orderBy("doc_id")
-            .toPandas()
-        )
-        _assert_match(got, want, (impl, drawn))
-        for col in got.columns:
-            if col.endswith("_frac"):
-                assert (got[col].dropna() <= 1.0).all(), (impl, col)
+    got = gopher_repetition_rules(sdf, "text", "doc_id").orderBy("doc_id").toPandas()
+    _assert_match(got, want, drawn)
+    for col in got.columns:
+        if col.endswith("_frac"):
+            assert (got[col].dropna() <= 1.0).all(), col
 
 
 # ---------------------------------------------------------------------------

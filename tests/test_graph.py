@@ -75,18 +75,6 @@ def test_matches_reference_replay(spark, edges, iterations):
     assert _run(spark, edges, iterations) == ref_pagerank(edges, iterations)
 
 
-def test_bounded_memory_mode_is_equivalent(spark):
-    edges = [(1, 2), (2, 3), (3, 1), (1, 3), (4, 1)]
-    lazy = _run(spark, edges, iterations=4)
-    eager = {
-        r.node: r.rank
-        for r in pagerank(
-            spark.createDataFrame(edges, ["s", "d"]), "s", "d", 4, bounded_memory=True
-        ).collect()
-    }
-    assert lazy == eager == ref_pagerank(edges, 4)
-
-
 def test_driver_and_distributed_paths_agree(spark, monkeypatch):
     """r16 driver-dispatch lock (the CC/BPE differential pattern):
     the SAME graphs through the numpy driver replay and, with the

@@ -228,30 +228,6 @@ class TestIvfLifecycle:
             append_to_ivf_store(spark, batch, "v", "vec_id", store)
 
 
-class TestJoinPruneServing:
-    def test_join_path_matches_static_pruning(self, spark, embeddings, store):
-        """prune='join' (no driver collect — the unbounded-query-set
-        shape) must serve identical results to the static isin path."""
-        from easydb_server_spark.operators.similarity import (
-            topk_cosine_ivf_store,
-            write_ivf_store,
-        )
-
-        write_ivf_store(embeddings, "embedding", "vec_id", store, n_cells=8)
-        q = embeddings.where(F.col("vec_id") < 6)
-        static = topk_cosine_ivf_store(
-            spark, store, q, "embedding", "vec_id", k=3, nprobe=2, prune="static"
-        )
-        joined = topk_cosine_ivf_store(
-            spark, store, q, "embedding", "vec_id", k=3, nprobe=2, prune="join"
-        )
-        assert sorted(map(tuple, static.collect())) == sorted(map(tuple, joined.collect()))
-        # the join path must not collect cells: its plan carries no
-        # static isin partition filter, only the broadcast semi join
-        p = _explain(joined)
-        assert "BroadcastHashJoin" in p or "BroadcastExchange" in p
-
-
 class TestIncrementalEmbeddingNeardup:
     def test_batch_dups_found_novel_vectors_pass(self, spark, store):
         from easydb_server_spark.operators.similarity import (

@@ -1052,40 +1052,6 @@ class TestQuantizeEmbeddings:
         assert r.scale == 0.0 and list(r.qvec) == [0, 0, 0]
 
 
-class TestUnigramMaterialize:
-    def test_materialized_path_is_equivalent_and_scans_less(self, spark, docs):
-        import contextlib
-        import io
-
-        from easydb_server_spark.operators.text import ccnet_buckets, unigram_logprob
-
-        d = docs.select("doc_id", "text").limit(200)
-
-        def plan(df):
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
-            return buf.getvalue()
-
-        # order matters: Spark's CacheManager matches by canonical
-        # plan, so the lazy variant must be inspected/collected BEFORE
-        # materialize=True caches the shared term-count subtree
-        lazy = unigram_logprob(d, "text", "doc_id")
-        try:
-            assert "InMemoryTableScan" not in plan(lazy)
-            lazy_rows = sorted(map(tuple, lazy.collect()))
-            b_lazy_rows = sorted(map(tuple, ccnet_buckets(d, "text", "doc_id").collect()))
-            mat = unigram_logprob(d, "text", "doc_id", materialize=True)
-            # the term-count consumers read the cache, not the corpus
-            assert "InMemoryTableScan" in plan(mat)
-            assert lazy_rows == sorted(map(tuple, mat.collect()))
-            b_mat = ccnet_buckets(d, "text", "doc_id", materialize=True)
-            assert "InMemoryTableScan" in plan(b_mat)
-            assert b_lazy_rows == sorted(map(tuple, b_mat.collect()))
-        finally:
-            spark.catalog.clearCache()
-
-
 class TestResampleLocf:
     def test_fill_carries_forward_and_respects_gaps(self, spark):
         from datetime import datetime
@@ -1638,13 +1604,6 @@ class TestBigramLogprob:
         assert got[2].n_bigrams == 2 and got[2].mean_logprob == round(lp2, 5)
         # the 'solo' (and any <2-token) doc scores no bigrams
         assert 3 not in got
-
-    def test_materialized_path_is_identical(self, spark, docs):
-        from easydb_server_spark.operators.text import bigram_logprob
-
-        a = bigram_logprob(docs, "text", "doc_id").collect()
-        b = bigram_logprob(docs, "text", "doc_id", materialize=True).collect()
-        assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
 class TestAsofForward:

@@ -104,23 +104,15 @@ class TestNgramSpansExactVerify:
 
         exact = {
             (r.doc_id, r.pos)
-            for r in duplicate_ngram_spans(df, "text", "doc_id", verify=True).collect()
+            for r in duplicate_ngram_spans(df, "text", "doc_id").collect()
         }
         assert exact == truth  # zero false clips under forced collisions
-
-        # and the test has teeth: without the verify pass the narrowed
-        # hash DOES produce false flags
-        approx = {
-            (r.doc_id, r.pos)
-            for r in duplicate_ngram_spans(df, "text", "doc_id", verify=False).collect()
-        }
-        assert approx > truth
 
     def test_verified_n_docs_is_string_exact(self, spark, narrowed_hash):
         from easydb_server_spark.operators.dedup import duplicate_ngram_spans
 
         df = spark.createDataFrame(self.DOCS, "doc_id long, text string")
-        rows = duplicate_ngram_spans(df, "text", "doc_id", verify=True).collect()
+        rows = duplicate_ngram_spans(df, "text", "doc_id").collect()
         # the only true duplicate gram occurs in exactly 2 docs — a
         # hash-keyed count under collisions would inflate this
         assert rows and all(r.n_docs == 2 for r in rows)

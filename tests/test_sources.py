@@ -325,20 +325,6 @@ class TestExcel:
         df2 = read_xlsx(spark, str(data_dir / "multi1.xlsx") + "#Extra")
         assert sorted(r.b for r in df2.collect()) == [10, 100]
 
-    def test_real_workbook_distributed_decode(self, spark, data_dir):
-        """binaryFile + mapInPandas with the vendored decoder (no
-        injected loader) — workbooks decode from bytes on executors."""
-        from easydb_server_spark.sources.excel import read_xlsx_distributed
-        from easydb_server_spark.sources.xlsx_codec import write_xlsx
-
-        for i in (1, 2):
-            write_xlsx(
-                str(data_dir / f"dist{i}.xlsx"),
-                {"S": (["name", "score"], [[f"w{i}", float(i)]])},
-            )
-        df = read_xlsx_distributed(spark, str(data_dir / "dist*.xlsx"), "name string, score double")
-        assert sorted((r.name, r.score) for r in df.collect()) == [("w1", 1.0), ("w2", 2.0)]
-
     def test_sheet_name_with_quotes_roundtrips(self, spark, data_dir):
         from easydb_server_spark.sources.xlsx_codec import load_xlsx, write_xlsx
 
@@ -367,28 +353,6 @@ class TestExcel:
         (data_dir / "bad.xlsx").write_bytes(b"not a zip at all")
         with pytest.raises(UnsupportedFormatError, match="xlsx"):
             read_xlsx(spark, str(data_dir / "bad.xlsx"))
-
-    def test_distributed_reader_decodes_on_executors(self, spark, data_dir):
-        """Scale path: binaryFile + mapInPandas, loader captured by
-        value so it exists in worker processes."""
-        import pandas as pd
-
-        from easydb_server_spark.sources.excel import read_xlsx_distributed
-
-        (data_dir / "d1.xlsx").write_bytes(b"fake-bytes-1")
-        (data_dir / "d2.xlsx").write_bytes(b"fake-bytes-22")
-
-        def fake(path, sheet):
-            return pd.DataFrame({"name": [path.rsplit("/", 1)[-1]], "score": [1.5]})
-
-        set_excel_loader(fake)
-        try:
-            df = read_xlsx_distributed(spark, str(data_dir / "d*.xlsx"), "name string, score double")
-            rows = sorted(r.name for r in df.collect())
-            assert rows == ["d1.xlsx", "d2.xlsx"]
-        finally:
-            set_excel_loader(None)
-
 
 class TestStringify:
     @pytest.mark.parametrize(

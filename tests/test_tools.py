@@ -4,6 +4,7 @@ at fixture scale, and every tool module still imports."""
 from __future__ import annotations
 
 import importlib
+import sys
 from pathlib import Path
 
 import pytest
@@ -26,3 +27,21 @@ def test_time_query_returns_positive_samples(spark):
 @pytest.mark.parametrize("name", TOOLS)
 def test_tool_imports(name):
     importlib.import_module(f"tools.{name}")
+
+
+def test_abtime_rejects_a_toggle_the_module_lacks(monkeypatch):
+    """A missing attribute would be created by the toggle and both
+    sides would time the same code: exit before any timing."""
+    import bench
+    from tools import abtime
+
+    def no_timing(*_a, **_k):
+        raise AssertionError("abtime reached the timing path")
+
+    monkeypatch.setattr(bench, "fixture_dir", no_timing)
+    monkeypatch.setattr(
+        sys, "argv", ["abtime.py", "graph_pagerank", "easydb_server_spark.operators.graph:NO_SUCH=0,1"]
+    )
+    with pytest.raises(SystemExit) as exc:
+        abtime.main()
+    assert "NO_SUCH" in str(exc.value.code)

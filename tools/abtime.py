@@ -4,9 +4,12 @@ states, so the variants must be selectable at runtime).
 
 Usage: python tools/abtime.py [-n RUNS] query toggle_module:attr=valA,valB
 
-Example:
-  python tools/abtime.py -n 7 curation_pipeline_mm \
-      easydb_server_spark.queries.llmops:_MM_SPREAD=0,1
+Example (driver-side PageRank against the distributed superstep):
+  python tools/abtime.py -n 7 graph_pagerank \
+      easydb_server_spark.operators.graph:DRIVER_PR_MAX_EDGES=-1,1048576
+
+The attribute must already exist on the module: a misspelt one would
+only be created by the toggle, and both sides would run the same code.
 
 Runs one warm pass per side, then alternates A,B,A,B,... RUNS times
 each through bench.py's timing path, reporting per-side medians —
@@ -37,6 +40,8 @@ def main() -> None:
     modattr, vals = toggle.split("=")
     mod_name, attr = modattr.split(":")
     mod = importlib.import_module(mod_name)
+    if not hasattr(mod, attr):
+        sys.exit(f"abtime: {mod_name} has no attribute {attr!r} to toggle")
 
     def parse(v: str):
         # "on"/"off" toggle a FUNCTION attr: on = the real function,

@@ -6,10 +6,11 @@ Writes both fact tables ``bucketBy(N, orderkey).sortBy(orderkey)``
 into the Spark warehouse, then runs the same join+aggregate once over
 the raw parquet and once over the bucketed tables and reports measured
 wall-clock and shuffle-write bytes for each (stage metrics from the
-local UI REST API). With bucketed layout the sort-merge join reads
-co-located, pre-sorted buckets and the physical plan contains NO
-Exchange on either side — the claim locked by
-tests/test_bucketing.py, here backed by measured bytes.
+SparkContext's status store, which keeps them with the UI off). With
+bucketed layout the sort-merge join reads co-located, pre-sorted
+buckets and the physical plan contains NO Exchange on either side —
+the claim locked by tests/test_bucketing.py, here backed by measured
+bytes.
 
 At 100 TB this is the ingest-time trade: one extra shuffle when the
 fact tables land (the bucketed write) buys every subsequent
@@ -27,7 +28,6 @@ from __future__ import annotations
 import json
 import sys
 import time
-import urllib.request
 from pathlib import Path
 
 _REPO = str(Path(__file__).resolve().parent.parent)
@@ -37,13 +37,16 @@ if _REPO not in sys.path:
 
 def _shuffle_totals(spark) -> tuple[int, int]:
     """Cumulative (shuffle_write_bytes, shuffle_read_bytes) across all
-    completed stages, from the local UI REST API."""
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-    with urllib.request.urlopen(f"{ui}/api/v1/applications/{app_id}/stages") as r:
-        stages = json.load(r)
-    write = sum(s.get("shuffleWriteBytes", 0) for s in stages)
-    read = sum(s.get("shuffleReadBytes", 0) for s in stages)
+    stages, from the status store the UI REST API would serve (it is
+    filled whether or not the UI runs)."""
+    sc = spark.sparkContext
+    no_quantiles = sc._gateway.new_array(sc._jvm.double, 0)
+    stages = sc._jsc.sc().statusStore().stageList(None, False, False, no_quantiles, None)
+    write = read = 0
+    for i in range(stages.size()):
+        s = stages.apply(i)
+        write += s.shuffleWriteBytes()
+        read += s.shuffleReadBytes()
     return write, read
 
 
@@ -68,26 +71,9 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     n_buckets = int(sys.argv[2]) if len(sys.argv) > 2 else 16
 
-    import os
+    from easydb_server_spark.session import get_spark
 
-    from pyspark.sql import SparkSession
-
-    # not get_spark(): this tool needs the UI REST API for stage-level
-    # shuffle metrics, and spark.ui.enabled is a static conf — set it
-    # before the JVM exists. Everything else mirrors the factory.
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    spark = (
-        SparkSession.builder.appName("bucketize")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        .config("spark.ui.enabled", "true")
-        .config("spark.sql.parquet.compression.codec", "zstd")
-        .getOrCreate()
-    )
+    spark = get_spark("bucketize")
     o = spark.read.parquet(f"{sf_dir}/orders.parquet")
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
 

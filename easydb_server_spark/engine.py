@@ -8,7 +8,9 @@
    (A9), register them by format (A1–A8), resolve remaining names
    against the catalog and register those too (A10), reject when no
    table is referenced (A23); each source resolves once per change
-   signature and a view is rebound only when its source changed
+   signature, a view is rebound only when its source changed, and a
+   source within ``spark.sql.files.openCostInBytes`` is one partition,
+   so a group-by, sort or window over it plans no Exchange
    (``sources/readers.py``);
 4. ``spark.sql`` — Catalyst parses/optimizes/executes (the
    reference's single ``ctx.sql`` call, §2.B); the request's path

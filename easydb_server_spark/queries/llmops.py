@@ -1624,10 +1624,10 @@ inrow_n AS (
   SELECT doc_id, n_chars,
     len(ls) - len(list_distinct(ls)) AS dl_cnt, GREATEST(len(ls), 1) AS nl,
     len(ps) - len(list_distinct(ps)) AS dp_cnt, GREATEST(len(ps), 1) AS np,
-    COALESCE(list_sum(list_transform(list_distinct(ls),
-        d -> (len(list_filter(ls, x -> x = d)) - 1) * length(d))), 0) AS dl_chars,
-    COALESCE(list_sum(list_transform(list_distinct(ps),
-        d -> (len(list_filter(ps, x -> x = d)) - 1) * length(d))), 0) AS dp_chars
+    list_sum(list_transform(list_distinct(ls),
+        d -> (len(list_filter(ls, x -> x = d)) - 1) * length(d))) AS dl_chars,
+    list_sum(list_transform(list_distinct(ps),
+        d -> (len(list_filter(ps, x -> x = d)) - 1) * length(d))) AS dp_chars
   FROM base
 ),
 inrow AS (

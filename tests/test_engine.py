@@ -265,10 +265,114 @@ class TestParityBehaviors:
         assert rows == 3
 
 
+@pytest.fixture()
+def open_cost(spark):
+    """Set ``spark.sql.files.openCostInBytes`` for one test: the
+    readers' single-partition threshold, and Spark's file split cost."""
+    key = "spark.sql.files.openCostInBytes"
+    old = spark.conf.get(key)
+    yield lambda n: spark.conf.set(key, str(n))
+    spark.conf.set(key, old)
+
+
+def _shuffled_csv(path, n):
+    """``k,v`` rows for k in 0..n-1, in a fixed non-sorted order."""
+    path.write_text("k,v\n" + "".join(f"{k},{k % 7}\n" for k in ((i * 7919) % n for i in range(n))))
+
+
 class TestSourceCache:
     """Each source resolves once per change signature and small ones
     are served from Spark's cache (sources/readers.py); every request
     still sees the files as they are."""
+
+    @pytest.mark.parametrize(
+        "sql",
+        [
+            "select v, count(*) as n, sum(k) as s from t group by v order by v",
+            "select k, rank() over (partition by v order by k desc) as r from t order by k",
+        ],
+    )
+    def test_small_source_runs_as_one_job_without_exchange(self, engine, data_dir, spark, sql):
+        """A source within openCostInBytes is one partition, so a
+        group-by, ORDER BY or window over it needs no Exchange and the
+        request (capped like /fetch) runs one Spark job."""
+        from easydb_server_spark.results import INTERACTIVE_LIMIT
+
+        _shuffled_csv(data_dir / "t.csv", 500)
+        engine.query("create table t () location 't.csv'")
+        want = engine.query(sql)["rows"]  # fills the source's cache
+        sc = spark.sparkContext
+        df = engine.dataframe(sql).limit(INTERACTIVE_LIMIT)
+        group = f"one-job: {sql}"
+        sc.setJobGroup(group, group)
+        try:
+            rows = df.collect()
+        finally:
+            sc.setJobGroup("", "")
+        assert [[str(c) for c in r] for r in rows] == want
+        assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+    def test_source_above_open_cost_keeps_its_split(self, engine, data_dir, open_cost):
+        from easydb_server_spark.sources import readers
+
+        _shuffled_csv(data_dir / "t.csv", 500)
+        open_cost(1024)  # t.csv is ~3 KB
+        engine.query("create table t () location 't.csv'")
+        out = engine.query("select v, count(*) as n from t group by v order by v")
+        assert [int(r[1]) for r in out["rows"]] == [72, 72, 72, 71, 71, 71, 71]
+        df = readers._SCHEMA_CACHE[(str(data_dir / "t.csv"), "csv")].df
+        assert df.rdd.getNumPartitions() > 1
+
+    def test_glob_grown_past_open_cost_switches_to_parallel_split(self, engine, data_dir, open_cost):
+        from easydb_server_spark.sources import readers
+
+        open_cost(300)
+        key = (str(data_dir / "grow_*.csv"), "csv")
+        engine.query("create table grow () location 'grow_*.csv'")
+        sql = "select k from grow order by k"
+        partitions = []
+        for i in range(4):  # ~100 bytes a file: 1 and 2 files fit in 300
+            (data_dir / f"grow_{i}.csv").write_text("k,pad\n" + "".join(f"{10 * i + j},{'x' * 8}\n" for j in range(8)))
+            rows = engine.query(sql)["rows"]
+            assert rows == [[str(10 * f + j)] for f in range(i + 1) for j in range(8)]
+            partitions.append(readers._SCHEMA_CACHE[key].df.rdd.getNumPartitions())
+        assert partitions[0] == 1 and partitions[-1] > 1
+
+    def test_one_shot_read_is_not_coalesced(self, spark, data_dir):
+        """A two-file glob within openCostInBytes reads as two splits;
+        the reused source is one partition, a reuse=False read is not."""
+        from easydb_server_spark.sources.readers import read_path
+
+        assert read_path(spark, "order_*.csv").rdd.getNumPartitions() == 1
+        assert read_path(spark, "order_*.csv", reuse=False).rdd.getNumPartitions() == 2
+
+    @pytest.mark.parametrize("cost", [None, 4096])
+    def test_ordered_export_is_sorted_over_one_or_many_partitions(
+        self, engine, data_dir, open_cost, cost, tmp_path, monkeypatch
+    ):
+        """The single-file export concatenates part files in name order,
+        so an ORDER BY must come out sorted whether the source is one
+        partition (within openCostInBytes) or split (above it)."""
+        import json
+
+        from easydb_server_spark import export as ex
+        from easydb_server_spark.sources import readers
+
+        monkeypatch.setattr(ex, "EXPORT_DIR", str(tmp_path / "exports"))
+
+        _shuffled_csv(data_dir / "t.csv", 3000)  # ~18 KB
+        if cost is not None:
+            open_cost(cost)
+        engine.query("create table t () location 't.csv'")
+        sql = "select k, v from t order by k"
+        lines = open(engine.export(sql, "csv")).read().splitlines()
+        assert lines[0] == "k,v"
+        assert [int(line.split(",")[0]) for line in lines[1:]] == list(range(3000))
+        lines = open(engine.export(sql, "json")).read().splitlines()
+        assert [json.loads(line)["k"] for line in lines] == list(range(3000))
+        df = readers._SCHEMA_CACHE[(str(data_dir / "t.csv"), "csv")].df
+        assert (df.rdd.getNumPartitions() == 1) == (cost is None)
 
     def test_rebinding_a_name_reads_each_location(self, engine, data_dir):
         """A→p1→p2→p1: the view is keyed by name, so going back to p1

@@ -44,3 +44,11 @@ def canon_frame(pdf):
     rows = [tuple(canon_cell(v) for v in row) for row in pdf.itertuples(index=False, name=None)]
     rows.sort()
     return cols, rows
+
+
+def fetch_oracle(con, sql: str):
+    """DuckDB result of ``sql`` as a pandas DataFrame shaped like Spark's
+    ``toPandas``: fetched through Arrow, a NULL BOOLEAN stays None (DuckDB's
+    ``.df()`` turns it into NaN, canonical "NaN" against Spark's "NULL"),
+    and DATE columns stay datetime64 as ``.df()`` gives them."""
+    return con.execute(sql).fetch_arrow_table().to_pandas(date_as_object=False)

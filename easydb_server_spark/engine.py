@@ -149,16 +149,10 @@ class Engine:
         for /tables listing parity.
         """
         from easydb_server_spark.sources.readers import read_path
+        from easydb_server_spark.tables import write_table
 
         df = read_path(self.spark, source_path, reuse=False)
-        (
-            df.repartition(n_buckets, bucket_by)
-            .write.bucketBy(n_buckets, bucket_by)
-            .sortBy(bucket_by)
-            .mode("overwrite")
-            .format("parquet")
-            .saveAsTable(name)
-        )
+        write_table(df.repartition(n_buckets, bucket_by), name, bucket_by, n_buckets)
         location = self.spark.sql(f"DESCRIBE TABLE EXTENDED {name}").where(
             "col_name = 'Location'"
         ).collect()[0][1]

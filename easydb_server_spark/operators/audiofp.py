@@ -41,6 +41,9 @@ partition-parallel, nothing collected); grouping shuffles one short
 row per clip keyed on the fingerprint. At 100 TB this is the same
 plan as exact text dedup (operators/dedup.py exact_dedup) — the
 digest is just derived from spectra instead of bytes.
+
+The persisted landmark index is written and compacted through
+:mod:`easydb_server_spark.tables`; appends stay here.
 """
 
 from __future__ import annotations
@@ -51,6 +54,8 @@ from collections.abc import Iterator
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
+
+from easydb_server_spark.tables import keep_one_per_key, recover_staged, rewrite_table, write_table
 
 FP_SCHEMA = "item_id bigint, n_frames int, peak_seq string, fp string"
 
@@ -427,12 +432,7 @@ def write_landmark_index(lms: DataFrame, table: str, n_buckets: int = 16) -> Non
     side — the landmark equi-join and the stop-bucket count both key
     on ``lm``, so the corpus audio is decoded exactly once, at ingest,
     and never touched again per batch."""
-    (
-        lms.write.bucketBy(n_buckets, "lm")
-        .sortBy("lm")
-        .mode("overwrite")
-        .saveAsTable(table)
-    )
+    write_table(lms, table, bucket_by="lm", n_buckets=n_buckets)
 
 
 def append_landmark_index(lms: DataFrame, table: str, n_buckets: int = 16) -> None:
@@ -454,39 +454,16 @@ def compact_landmark_index(spark, table: str, n_buckets: int = 16) -> int:
     and voting count DISTINCT landmarks per item (audio_landmarks'
     contract) and votes per (item, t) cell, so duplicated rows are the
     only thing compaction removes; results are unchanged by
-    construction. Crash-safe via the dedup staged swap. Returns the
-    kept row count."""
-    from easydb_server_spark.operators.dedup import (
-        _recover_staged,
-        _staged_swap_write,
-    )
-
-    from pyspark.sql import Window
-
-    _recover_staged(spark, table)
+    construction. Crash-safe via
+    :func:`~easydb_server_spark.tables.rewrite_table`. Returns the
+    kept row count. The streaming-ingest form (partitioned by
+    ``batch_id``) keeps the earliest admission of each landmark row and
+    its partitioning, so replay exists-checks stay partition-pruned."""
+    recover_staged(spark, table)
     t = spark.table(table)
-    if "batch_id" in t.columns:
-        # streaming-ingest form (batch_id partitions): keep the
-        # earliest admission of each landmark row, preserve the
-        # partitioning so replay exists-checks stay partition-pruned
-        w = Window.partitionBy("item_id", "t", "lm").orderBy(F.col("batch_id").asc())
-        keep = (
-            t.withColumn("_r", F.row_number().over(w))
-            .where(F.col("_r") == 1)
-            .drop("_r")
-            .localCheckpoint(eager=True)
-        )
-        _staged_swap_write(
-            spark, keep.repartition(n_buckets, "lm"), table, "lm", n_buckets,
-            partition_col="batch_id",
-        )
-    else:
-        keep = (
-            t.dropDuplicates(["item_id", "t", "lm"])
-            .localCheckpoint(eager=True)
-        )
-        _staged_swap_write(spark, keep.repartition(n_buckets, "lm"), table, "lm", n_buckets)
-    return keep.count()
+    keep = keep_one_per_key(t, ["item_id", "t", "lm"], "batch_id")
+    part = "batch_id" if "batch_id" in t.columns else None
+    return rewrite_table(keep, table, bucket_by="lm", n_buckets=n_buckets, partition_by=part)
 
 
 def incremental_landmark_admit(

@@ -20,15 +20,20 @@ collects to the driver. Hash functions are md5-derived (deterministic,
 engine-portable): h0 = first 8 hex digits of md5 → uint32, then a
 family of universal hashes (a*h0+b) mod p with p = 4294967311 (prime
 > 2^32); products stay < 2^63 so bigint arithmetic is exact.
+
+Persistent indexes (digest, MinHash bands/sigs) are written, migrated
+and compacted through :mod:`easydb_server_spark.tables`, which clears
+an orphaned location on a from-scratch write and rewrites a live
+index through a crash-safe staged copy.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 
 from easydb_server_spark.functions.exactround import ratio_ge, round_ratio
+from easydb_server_spark.tables import keep_one_per_key, recover_staged, rewrite_table, write_table
 
 # universal-hash family parameters (deterministic; shared with oracles)
 MINHASH_P = 4294967311  # prime > 2^32
@@ -501,12 +506,7 @@ def write_digest_index(index_df: DataFrame, table: str, n_buckets: int = 16) -> 
     only the (small) new batch shuffles; the index is read co-located
     and pre-sorted, and the corpus text is never touched again.
     """
-    (
-        index_df.write.bucketBy(n_buckets, "content_hash")
-        .sortBy("content_hash")
-        .mode("overwrite")
-        .saveAsTable(table)
-    )
+    write_table(index_df, table, bucket_by="content_hash", n_buckets=n_buckets)
 
 
 def incremental_dedup(
@@ -834,20 +834,8 @@ def write_minhash_index(
     """Persist the fuzzy index: bands bucketed on band_hash (the probe
     key — batch band rows join co-located buckets, no exchange on the
     index side), signatures bucketed on doc_id (the verify key)."""
-    (
-        bands_df.write.bucketBy(n_buckets, "band_hash")
-        .sortBy("band_hash")
-        .mode("overwrite")
-        .format("parquet")
-        .saveAsTable(f"{table_prefix}_bands")
-    )
-    (
-        sigs_df.write.bucketBy(n_buckets, "doc_id")
-        .sortBy("doc_id")
-        .mode("overwrite")
-        .format("parquet")
-        .saveAsTable(f"{table_prefix}_sigs")
-    )
+    write_table(bands_df, f"{table_prefix}_bands", bucket_by="band_hash", n_buckets=n_buckets)
+    write_table(sigs_df, f"{table_prefix}_sigs", bucket_by="doc_id", n_buckets=n_buckets)
 
 
 def _sigs_as_arrays(index_sigs: DataFrame) -> DataFrame:
@@ -875,81 +863,6 @@ def _sigs_as_arrays(index_sigs: DataFrame) -> DataFrame:
     )
 
 
-def _recover_staged(spark, table: str) -> None:
-    """Finish or roll back an interrupted staged rewrite of ``table``.
-
-    ``_staged_swap_write`` leaves one of three states behind a crash:
-
-    - only ``<table>`` exists — nothing was in flight (or the staged
-      write died before its catalog commit, which Spark only performs
-      after the data lands): nothing to do;
-    - both exist — the staged copy committed but the swap did not
-      start/finish dropping the live table is ambiguous with a rewrite
-      that never began its swap, so the safe move is to DROP the
-      staged copy and let the (idempotent, deterministic) rewrite run
-      again from the intact live table;
-    - only ``<table>__staged`` exists — the live table was dropped,
-      so the staged copy is the one true copy: finish the rename.
-    """
-    staged = f"{table}__staged"
-    if spark.catalog.tableExists(staged):
-        if spark.catalog.tableExists(table):
-            spark.sql(f"DROP TABLE {staged}")
-        else:
-            spark.sql(f"ALTER TABLE {staged} RENAME TO {table}")
-            _repair_partitions_if_any(spark, table)
-
-
-def _repair_partitions_if_any(spark, table: str) -> None:
-    """ALTER TABLE RENAME moves a managed table's directory but does
-    NOT carry catalog partition metadata, so a renamed partitioned
-    table lists zero partitions (measured on Spark 4.1: count()==0
-    until MSCK) — recover them; a no-op error on non-partitioned
-    tables is expected and swallowed."""
-    try:
-        spark.sql(f"MSCK REPAIR TABLE {table}")
-    except AnalysisException:
-        pass
-
-
-def _staged_swap_write(
-    spark,
-    df: DataFrame,
-    table: str,
-    bucket_col: str | None,
-    n_buckets: int = 16,
-    partition_col: str | None = None,
-) -> None:
-    """Crash-safe full rewrite of a managed table: write the new rows
-    to ``<table>__staged`` first, then swap (DROP live + RENAME staged)
-    — at no point is the only committed copy of the data mid-delete.
-
-    Why not ``mode("overwrite").saveAsTable(table)`` directly: Spark's
-    managed-table overwrite DROPS the existing table (data first, then
-    recreate) before the replacement write commits, so a crash or
-    executor loss mid-rewrite loses the persistent index permanently —
-    localCheckpoint blocks die with the app and cannot back it out
-    (round-9 ADVICE). With the staged swap a crash leaves either the
-    intact live table (rewrite reruns) or the fully-committed staged
-    copy (:func:`_recover_staged` finishes the rename); the only
-    non-atomic window is the catalog DROP+RENAME pair, which recovery
-    resolves in the staged copy's favor because it only exists fully
-    written.
-    """
-    staged = f"{table}__staged"
-    spark.sql(f"DROP TABLE IF EXISTS {staged}")
-    writer = df.write
-    if partition_col is not None:
-        writer = writer.partitionBy(partition_col)
-    if bucket_col is not None:
-        writer = writer.bucketBy(n_buckets, bucket_col).sortBy(bucket_col)
-    writer.mode("overwrite").format("parquet").saveAsTable(staged)
-    spark.sql(f"DROP TABLE {table}")
-    spark.sql(f"ALTER TABLE {staged} RENAME TO {table}")
-    if partition_col is not None:
-        _repair_partitions_if_any(spark, table)
-
-
 def migrate_sigs_table_to_arrays(spark, table: str, n_buckets: int = 16) -> bool:
     """One-time in-place rewrite of a LEGACY row-form signature table
     (doc_id, i, minhash[, batch_id]) to the array layout (doc_id, mins
@@ -967,30 +880,24 @@ def migrate_sigs_table_to_arrays(spark, table: str, n_buckets: int = 16) -> bool
     magnitude smaller than corpus text) paid once per table lifetime,
     after which the check is a metadata-only column peek.
 
-    Crash safety: the converted rows land in a STAGED table first and
-    swap into place only once fully committed
-    (:func:`_staged_swap_write` — a plain managed-table overwrite
-    deletes the live data before the replacement commits, so a crash
-    mid-rewrite would lose the index permanently; round-9 ADVICE).
-    A crash at any point leaves either the intact legacy table (the
-    migration reruns) or the committed staged copy
-    (:func:`_recover_staged`, called here first, finishes the rename).
-    Because the staged write targets a DIFFERENT table, the conversion
-    plan may read the live table lazily — no materialization barrier
-    is needed. Session note: the
-    rewrite refreshes THIS session's relation cache only — other live
-    sessions (e.g. the interactive session that started a stream whose
-    foreachBatch clone ran the migration) see the new schema after
-    their own ``spark.catalog.refreshTable(table)``, standard Spark
+    Crash safety: :func:`~easydb_server_spark.tables.rewrite_table`
+    (the converted rows commit to a staged copy before the swap;
+    :func:`~easydb_server_spark.tables.recover_staged`, called here
+    first, finishes an interrupted one). The conversion plan reads the
+    live table lazily. Session note: the rewrite refreshes THIS
+    session's relation cache only — other live sessions (e.g. the
+    interactive session that started a stream whose foreachBatch clone
+    ran the migration) see the new schema after their own
+    ``spark.catalog.refreshTable(table)``, standard Spark
     cross-session behavior.
     """
-    _recover_staged(spark, table)
+    recover_staged(spark, table)
     if not spark.catalog.tableExists(table):
         return False
     t = spark.table(table)
     if "mins" in t.columns:
         return False
-    _staged_swap_write(spark, _sigs_as_arrays(t), table, "doc_id", n_buckets)
+    rewrite_table(_sigs_as_arrays(t), table, bucket_by="doc_id", n_buckets=n_buckets)
     return True
 
 
@@ -1006,51 +913,33 @@ def compact_minhash_index(
     - **sigs**: one row per doc_id, the newest ``batch_id`` winning
       (plain dedupe when the table has no batch column); legacy
       row-form tables are converted to array form on the way.
-    - **bands**: REGENERATED from the kept signatures
+    - **bands**: REGENERATED from the rewritten signature table
       (:func:`bands_from_sig_array` — pure md5 arithmetic, no text
       access), so bands and sigs cannot disagree after compaction and
       superseded docs' band rows vanish with their signatures.
-    - both tables land re-bucketed with ``repartition(n_buckets, key)``
-      before the bucketed write, so each bucket is exactly ONE file —
-      the file-count growth of N appends (≥ N files per bucket)
-      resets, while probe plans stay exchange-free on the index side
-      (bucketed on the same keys; locked by
-      tests/test_index_compaction.py across append/compact cycles).
+    - both tables land with one file per bucket, so the file-count
+      growth of N appends (≥ N files per bucket) resets, while probe
+      plans stay exchange-free on the index side (bucketed on the same
+      keys; locked by tests/test_index_compaction.py across
+      append/compact cycles).
 
-    Returns ``{"sigs_rows": ..., "bands_rows": ...}``. Same
-    crash-safety shape as :func:`migrate_sigs_table_to_arrays`: each
-    table's compacted rows land in a staged table and swap into place
-    only once committed (:func:`_staged_swap_write`), so a crash at
-    any point leaves either the previous table intact (compaction
-    reruns) or the committed staged copy (:func:`_recover_staged`
-    finishes the swap). The kept signatures are still materialized
-    eagerly — they feed three consumers (bands regeneration, both
-    counts) and would otherwise recompute per consumer.
+    Returns ``{"sigs_rows": ..., "bands_rows": ...}``. Each table goes
+    through :func:`~easydb_server_spark.tables.rewrite_table`, sigs
+    first: a crash between the two leaves compacted sigs and the old
+    bands, and the rerun regenerates the bands from the sigs.
     """
-    from pyspark.sql import Window
-
     sigs_t, bands_t = f"{table_prefix}_sigs", f"{table_prefix}_bands"
-    _recover_staged(spark, sigs_t)
-    _recover_staged(spark, bands_t)
+    recover_staged(spark, sigs_t)
+    recover_staged(spark, bands_t)
     sigs = _sigs_as_arrays(spark.table(sigs_t))
-    has_batch = "batch_id" in sigs.columns
-    if has_batch:
-        w = Window.partitionBy("doc_id").orderBy(F.col("batch_id").desc())
-        keep = sigs.withColumn("_r", F.row_number().over(w)).where(F.col("_r") == 1).drop("_r")
-    else:
-        keep = sigs.dropDuplicates(["doc_id"])
-    keep = keep.localCheckpoint(eager=True)
-    bands = bands_from_sig_array(keep.select("doc_id", "mins"))
-    if has_batch:
-        bands = bands.join(keep.select("doc_id", "batch_id"), "doc_id")
-    bands = bands.localCheckpoint(eager=True)
-    _staged_swap_write(
-        spark, keep.repartition(n_buckets, "doc_id"), sigs_t, "doc_id", n_buckets
+    keep = keep_one_per_key(sigs, ["doc_id"], "batch_id", newest=True)
+    sigs_rows = rewrite_table(keep, sigs_t, bucket_by="doc_id", n_buckets=n_buckets)
+    extra = ["batch_id"] if "batch_id" in sigs.columns else []
+    bands = bands_from_sig_array(spark.table(sigs_t), keep=extra).select(
+        "doc_id", "band", "band_hash", *extra
     )
-    _staged_swap_write(
-        spark, bands.repartition(n_buckets, "band_hash"), bands_t, "band_hash", n_buckets
-    )
-    return {"sigs_rows": keep.count(), "bands_rows": bands.count()}
+    bands_rows = rewrite_table(bands, bands_t, bucket_by="band_hash", n_buckets=n_buckets)
+    return {"sigs_rows": sigs_rows, "bands_rows": bands_rows}
 
 
 def compact_digest_index(spark, table: str, n_buckets: int = 16) -> int:
@@ -1062,23 +951,11 @@ def compact_digest_index(spark, table: str, n_buckets: int = 16) -> int:
     digests and file-count growth are the only things compaction
     removes; results are unchanged by construction and probe plans
     stay exchange-free on the index side. Returns the kept row count.
-    Crash-safe via the same staged swap as
-    :func:`compact_minhash_index`.
+    Crash-safe via :func:`~easydb_server_spark.tables.rewrite_table`.
     """
-    from pyspark.sql import Window
-
-    _recover_staged(spark, table)
-    t = spark.table(table)
-    if "batch_id" in t.columns:
-        w = Window.partitionBy("content_hash").orderBy(F.col("batch_id").asc())
-        keep = t.withColumn("_r", F.row_number().over(w)).where(F.col("_r") == 1).drop("_r")
-    else:
-        keep = t.dropDuplicates(["content_hash"])
-    keep = keep.localCheckpoint(eager=True)
-    _staged_swap_write(
-        spark, keep.repartition(n_buckets, "content_hash"), table, "content_hash", n_buckets
-    )
-    return keep.count()
+    recover_staged(spark, table)
+    keep = keep_one_per_key(spark.table(table), ["content_hash"], "batch_id")
+    return rewrite_table(keep, table, bucket_by="content_hash", n_buckets=n_buckets)
 
 
 def incremental_neardup(

@@ -176,7 +176,7 @@ def resize_images(
         for pdf in batches:
             out = []
             for item_id, blob in zip(pdf[id_col], pdf[blob_col]):
-                payload = bytes(blob) or b"\x00"
+                payload = (bytes(blob) if blob is not None else b"") or b"\x00"
                 if real_resize is not None:
                     resized = real_resize(payload, width, height)
                 else:
@@ -210,7 +210,7 @@ def sample_frames(df: DataFrame, blob_col: str, id_col: str, n_frames: int) -> D
         for pdf in batches:
             out = []
             for item_id, blob in zip(pdf[id_col], pdf[blob_col]):
-                payload = bytes(blob) or b"\x00"
+                payload = (bytes(blob) if blob is not None else b"") or b"\x00"
                 if payload[:4] == b"GIF8":
                     # advisor r11: one truncated/corrupt GIF must not
                     # kill the whole mapInPandas stage — fall through

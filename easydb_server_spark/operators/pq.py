@@ -31,6 +31,11 @@ map-side — the corpus is scanned once per query batch and only
 (qid, id, partial-sum) rows shuffle. Top-k lands in a per-qid window
 over k-bounded rows, and the caller composes with IVF pruning when
 the corpus is cell-partitioned.
+
+The persisted store (codes partitioned by bucket plus its codebook) is
+written from scratch and compacted through
+:mod:`easydb_server_spark.tables`; selective compaction's staged
+dirty-bucket table is replayed here (:func:`_recover_pq_compact`).
 """
 
 from __future__ import annotations
@@ -39,6 +44,13 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from easydb_server_spark.operators.similarity import _as_double, _dot
 from easydb_server_spark.operators._localframe import local_frame
+from easydb_server_spark.tables import (
+    drop_table,
+    keep_one_per_key,
+    recover_staged,
+    table_location,
+    write_table,
+)
 
 # Plan-size bound for the literal-codebook forms (the kmeans.py
 # LITERAL_ARGMIN_MAX_KD rationale applied to PQ): k codes x d dims of
@@ -891,22 +903,6 @@ def ivfpq_rerank(
 _PQ_STORE_BUCKETS = 16
 
 
-def _drop_table_and_location(spark, name: str) -> None:
-    """DROP TABLE IF EXISTS + remove the warehouse directory. A fresh
-    session's in-memory catalog does not know tables a PREVIOUS
-    session wrote, but the warehouse directory persists — overwrite
-    saveAsTable then fails with LOCATION_ALREADY_EXISTS. The driver
-    runs every conformance entry in its own vanilla session, so store
-    writes must clear both the catalog entry and the orphaned path."""
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    jvm = spark.sparkContext._jvm
-    warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    path = jvm.org.apache.hadoop.fs.Path(f"{warehouse}/{name.lower()}")
-    fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    if fs.exists(path):
-        fs.delete(path, True)
-
-
 def write_pq_store(
     corpus: DataFrame,
     vec_col: str,
@@ -930,46 +926,49 @@ def write_pq_store(
     two partitions and selective compaction's per-bucket newest-wins
     would silently keep both. Size it so bucket_size stays bounded at
     the target corpus (the SCALE.md pq-store sweep sizing rule)."""
-    spark = corpus.sparkSession
     nb = int(n_buckets) if n_buckets else _PQ_STORE_BUCKETS
-    _drop_table_and_location(spark, table)
-    _drop_table_and_location(spark, f"{table}_codebook")
+    _write_store(corpus, vec_col, id_col, table, m, k, n_iters, nb, ver=0)
+
+
+def _write_store(
+    corpus: DataFrame,
+    vec_col: str,
+    id_col: str,
+    table: str,
+    m: int,
+    k: int,
+    n_iters: int,
+    nb: int,
+    ver: int,
+) -> None:
+    """Train, encode and write both store tables from scratch under
+    codebook version ``ver`` with ``nb`` buckets."""
     width = _dim_width(corpus, vec_col, m)
     cb = pq_train(corpus, vec_col, id_col, m=m, k=k, n_iters=n_iters)
     enc = pq_encode(corpus, vec_col, id_col, cb, m=m)
-    (
-        enc.select(
-            F.pmod(F.hash(F.col(id_col)), F.lit(nb)).alias("bucket"),
-            F.col(id_col).alias("cid"),
-            "codes",
-            F.lit(0).cast("bigint").alias("seq"),
-            F.lit(0).cast("bigint").alias("cb_ver"),
-        )
-        # r16: the literal encode is a pure projection, so the write no
-        # longer inherits a shuffle AQE could coalesce — cluster by
-        # bucket explicitly or every input partition writes a file into
-        # every bucket (guide-§6 small-files hazard; pytest-locked by
-        # test_compaction_rewrites_only_dirty_buckets)
-        .repartition("bucket")
-        .write.partitionBy("bucket")
-        .mode("overwrite")
-        .format("parquet")
-        .saveAsTable(table)
+    codes = enc.select(
+        F.pmod(F.hash(F.col(id_col)), F.lit(nb)).alias("bucket"),
+        F.col(id_col).alias("cid"),
+        "codes",
+        F.lit(0).cast("bigint").alias("seq"),
+        F.lit(ver).cast("bigint").alias("cb_ver"),
     )
-    (
-        cb.select(
-            "sub",
-            "code",
-            "centroid",
-            F.lit(0).cast("bigint").alias("cb_ver"),
-            F.lit(m).cast("int").alias("m"),
-            F.lit(width).cast("int").alias("width"),
-            F.lit(nb).cast("int").alias("n_buckets"),
-        )
-        .write.mode("overwrite")
-        .format("parquet")
-        .saveAsTable(f"{table}_codebook")
+    # r16: the literal encode is a pure projection, so the write no
+    # longer inherits a shuffle AQE could coalesce — cluster by bucket
+    # explicitly or every input partition writes a file into every
+    # bucket (guide-§6 small-files hazard; pytest-locked by
+    # test_compaction_rewrites_only_dirty_buckets)
+    write_table(codes.repartition("bucket"), table, partition_by="bucket")
+    meta = cb.select(
+        "sub",
+        "code",
+        "centroid",
+        F.lit(ver).cast("bigint").alias("cb_ver"),
+        F.lit(m).cast("int").alias("m"),
+        F.lit(width).cast("int").alias("width"),
+        F.lit(nb).cast("int").alias("n_buckets"),
     )
+    write_table(meta, f"{table}_codebook")
 
 
 def _store_codebook(spark, table: str):
@@ -1054,10 +1053,7 @@ def _bucket_file_counts(spark, table: str) -> dict[int, int]:
     """Data-file count per ``bucket=N`` partition directory of a
     managed table — the append-growth signal selective compaction
     resets. FS listing only; no data read."""
-    jvm = spark.sparkContext._jvm
-    warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    root = jvm.org.apache.hadoop.fs.Path(f"{warehouse}/{table.lower()}")
-    fs = root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    fs, root = table_location(spark, table)
     out: dict[int, int] = {}
     if not fs.exists(root):
         return out
@@ -1095,7 +1091,7 @@ def _recover_pq_compact(spark, table: str) -> None:
             )
         finally:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    spark.sql(f"DROP TABLE {staged}")
+    drop_table(spark, staged)
 
 
 def compact_pq_store(spark, table: str, files_per_bucket_cap: int = 8) -> int:
@@ -1116,9 +1112,7 @@ def compact_pq_store(spark, table: str, files_per_bucket_cap: int = 8) -> int:
     entry point replays it via :func:`_recover_pq_compact` (the
     overwrite is idempotent per partition). Returns the total
     surviving row count of the store."""
-    from easydb_server_spark.operators.dedup import _recover_staged
-
-    _recover_staged(spark, table)  # legacy full-swap crashes
+    recover_staged(spark, table)  # legacy full-swap crashes
     _recover_pq_compact(spark, table)
     t = spark.table(table)
     dup_buckets = {
@@ -1136,19 +1130,10 @@ def compact_pq_store(spark, table: str, files_per_bucket_cap: int = 8) -> int:
     dirty = sorted(dup_buckets | grown)
     if not dirty:
         return t.count()
-    w = Window.partitionBy("cid").orderBy(F.col("seq").desc())
-    keep = (
-        t.where(F.col("bucket").isin(dirty))
-        .withColumn("_r", F.row_number().over(w))
-        .where(F.col("_r") == 1)
-        .drop("_r")
-        .select(*t.columns)
-    )
-    staged = f"{table}__compact_staged"
-    spark.sql(f"DROP TABLE IF EXISTS {staged}")
-    keep.repartition("bucket").write.partitionBy("bucket").mode("overwrite").format(
-        "parquet"
-    ).saveAsTable(staged)
+    keep = keep_one_per_key(
+        t.where(F.col("bucket").isin(dirty)), ["cid"], "seq", newest=True
+    ).select(*t.columns)
+    write_table(keep.repartition("bucket"), f"{table}__compact_staged", partition_by="bucket")
     _recover_pq_compact(spark, table)  # performs the overwrite + drops staged
     return spark.table(table).count()
 
@@ -1197,46 +1182,14 @@ def rebuild_pq_store(
     for corpus drift): new codebook under cb_ver = old + 1, full
     overwrite of both tables. The store's persisted bucket count is
     carried over (the full rewrite is the one safe point to change it,
-    but resharding is a separate decision from retraining)."""
+    but resharding is a separate decision from retraining). A missing
+    store is written as :func:`write_pq_store` would."""
     if spark.catalog.tableExists(f"{table}_codebook"):
         _cb, old_ver, _m, _w = _store_codebook(spark, table)
         nb = _store_n_buckets(spark, table)
     else:
         old_ver, nb = -1, _PQ_STORE_BUCKETS
-    _drop_table_and_location(spark, table)
-    _drop_table_and_location(spark, f"{table}_codebook")
-    width = _dim_width(corpus, vec_col, m)
-    cb = pq_train(corpus, vec_col, id_col, m=m, k=k, n_iters=n_iters)
-    enc = pq_encode(corpus, vec_col, id_col, cb, m=m)
-    ver = old_ver + 1
-    (
-        enc.select(
-            F.pmod(F.hash(F.col(id_col)), F.lit(nb)).alias("bucket"),
-            F.col(id_col).alias("cid"),
-            "codes",
-            F.lit(0).cast("bigint").alias("seq"),
-            F.lit(ver).cast("bigint").alias("cb_ver"),
-        )
-        .repartition("bucket")
-        .write.partitionBy("bucket")
-        .mode("overwrite")
-        .format("parquet")
-        .saveAsTable(table)
-    )
-    (
-        cb.select(
-            "sub",
-            "code",
-            "centroid",
-            F.lit(ver).cast("bigint").alias("cb_ver"),
-            F.lit(m).cast("int").alias("m"),
-            F.lit(width).cast("int").alias("width"),
-            F.lit(nb).cast("int").alias("n_buckets"),
-        )
-        .write.mode("overwrite")
-        .format("parquet")
-        .saveAsTable(f"{table}_codebook")
-    )
+    _write_store(corpus, vec_col, id_col, table, m, k, n_iters, nb, ver=old_ver + 1)
 
 
 def ivfpq_recall(

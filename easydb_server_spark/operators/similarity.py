@@ -10,6 +10,9 @@
 Scale design: the corpus side never collects; buckets distribute by
 hash key. Hyperplanes are deterministic (seeded), so results are
 reproducible and the SQL oracle can inline the same planes.
+
+The persisted IVF store (cell-partitioned vectors plus centroids) is
+written, compacted and rebuilt through :mod:`easydb_server_spark.tables`.
 """
 
 from __future__ import annotations
@@ -21,6 +24,7 @@ from pyspark.sql import DataFrame
 
 from easydb_server_spark.functions.exactround import round_div
 from easydb_server_spark.operators._localframe import local_frame
+from easydb_server_spark.tables import keep_one_per_key, recover_staged, rewrite_table, write_table
 
 LSH_PLANES = 8  # sign bits per vector → 256 buckets
 LSH_SEED = 42
@@ -878,14 +882,12 @@ def write_ivf_store(
     cents = ivf_centroids(corpus, vec_col, id_col, n_cells, n_iters)
     c = corpus.select(F.col(id_col).alias("cid"), _as_double(F.col(vec_col)).alias("cvec"))
     assigned = _assign_cells(c, cents)
-    (
-        assigned.select("cell", "cid", "cvec", F.lit(0).cast("bigint").alias("seq"))
-        .write.partitionBy("cell")
-        .mode("overwrite")
-        .format("parquet")
-        .saveAsTable(table)
+    write_table(
+        assigned.select("cell", "cid", "cvec", F.lit(0).cast("bigint").alias("seq")),
+        table,
+        partition_by="cell",
     )
-    cents.write.mode("overwrite").format("parquet").saveAsTable(f"{table}_centroids")
+    write_table(cents, f"{table}_centroids")
 
 
 def append_to_ivf_store(
@@ -964,35 +966,19 @@ def compact_ivf_store(spark, table: str) -> int:
 
     Serving results are unchanged by construction for stores without
     superseded ids (compaction only merges files), and move to the
-    newest copy for stores with them. Crash-safe via the same staged
-    swap as the dedup index compactions
-    (:func:`...operators.dedup._staged_swap_write`): the compacted
-    rows land in ``<table>__staged`` and swap in only once committed,
-    so a crash at any point leaves a fully-consistent store. Partition
-    pruning survives because the staged table is partitioned by the
-    same ``cell`` column (locked across append/compact cycles by
-    tests/test_ivf_lifecycle.py).
+    newest copy for stores with them. Crash-safe via
+    :func:`~easydb_server_spark.tables.rewrite_table`; partition
+    pruning survives because the rewrite keeps the ``cell``
+    partitioning (locked across append/compact cycles by
+    tests/test_ivf_lifecycle.py). A legacy store without ``seq`` gains
+    the column (0) on the way.
     """
-    from pyspark.sql import Window
-
-    from easydb_server_spark.operators.dedup import _recover_staged, _staged_swap_write
-
-    _recover_staged(spark, table)
+    recover_staged(spark, table)
     t = spark.table(table)
-    if "seq" in t.columns:
-        w = Window.partitionBy("cid").orderBy(F.col("seq").desc())
-        keep = t.withColumn("_r", F.row_number().over(w)).where(F.col("_r") == 1).drop("_r")
-    else:
-        keep = t.withColumn("seq", F.lit(0).cast("bigint")).dropDuplicates(["cid"])
-    keep = keep.select("cell", "cid", "cvec", "seq").localCheckpoint(eager=True)
-    _staged_swap_write(
-        spark,
-        keep.repartition("cell"),
-        table,
-        bucket_col=None,
-        partition_col="cell",
-    )
-    return keep.count()
+    if "seq" not in t.columns:
+        t = t.withColumn("seq", F.lit(0).cast("bigint"))
+    keep = keep_one_per_key(t, ["cid"], "seq", newest=True).select("cell", "cid", "cvec", "seq")
+    return rewrite_table(keep, table, partition_by="cell")
 
 
 def ivf_store_stats(spark, table: str, skew_threshold: float = 4.0) -> dict:
@@ -1054,27 +1040,19 @@ def rebuild_ivf_store(
     never from the centroids table, so the rerun converges to a
     consistent pair.
     """
-    from pyspark.sql import Window
-
-    from easydb_server_spark.operators.dedup import _recover_staged, _staged_swap_write
-
-    _recover_staged(spark, table)
-    _recover_staged(spark, f"{table}_centroids")
-    t = spark.table(table)
-    if "seq" in t.columns:
-        w = Window.partitionBy("cid").orderBy(F.col("seq").desc())
-        vecs = t.withColumn("_r", F.row_number().over(w)).where(F.col("_r") == 1).drop("_r")
-    else:
-        vecs = t.dropDuplicates(["cid"])
+    recover_staged(spark, table)
+    recover_staged(spark, f"{table}_centroids")
+    vecs = keep_one_per_key(spark.table(table), ["cid"], "seq", newest=True)
+    # localCheckpoint: vecs feeds the k-means seed, every Lloyd pass and
+    # the assignment; materialized once, the newest-per-id window runs
+    # once instead of once per pass over the store
     vecs = vecs.select("cid", "cvec").localCheckpoint(eager=True)
     cents = ivf_centroids(vecs, "cvec", "cid", n_cells, n_iters)
     assigned = _assign_cells(vecs, cents).select(
         "cell", "cid", "cvec", F.lit(0).cast("bigint").alias("seq")
     )
-    _staged_swap_write(
-        spark, assigned.repartition("cell"), table, bucket_col=None, partition_col="cell"
-    )
-    _staged_swap_write(spark, cents, f"{table}_centroids", bucket_col=None)
+    rewrite_table(assigned, table, partition_by="cell")
+    rewrite_table(cents, f"{table}_centroids")
 
 
 def topk_cosine_ivf_store(

@@ -19,17 +19,20 @@ Training-unit prep: :func:`chunk_documents`, :func:`pack_sequences`,
 All pure JVM column expressions (no UDFs) — whole-stage codegen over
 the documents scan, trivially parallel at 100 TB; the only shuffles
 are keyed aggregates/windows documented per function.
+
+Model tables (:func:`write_nb_quality`, :func:`write_unigram_lm`) are
+written through :func:`easydb_server_spark.tables.write_table`, which
+also clears a location an earlier session left behind.
 """
 
 from __future__ import annotations
-
-import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from easydb_server_spark.functions.exactround import round_ratio, scaled_round_half
 from easydb_server_spark.operators._localframe import local_frame
+from easydb_server_spark.tables import write_table
 
 # tiny deterministic stopword profiles per language (shared with oracles)
 LANG_PROFILES: dict[str, list[str]] = {
@@ -1406,20 +1409,6 @@ def write_nb_quality(
             .agg(F.count("*").alias(name))
         )
 
-    # a managed-table LOCATION can survive a dead catalog (fresh
-    # session over a reused warehouse dir): DROP alone then fails with
-    # LOCATION_ALREADY_EXISTS, so also clear the stale directory
-    sess = pos_df.sparkSession
-    for t in (table, f"{table}_meta"):
-        sess.sql(f"DROP TABLE IF EXISTS {t}")
-        wh = sess.conf.get("spark.sql.warehouse.dir", "")
-        if wh.startswith("file:"):
-            import shutil
-            from urllib.parse import urlparse
-
-            loc = os.path.join(urlparse(wh).path, t.lower())
-            shutil.rmtree(loc, ignore_errors=True)
-
     cp, cn = _counts(pos_df, "c_pos"), _counts(neg_df, "c_neg")
     merged = cp.join(cn, "term", "full").select(
         "term",
@@ -1435,8 +1424,8 @@ def write_nb_quality(
         F.sum("c_neg").cast("long").alias("n_neg"),
         F.count("*").alias("v"),
     )
-    vocab.write.mode("overwrite").format("parquet").saveAsTable(table)
-    meta.write.mode("overwrite").format("parquet").saveAsTable(f"{table}_meta")
+    write_table(vocab, table)
+    write_table(meta, f"{table}_meta")
 
 
 def score_nb_quality(
@@ -2017,8 +2006,8 @@ def write_unigram_lm(
     meta = counts.agg(F.sum("c").cast("long").alias("n_words_corpus")).crossJoin(
         vocab.agg(F.count("*").alias("v"))
     )
-    vocab.write.mode("overwrite").format("parquet").saveAsTable(table)
-    meta.write.mode("overwrite").format("parquet").saveAsTable(f"{table}_meta")
+    write_table(vocab, table)
+    write_table(meta, f"{table}_meta")
 
 
 def score_unigram_lm(

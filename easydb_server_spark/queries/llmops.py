@@ -7651,13 +7651,12 @@ def q_stream_landmark_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     table = "lm_ingest_conf"
-    # DROP TABLE alone leaves the warehouse directory behind when a
-    # PREVIOUS session wrote the table (fresh catalogs don't know it);
-    # the streaming append's saveAsTable then dies with
-    # LOCATION_ALREADY_EXISTS. Clear both, like every other store op.
-    from easydb_server_spark.operators.pq import _drop_table_and_location
+    # the stream creates the index on its first append, which fails
+    # with LOCATION_ALREADY_EXISTS over a directory a previous session
+    # left behind; drop_table clears the catalog entry and the directory
+    from easydb_server_spark.tables import drop_table
 
-    _drop_table_and_location(spark, table)
+    drop_table(spark, table)
     work = tempfile.mkdtemp(prefix="lm_ingest_conf_")
     in_dir = os.path.join(work, "in")
     os.makedirs(in_dir)

@@ -37,6 +37,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import BinaryType, LongType, StringType, StructField, StructType
 from easydb_server_spark.operators._localframe import local_frame
+from easydb_server_spark.tables import write_table
 
 DOC_SCHEMA = StructType(
     [
@@ -55,7 +56,6 @@ def stream_incremental_dedup(
     admitted_path: str,
     checkpoint_dir: str,
     n_buckets: int = 16,
-    available_now: bool = True,
 ):
     """Start the continuous-ingest dedup query; returns the handle.
 
@@ -99,14 +99,13 @@ def stream_incremental_dedup(
             .saveAsTable(index_table)
         )
 
-    writer = (
+    return (
         docs_stream.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
         .queryName(f"ingest_dedup_{index_table}")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_ingest_pipeline(
@@ -470,14 +469,12 @@ def write_benchmark_digests(
     ``text.decontaminate`` bench side."""
     from easydb_server_spark.operators.dedup import _shingle_hash60, word_shingles
 
-    (
+    digests = (
         word_shingles(benchmark, text_col, id_col)
         .select(_shingle_hash60(F.col("shingle")).alias("h"))
         .distinct()
-        .write.mode("overwrite")
-        .format("parquet")
-        .saveAsTable(table)
     )
+    write_table(digests, table)
 
 
 def stream_export_shards(
@@ -488,7 +485,6 @@ def stream_export_shards(
     checkpoint_dir: str,
     n_shards: int = 8,
     seed: str = "v1",
-    available_now: bool = True,
 ):
     """Continuous training-shard export: each micro-batch's documents
     append under ``shard=S/batch_id=N`` plus a per-(batch, shard)
@@ -550,14 +546,13 @@ def stream_export_shards(
             .parquet(f"{out_dir}/_manifest")
         )
 
-    writer = (
+    return (
         docs_stream.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
         .queryName("export_shards")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_crawl_ingest(
@@ -761,7 +756,6 @@ def stream_landmark_ingest(
     min_votes: int = 3,
     max_bucket: int | None = 48,
     n_buckets: int = 16,
-    available_now: bool = True,
 ):
     """Continuous NEAR-dup audio ingest — the streaming form of
     :func:`easydb_server_spark.operators.audiofp.incremental_landmark_admit`,
@@ -847,11 +841,10 @@ def stream_landmark_ingest(
             .saveAsTable(index_table)
         )
 
-    writer = (
+    return (
         blobs_stream.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
         .queryName(f"ingest_landmarks_{index_table}")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

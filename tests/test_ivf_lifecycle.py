@@ -187,11 +187,11 @@ class TestIvfLifecycle:
         """A leftover __staged table from a crashed compaction must be
         resolved, not crash the next run: staged+live → staged dropped
         (live intact, rewrite reruns); staged-only → rename finishes."""
-        from easydb_server_spark.operators.dedup import _recover_staged
         from easydb_server_spark.operators.similarity import (
             compact_ivf_store,
             write_ivf_store,
         )
+        from easydb_server_spark.tables import recover_staged
 
         base = spark.createDataFrame(
             [(i, [float(i), 1.0]) for i in range(12)], "vec_id long, v array<double>"
@@ -209,7 +209,7 @@ class TestIvfLifecycle:
             f"{store}__staged"
         )
         spark.sql(f"DROP TABLE {store}")
-        _recover_staged(spark, store)
+        recover_staged(spark, store)
         assert spark.catalog.tableExists(store)
         assert spark.table(store).count() == 12
 

@@ -612,6 +612,19 @@ class TestMultimodal:
         idxs = sorted(r.frame_idx for r in out if r.item_id == out[0].item_id)
         assert idxs == [0, 1, 2, 3, 4]
 
+    def test_null_blob_is_the_empty_payload(self, spark):
+        # a NULL blob used to raise TypeError in bytes(None) and kill
+        # the stage; binary_features already reads it as b""
+        from easydb_server_spark.operators.multimodal import resize_images, sample_frames
+
+        df = spark.createDataFrame(
+            [(1, bytearray(b"abcd")), (2, None)], "item_id long, payload binary"
+        )
+        resized = {r.item_id: bytes(r.payload) for r in resize_images(df, "payload", "item_id", 2, 2).collect()}
+        assert resized == {1: b"abcd", 2: b"\x00" * 4}
+        frames = sample_frames(df, "payload", "item_id", 2).collect()
+        assert sorted((r.item_id, r.frame_idx) for r in frames) == [(1, 0), (1, 1), (2, 0), (2, 1)]
+
     def test_unknown_kind_raises(self, spark):
         from easydb_server_spark.operators.multimodal import binary_features
 

@@ -297,11 +297,12 @@ def test_rebuild_creates_missing_store(spark):
     store at cb_ver 0 with the default bucket count (no codebook to
     carry over) and serves from it."""
     from easydb_server_spark.operators import pq as PQ
+    from easydb_server_spark.tables import drop_table
 
     e = _vecs(spark, n=40, dim=DIM, seed=5)
     tbl = "pq_store_rebuild_new_t"
-    PQ._drop_table_and_location(spark, tbl)
-    PQ._drop_table_and_location(spark, f"{tbl}_codebook")
+    drop_table(spark, tbl)
+    drop_table(spark, f"{tbl}_codebook")
     assert not spark.catalog.tableExists(f"{tbl}_codebook")
 
     PQ.rebuild_pq_store(spark, e, "embedding", "vec_id", tbl, m=4, k=8)

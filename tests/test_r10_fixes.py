@@ -162,7 +162,7 @@ class TestRepetitionImplEquivalence:
         import duckdb
         import pandas as pd
 
-        from easydb_server_spark.compare import canon_frame
+        from easydb_server_spark.compare import canon_frame, fetch_oracle
         from easydb_server_spark.operators.text import gopher_repetition_rules
         from easydb_server_spark.queries.llmops import _oracle_gopher_repetition
 
@@ -179,9 +179,7 @@ class TestRepetitionImplEquivalence:
         got = gopher_repetition_rules(df, "text", "doc_id").orderBy("doc_id").toPandas()
         con = duckdb.connect()
         con.register("docs", pd.DataFrame(rows, columns=["doc_id", "text"]))
-        # through Arrow, a null BOOLEAN stays None as in Spark's toPandas
-        # (DuckDB's .df() makes it NaN)
-        want = con.execute(_oracle_gopher_repetition("text", "docs")).fetch_arrow_table().to_pandas()
+        want = fetch_oracle(con, _oracle_gopher_repetition("text", "docs"))
         assert canon_frame(got) == canon_frame(want)
         # null text: null line/paragraph stats, zero gram coverage over
         # n_chars = 1, and an unknown pass flag

@@ -77,18 +77,11 @@ def main() -> int:
     o = spark.read.parquet(f"{sf_dir}/orders.parquet")
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
 
-    # the in-memory catalog forgets tables across sessions but their
-    # warehouse directories survive — clear both
-    import shutil
+    from easydb_server_spark.tables import write_table
 
-    spark.sql("DROP TABLE IF EXISTS b_orders")
-    spark.sql("DROP TABLE IF EXISTS b_lineitem")
-    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse").removeprefix("file:")
-    for t in ("b_orders", "b_lineitem"):
-        shutil.rmtree(f"{wh}/{t}", ignore_errors=True)
     t0 = time.time()
-    o.write.bucketBy(n_buckets, "o_orderkey").sortBy("o_orderkey").mode("overwrite").saveAsTable("b_orders")
-    li.write.bucketBy(n_buckets, "l_orderkey").sortBy("l_orderkey").mode("overwrite").saveAsTable("b_lineitem")
+    write_table(o, "b_orders", bucket_by="o_orderkey", n_buckets=n_buckets)
+    write_table(li, "b_lineitem", bucket_by="l_orderkey", n_buckets=n_buckets)
     ingest_wall = time.time() - t0
 
     # the at-scale shape: two fact tables, broadcast impossible

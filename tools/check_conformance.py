@@ -24,7 +24,7 @@ _REPO = str(Path(__file__).resolve().parent.parent)
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
-from easydb_server_spark.compare import canon_frame  # noqa: E402
+from easydb_server_spark.compare import canon_frame, fetch_oracle  # noqa: E402
 from easydb_server_spark.queries._util import TABLES  # noqa: E402
 
 
@@ -71,7 +71,7 @@ def main() -> int:
             n_rows_only += 1
             continue
         try:
-            odf = con.execute(oracles[name]).df()
+            odf = fetch_oracle(con, oracles[name])
         except Exception as e:
             print(f"FAIL  {name}: ORACLE ERROR {str(e)[:300]}")
             n_fail += 1
